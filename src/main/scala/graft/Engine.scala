@@ -41,53 +41,16 @@ object Engine {
     Tables.events(spark, dir).createOrReplaceTempView("events")
   }
 
-  /** Register the engine's native expressions for SQL callers. Every
-    * builder validates argument count first ([[functions.Arity]]):
-    * positional indexing on a short argument list would otherwise die
-    * with an opaque IndexOutOfBoundsException inside analysis. */
+  /** Register the engine's native expressions for SQL callers: the same
+    * table [[GraftExtensions]] injects. Every builder validates argument
+    * count first ([[functions.Arity]]): positional indexing on a short
+    * argument list would otherwise die with an opaque
+    * IndexOutOfBoundsException inside analysis. */
   def registerFunctions(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    def reg(name: String, usage: String, n: Int)(
-        build: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.expressions.Expression): Unit =
-      registry.createOrReplaceTempFunction(name,
-        es => build(functions.Arity.check(name, usage, n, es)), "scala_udf")
-    reg("shingle_hashes", "shingle_hashes(text)", 1)(
-      es => functions.ShingleHashes(es.head, 3, 4294967291L))
-    reg("minhash_sig", "minhash_sig(shingles)", 1)(
-      es => functions.MinHashSig(es.head,
-        operators.Dedup.permAB.map(_._1).toArray,
-        operators.Dedup.permAB.map(_._2).toArray, 4294967291L))
-    reg("minhash_band_keys", "minhash_band_keys(sig)", 1)(
-      es => functions.BandKeys(es.head, 16))
-    reg("simhash64", "simhash64(text)", 1)(
-      es => functions.SimHash64(es.head))
-    reg("dot_product", "dot_product(a, b)", 2)(
-      es => functions.DotProduct(es(0), es(1)))
-    reg("l2_norm", "l2_norm(a)", 1)(
-      es => functions.L2Norm(es.head))
-    reg("exact_qsum", "exact_qsum(x)", 1)(
-      es => functions.ExactQuantizedSum(es.head).toAggregateExpression())
-    // token_set_count(text, 'w1,w2,...') — the comma-joined word list
-    // must be a literal (it compiles into the expression); non-literal
-    // args fail analysis with a clear message
-    reg("token_set_count", "token_set_count(text, 'w1,w2,...')", 2)(
-      es => functions.TokenSetCount(es.head,
-        functions.TokenSetCount.parseWordList(es(1))))
-    reg("char_shingle_hashes", "char_shingle_hashes(text)", 1)(
-      es => functions.CharShingleHashes(es.head, 5, 4294967291L))
-    reg("mod_filter", "mod_filter(arr, m, r)", 3)(
-      es => functions.ModFilter(es(0),
-        functions.ModFilter.literalLong(es(1), "m"),
-        functions.ModFilter.literalLong(es(2), "r")))
-    // per-group top-k for SQL callers — topk(score, tag, k) with a
-    // literal k, null-skipping, O(k) state (native TypedImperative
-    // form; the typed-Aggregator tier remains TopKAggregator via q43)
-    reg("topk", "topk(score, tag, k)", 3)(
-      es => functions.TopKTags.forSql(es(0), es(1), es(2)))
-    // Morton / Z-curve bit interleave of two pre-bucketed dimensions
-    // (composed from builtin bit ops — codegen-friendly)
-    reg("morton_interleave", "morton_interleave(bx, by)", 2)(es => operators.Layout.interleaveExpr(es(0), es(1)))
+    GraftExtensions.table.foreach { case (id, info, builder) =>
+      registry.registerFunction(id, info, builder)
+    }
   }
 
   /** Run SQL against an attached session. */

@@ -31,21 +31,35 @@ object Main {
     val config = IngestionConfig.fromArgs(args.drop(3).filterNot(_ == "--once").toSeq)
 
     // stage 2: session
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .appName("graft-ingest")
       // spark-submit injects the real cluster master; default to local
       // for direct JVM launches (tests, sbt runMain)
-      .master(sys.props.getOrElse("spark.master",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .master(sys.props.getOrElse("spark.master", s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // fork-free offset/commit log writes on file: checkpoints (other
+    // schemes keep Spark's default); a manager the session names wins.
+    // Unset again on exit, so a caller sharing the session keeps its own
+    val setManager = spark.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty
+    if (setManager)
+      spark.conf.set(LocalCheckpointFileManager.ConfKey,
+        classOf[LocalCheckpointFileManager].getName)
 
+    try run(spark, sourceDir, sinkDir, checkpointDir, once, config)
+    finally if (setManager) spark.conf.unset(LocalCheckpointFileManager.ConfKey)
+  }
+
+  private def run(spark: SparkSession, sourceDir: String, sinkDir: String,
+                  checkpointDir: String, once: Boolean,
+                  config: IngestionConfig): Unit = {
     // stage 3: logical plan — B1/B2/B3 source, A2 identity projection
     import spark.implicits._
     val records = spark.readStream

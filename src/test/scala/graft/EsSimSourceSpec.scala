@@ -450,6 +450,66 @@ class EsSimSourceSpec extends SparkSpec {
     assert(gone > 0, "expected .gone tombstones from the per-batch compaction")
   }
 
+  test("Main --once resumes a checkpoint across checkpoint file managers, exactly once") {
+    import spark.implicits._
+    import graft.ingest.EsSimStore
+    val key = LocalCheckpointFileManager.ConfKey
+    val sparkDefault = classOf[CountingFileContextManager].getName // counted
+    val local = classOf[LocalCheckpointFileManager].getName
+    val prev = spark.conf.getOption(key)
+    def commits(ckpt: String): Seq[Long] = {
+      val l = Files.list(java.nio.file.Paths.get(ckpt, "commits"))
+      try l.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.forall(_.isDigit)).map(_.toLong).toSeq.sorted
+      finally l.close()
+    }
+    // the manager the session names when each query starts
+    val named = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = named.add(spark.conf.getOption(key))
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    // Main installs its manager only when the session names none, and
+    // leaves the session's key as it found it
+    def run(manager: String, src: String, sink: String, ckpt: String): Unit = {
+      val userSet = manager != local
+      if (userSet) spark.conf.set(key, manager) else spark.conf.unset(key)
+      val built = CountingFileContextManager.built.get
+      named.clear()
+      graft.Main.main(Array(src, sink, ckpt, "--once", "source.batch-size=10"))
+      assert(named.asScala.toSeq === Seq(Some(manager)), s"the run meant for $manager")
+      assert(spark.conf.getOption(key) === (if (userSet) Some(manager) else None))
+      assert((CountingFileContextManager.built.get > built) === userSet,
+        s"the run meant for $manager used another manager")
+    }
+    spark.streams.addListener(listener)
+    try {
+      for ((first, second) <- Seq(sparkDefault -> local, local -> sparkDefault)) {
+        val src = Files.createTempDirectory("resume-src").toString
+        val sink = Files.createTempDirectory("resume-sink").toString
+        val ckpt = Files.createTempDirectory("resume-ckpt").toString
+        writeDocs(src, 0 until 30)
+        run(first, src, sink, ckpt)
+        val before = commits(ckpt)
+        assert(before.nonEmpty && before === before.indices.map(_.toLong))
+        writeDocs(src, 30 until 50)
+        run(second, src, sink, ckpt)
+        val after = commits(ckpt)
+        assert(after.size > before.size && after === after.indices.map(_.toLong),
+          s"batch ids must continue from ${before.last}: $after ($first -> $second)")
+        // every doc copied once: no old doc re-sent, none missing
+        assert(EsSimStore.actions(spark, sink).count() === 50, s"$first -> $second")
+        val docs = EsSimStore.read(spark, sink).select($"docId").as[String].collect()
+        assert(docs.sorted.toSeq === (0 until 50).map(_.toString).sorted, s"$first -> $second")
+      }
+    } finally {
+      spark.streams.removeListener(listener)
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
   test("Trigger.AvailableNow drains the start snapshot and stops") {
     val dir = Files.createTempDirectory("essrc").toString
     val out = Files.createTempDirectory("esout").toString
@@ -646,4 +706,15 @@ class EsSimSourceSpec extends SparkSpec {
     val live = graft.sources.EsSimStats.list(dir).size
     assert(live <= 5, s"compaction failed to bound file count: $live live files")
   }
+}
+
+/** Spark's default `file:` checkpoint manager, counting its instances so a
+  * spec can tell which manager a query ran with. */
+class CountingFileContextManager(path: org.apache.hadoop.fs.Path, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager(path, conf) {
+  CountingFileContextManager.built.incrementAndGet()
+}
+
+object CountingFileContextManager {
+  val built = new java.util.concurrent.atomic.AtomicLong()
 }

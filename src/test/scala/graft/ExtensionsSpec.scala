@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Config-only integration: a session built with
@@ -8,46 +9,67 @@ import org.scalatest.funsuite.AnyFunSuite
   * surface without any code-level registration. */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("extensions-configured session exposes native functions in SQL") {
-    // getOrCreate would return another suite's session (without the
-    // extensions), so clear the defaults to force a fresh SparkSession;
-    // it still shares the JVM's SparkContext, so we must NOT stop() it —
-    // just restore the previous default/active afterwards.
+  /** A session built with the extensions configured. getOrCreate would
+    * return another suite's session (without the extensions), so the
+    * caller clears the defaults (see [[withDefaultsRestored]]) to force a
+    * fresh SparkSession; it still shares the JVM's SparkContext, so it
+    * must NOT be stop()ped. */
+  private def extensionSession(): SparkSession = {
+    // spark.sql.extensions is a STATIC conf: Spark resolves it from
+    // the SparkContext's conf at session construction, so on a JVM
+    // whose context was created by another suite (without the key)
+    // the builder option alone never injects. Production sets it in
+    // spark-submit conf before the context exists; the test-harness
+    // equivalent is pinning it onto the (possibly shared) context.
+    val scConf = new org.apache.spark.SparkConf()
+      .setMaster("local[2]").setAppName("graft-ext-test")
+      .set("spark.sql.extensions", "graft.GraftExtensions")
+      .set("spark.ui.enabled", "false")
+    val sc = org.apache.spark.SparkContext.getOrCreate(scConf)
+    org.apache.spark.GraftTestGlue.setContextConf(
+      sc, "spark.sql.extensions", "graft.GraftExtensions")
+    def build(): SparkSession = SparkSession.builder()
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .getOrCreate()
+    // suites run in parallel: another suite's lazy session init can
+    // re-set the default between our clear and getOrCreate, handing us
+    // its (extension-less) session — probe the registry and retry
+    def hasFns(s: SparkSession): Boolean = s.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sig"))
+    var s = build()
+    var attempts = 0
+    while (!hasFns(s) && attempts < 20) {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      Thread.sleep(250)
+      s = build()
+      attempts += 1
+    }
+    s
+  }
+
+  /** Clears the default and active sessions for `body`, then restores them. */
+  private def withDefaultsRestored[T](body: => T): T = {
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    try {
-      // spark.sql.extensions is a STATIC conf: Spark resolves it from
-      // the SparkContext's conf at session construction, so on a JVM
-      // whose context was created by another suite (without the key)
-      // the builder option alone never injects. Production sets it in
-      // spark-submit conf before the context exists; the test-harness
-      // equivalent is pinning it onto the (possibly shared) context.
-      val scConf = new org.apache.spark.SparkConf()
-        .setMaster("local[2]").setAppName("graft-ext-test")
-        .set("spark.sql.extensions", "graft.GraftExtensions")
-        .set("spark.ui.enabled", "false")
-      val sc = org.apache.spark.SparkContext.getOrCreate(scConf)
-      org.apache.spark.GraftTestGlue.setContextConf(
-        sc, "spark.sql.extensions", "graft.GraftExtensions")
-      def build(): SparkSession = SparkSession.builder()
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .getOrCreate()
-      // suites run in parallel: another suite's lazy session init can
-      // re-set the default between our clear and getOrCreate, handing us
-      // its (extension-less) session — probe the registry and retry
-      def hasFns(s: SparkSession): Boolean = s.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sig"))
-      var s = build()
-      var attempts = 0
-      while (!hasFns(s) && attempts < 20) {
-        SparkSession.clearDefaultSession()
-        SparkSession.clearActiveSession()
-        Thread.sleep(250)
-        s = build()
-        attempts += 1
-      }
+    try body
+    finally {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  private def graftFunctionNames(registry: FunctionRegistry): Set[String] =
+    registry.listFunction().map(_.funcName).toSet --
+      FunctionRegistry.builtin.listFunction().map(_.funcName)
+
+  test("extensions-configured session exposes native functions in SQL") {
+    withDefaultsRestored {
+      val s = extensionSession()
       val row = s.sql(
         """SELECT size(minhash_sig(shingle_hashes('a b c d e f g'))) AS k,
           |  simhash64('a b c') AS fp,
@@ -66,9 +88,6 @@ class ExtensionsSpec extends AnyFunSuite {
         """SELECT exact_qsum(x) AS sq FROM VALUES (0.1D), (0.2D), (0.3D) t(x)
           |""".stripMargin).collect().head.getDouble(0)
       assert(qsum === 0.6)
-      // parity: the config-only surface ⊇ the per-session surface of
-      // Engine.registerFunctions — a user switching deployment modes
-      // must not lose functions
       // topk through the config-only path too, with its literal k
       val tk = s.sql(
         """SELECT topk(CAST(v AS DOUBLE), CAST(t AS BIGINT), 2) AS tags
@@ -84,15 +103,6 @@ class ExtensionsSpec extends AnyFunSuite {
       val mi = s.sql("SELECT morton_interleave(5L, 3L) AS z")
         .collect().head.getLong(0)
       assert(mi === 39L)
-      val perSession = Seq("shingle_hashes", "char_shingle_hashes",
-        "minhash_sig", "minhash_band_keys", "simhash64", "dot_product",
-        "l2_norm", "exact_qsum", "token_set_count", "mod_filter", "topk",
-        "morton_interleave", "nfc_normalize")
-      perSession.foreach { name =>
-        assert(s.sessionState.functionRegistry.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)),
-          s"config-only path missing $name")
-      }
       // wrong arity → clean AnalysisException with the usage string,
       // not an IndexOutOfBoundsException from es(1)/es(2)
       for (q <- Seq("SELECT mod_filter(ARRAY(1L))",
@@ -103,11 +113,27 @@ class ExtensionsSpec extends AnyFunSuite {
         }
         assert(e.getMessage.contains("usage:"), s"query [$q] gave: ${e.getMessage}")
       }
-    } finally {
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
     }
+  }
+
+  test("Engine.registerFunctions and GraftExtensions expose the same function names") {
+    val expected = Set("shingle_hashes", "char_shingle_hashes",
+      "minhash_sig", "minhash_band_keys", "simhash64", "dot_product",
+      "l2_norm", "exact_qsum", "token_set_count", "mod_filter", "topk",
+      "morton_interleave", "nfc_normalize")
+    val (viaExtensions, viaEngine) = withDefaultsRestored {
+      val s = extensionSession()
+      // a fresh session on the same context starts with the injected
+      // functions; drop them so only Engine.registerFunctions adds any
+      val perSession = s.newSession()
+      val registry = perSession.sessionState.functionRegistry
+      graftFunctionNames(registry).foreach(n =>
+        registry.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+      assert(graftFunctionNames(registry).isEmpty)
+      Engine.registerFunctions(perSession)
+      (graftFunctionNames(s.sessionState.functionRegistry), graftFunctionNames(registry))
+    }
+    assert(viaExtensions === expected)
+    assert(viaEngine === expected)
   }
 }

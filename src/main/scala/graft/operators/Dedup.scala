@@ -1105,20 +1105,8 @@ object Dedup {
     * d04≡d03 / s04≡s02 same-answer-scalable-plan precedent). The
     * persisted round-trip (write → append → probe ≡ in-plan rebuild,
     * standing files untouched) is spec-pinned in DedupSpec. */
-  def writeLshIndex(docs: DataFrame, dir: String): Unit = {
-    val g = IndexStore.nextGen(dir)
-    val root = IndexStore.genPath(dir, g)
-    val sh = shingleFrame(docs)
-    sh.write.mode("overwrite").parquet(s"$root/shingles")
-    val banded = bandedOf(sh).persist()
-    try {
-      banded.write.mode("overwrite").parquet(s"$root/banded")
-      bandedOf_counts(banded).write.mode("overwrite")
-        .parquet(s"$root/bucket_counts")
-    } finally { banded.unpersist(); () }
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-  }
+  def writeLshIndex(docs: DataFrame, dir: String): Unit =
+    IndexStore.write(Lsh, docs, (), dir)
 
   /** Per-bucket partial counts of a banded frame — the third lane of
     * the index artifact. Persisted so the probe never has to count the
@@ -1130,160 +1118,74 @@ object Dedup {
     banded.groupBy($"band_id", $"band_hash").agg(count(lit(1)).as("n"))
   }
 
-  /** Admit a delta batch into a standing index: append-only — new
-    * files land beside the standing ones, which stay byte-untouched.
-    * The counts lane appends PARTIAL rows for the buckets this batch
-    * touches only (readers sum per key), so the incremental update
-    * cost is delta-proportional on all three lanes.
-    *
-    * `compactEvery` > 0 runs [[compactLshIndex]] automatically every
-    * that-many appends (counter = the artifact's `_appends` file; same
-    * single-writer contract as the append itself) — the maintenance
-    * cadence a long-lived index needs without a separate scheduler.
-    * 0 keeps compaction manual. */
+  /** The LSH artifact for [[IndexStore]]'s lifecycle verbs: the shingle
+    * frame (verify lane) and its banding (candidate lane), plus the
+    * bucket-count partials. The fresh shingles feed the banding and the
+    * fresh banding feeds the counts, so both are checkpointed once (the
+    * shingles are tracked too, so a banding that fails leaves them to
+    * the caller's next drain). A fold's counts are the standing partials −
+    * the dead docs' band mass + the fresh mass, with all-dead buckets
+    * dropped at n ≤ 0 — row for row what a rebuild writes. A delete
+    * needs no correction: probes subtract the tombstoned docs' mass
+    * themselves ([[maskLshLanes]]). */
+  private val Lsh = IndexStore.Family[Unit]("doc_id",
+    Seq(IndexStore.Lane("shingles", IndexStore.Coalesced),
+      IndexStore.Lane("banded", IndexStore.Coalesced)),
+    derive = (docs, _, _) => {
+      val sh = graft.Scratch.track(IndexStore.checkpoint(shingleFrame(docs)))
+      Seq(sh, IndexStore.checkpoint(bandedOf(sh)))
+    },
+    derived = Some(IndexStore.Derived("bucket_counts",
+      partial = (_, fresh) => bandedOf_counts(fresh(1)),
+      fold = (s, src, _, dead, fresh) => {
+        import s.implicits._
+        val counts = s.read.parquet(s"$src/bucket_counts")
+        val deadCounts = dead.map(d => bandedOf_counts(
+            s.read.parquet(s"$src/banded").join(broadcast(d), Seq("doc_id"), "left_semi"))
+          .select($"band_id", $"band_hash", (-$"n").as("n")))
+        (counts +: (deadCounts.toSeq ++ fresh.lift(1).map(bandedOf_counts)))
+          .reduce(_ unionByName _)
+          .groupBy($"band_id", $"band_hash")
+          .agg(org.apache.spark.sql.functions.sum($"n").as("n"))
+          .filter($"n" > 0)
+          .coalesce(math.max(1, counts.inputFiles.length / 16))
+      })))
+
+  /** Admit a delta batch ([[IndexStore.append]]). The counts lane
+    * appends partial rows for the buckets this batch touches only
+    * (readers sum per key), so all three lanes grow at delta cost. */
   def appendToLshIndex(delta: DataFrame, dir: String,
-                       compactEvery: Int = 0): Unit = {
-    val root = IndexStore.currentPath(dir)
-    val sh = shingleFrame(delta)
-    sh.write.mode("append").parquet(s"$root/shingles")
-    val banded = bandedOf(sh).persist()
-    try {
-      banded.write.mode("append").parquet(s"$root/banded")
-      bandedOf_counts(banded).write.mode("append")
-        .parquet(s"$root/bucket_counts")
-    } finally { banded.unpersist(); () }
-    if (compactEvery > 0 && IndexStore.bumpAppends(dir) % compactEvery == 0)
-      compactLshIndex(delta.sparkSession, dir)
-  }
+                       compactEvery: Int = 0): Unit =
+    IndexStore.append(Lsh, delta, (), dir, compactEvery)
 
-  /** Record deletions against a standing index (takedowns, robots
-    * re-crawls — the `removed` set [[graft.operators.Curation]]'s c07
-    * snapshot diff computes): append the doc ids as TOMBSTONES under
-    * the current generation ([[IndexStore.appendTombstones]] — new
-    * files only, standing lanes byte-untouched, cost ∝ |removals|).
-    * Probes mask tombstoned docs exactly (candidates, verify lane AND
-    * bucket-cap mass — see [[maskLshLanes]]), so delete → probe ≡
-    * probe of an index rebuilt without the removed docs, hash-checked
-    * by the registered d26 entry and spec-pinned on the persisted
-    * round-trip (the s18 append≡rebuild precedent). Double-deletes and
-    * deletes of absent ids are no-ops by construction (semi/anti-join
-    * masking). [[compactLshIndex]] folds tombstones in — dead rows
-    * physically dropped, lane reclaimed; `compactEvery` counts deletes
-    * toward the same auto-compaction cadence as appends. */
+  /** Tombstone doc ids ([[IndexStore.delete]]) — the takedown /
+    * re-crawl `removed` set c07's snapshot diff computes. Probes mask
+    * tombstoned docs exactly (candidates, verify lane AND bucket-cap
+    * mass, [[maskLshLanes]]), so delete → probe ≡ probe of an index
+    * rebuilt without them; the registered d26 entry hash-checks it. */
   def deleteFromLshIndex(removedIds: DataFrame, dir: String,
-                         compactEvery: Int = 0): Unit = {
-    IndexStore.appendTombstones(removedIds, dir, "doc_id")
-    if (compactEvery > 0 && IndexStore.bumpAppends(dir) % compactEvery == 0)
-      compactLshIndex(removedIds.sparkSession, dir)
-  }
+                         compactEvery: Int = 0): Unit =
+    IndexStore.delete(Lsh, removedIds, dir, compactEvery)
 
-  /** UPDATE changed documents in a standing index — the third
-    * lifecycle verb (r17), for the `changed` set c07's snapshot diff
-    * computes: re-crawls rewrite documents constantly, and a rewritten
-    * doc must probe with its NEW shingles, not its stale ones. Neither
-    * existing verb composes into this on its own: append would leave
-    * both revisions probing, and delete + append cannot run as two
-    * steps because the id-keyed tombstone would mask the re-added
-    * rows too (ids are the identity — the family's documented
-    * "no upsert" stance, now superseded by this verb).
-    *
-    * So update FOLDS A GENERATION (the deleteFromClusterMap publish
-    * discipline): gen N+1 = standing lanes minus (tombstoned ∪
-    * changed) ids, plus the revisions' freshly-derived lanes, with the
-    * counts lane corrected by −(dead band mass) +(revision band mass)
-    * — exactly what writeLshIndex over the revised corpus writes, row
-    * for row. One atomic `_current` flip publishes it: a reader sees
-    * the pre-update or the post-update corpus, never the torn middle
-    * (old revision gone, new not yet probing) — IndexUpdateSpec pins
-    * this and update ≡ rebuild-with-new-revisions.
-    *
-    * Semantics at the edges: an id the index never held inserts (the
-    * c07 `added`-misrouted-as-`changed` case); a previously-tombstoned
-    * id revives with the new revision (an update IS an upsert); a
-    * shingle-less revision (< 3 tokens) drops out of the index exactly
-    * as a rebuild would drop it; standing tombstones fold in and the
-    * lane is reclaimed (no tombstone survives into the new
-    * generation). Cost: one linear read+write of the index LANES
-    * (~16 B band rows + one shingle array per doc — never the corpus
-    * text) plus delta-sized signature work for the revisions; vs a
-    * rebuild, the standing 99%+ of the corpus is never re-shingled or
-    * re-banded (SCALE.md prices it). Updates arrive batched on the
-    * c07 snapshot cadence, so this is the compaction the artifact
-    * would run on that cadence anyway, carrying the revisions along
-    * for free. */
+  /** Re-index c07's `changed` docs with their new shingles
+    * ([[IndexStore.update]]). Append would leave both revisions
+    * probing, and delete + append cannot run as two steps because the
+    * id-keyed tombstone would mask the re-added rows too; the fold
+    * costs one pass over the index lanes (never the corpus text) plus
+    * signature work for the revisions only (SCALE.md prices it). A
+    * shingle-less revision (< 3 tokens) drops out, as a rebuild would
+    * drop it. */
   def updateInLshIndex(changed: DataFrame, dir: String): Unit =
-    syncLshIndex(changed, changed.sparkSession.range(0)
-      .select(org.apache.spark.sql.functions.col("id").as("doc_id")), dir)
+    IndexStore.update(Lsh, changed, (), dir)
 
-  /** Apply a FULL c07 snapshot diff in ONE atomic generation — the
-    * composed lifecycle verb (r17): `upserts` carries the `changed`
-    * docs' new revisions AND the `added` docs (an absent id inserts —
-    * the update fold's documented edge), `removed` carries the
-    * takedown/re-crawl-removed ids. gen N+1 = standing lanes minus
-    * (tombstoned ∪ removed ∪ upsert) ids, plus the upserts' freshly
-    * derived lanes, one `_current` flip — a reader sees the pre-diff
-    * or the post-diff corpus, never any partially-applied middle
-    * (deletes visible but revisions absent, or vice versa). This is
-    * what a corpus-sync job actually runs per snapshot: the reference
-    * itself is an incremental sync loop (its cursor sketch,
-    * core.clj:133-137), and the three-verbs-in-one-fold form costs
-    * exactly one lane pass — the same pass a lone update already
-    * paid. sync ≡ writeLshIndex over (standing ∖ removed ∖ changed)
-    * ∪ upserts is spec-pinned (IndexUpdateSpec).
-    *
-    * Malformed-batch resolution (r18, shared by every sync verb): an
-    * id carried by BOTH `upserts` and `removed` resolves DELETE-WINS
-    * (matching [[graft.streaming.StreamingCorpusSync]] — takedowns are
-    * the legally-loaded verb; the next honest upsert re-inserts), and
-    * same-id duplicate upserts fold exactly ONE deterministic revision
-    * ([[IndexStore.latestRevision]] — c07 diffs emit one row per id,
-    * but a raw CDC batch may not). */
-  def syncLshIndex(upserts0: DataFrame, removed: DataFrame, dir: String): Unit = {
-    val s = upserts0.sparkSession
-    import s.implicits._
-    IndexStore.adoptLegacy(dir)
-    val src = IndexStore.currentPath(dir)
-    val g = IndexStore.nextGen(dir)
-    val dst = IndexStore.genPath(dir, g)
-    // r19: resolved upserts materialized once (diff-sized) — referenced
-    // by the dead mask and the fresh-lane derivation; the resolution
-    // window otherwise re-ran per consumer
-    val upserts = IndexStore.latestRevision(upserts0, "doc_id")
-      .join(broadcast(removed.select($"doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    // one broadcast mask: already-tombstoned ∪ removed ∪ upsert ids
-    // (diff-sized by premise; localCheckpoint — ~4 consumers)
-    val dead = IndexStore.readTombstones(s, dir, "doc_id")
-      .unionByName(removed.select($"doc_id"))
-      .unionByName(upserts.select($"doc_id")).distinct().localCheckpoint()
-    val newSh = graft.Scratch.track(shingleFrame(upserts).localCheckpoint())
-    val newBanded = graft.Scratch.track(bandedOf(newSh).localCheckpoint())
-    def fold(lane: String, fresh: DataFrame): Unit = {
-      val in = s.read.parquet(s"$src/$lane")
-      in.join(broadcast(dead), Seq("doc_id"), "left_anti")
-        .coalesce(math.max(1, in.inputFiles.length / 16))
-        .unionByName(fresh)
-        .write.mode("overwrite").parquet(s"$dst/$lane")
-    }
-    fold("shingles", newSh)
-    fold("banded", newBanded)
-    // counts ≡ rebuild: standing partials − dead docs' band mass
-    // + the revisions' band mass; all-dead buckets drop at n ≤ 0
-    val counts = s.read.parquet(s"$src/bucket_counts")
-    val deadCounts = bandedOf_counts(s.read.parquet(s"$src/banded")
-        .join(broadcast(dead), Seq("doc_id"), "left_semi"))
-      .select($"band_id", $"band_hash", (-$"n").as("n"))
-    counts.unionByName(deadCounts).unionByName(bandedOf_counts(newBanded))
-      .groupBy($"band_id", $"band_hash")
-      .agg(org.apache.spark.sql.functions.sum($"n").as("n"))
-      .filter($"n" > 0)
-      .coalesce(math.max(1, counts.inputFiles.length / 16))
-      .write.mode("overwrite").parquet(s"$dst/bucket_counts")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-    graft.Scratch.releaseNow(dead) // every consumer above has written
-    graft.Scratch.releaseNow(upserts)
-  }
+  /** Apply a full c07 snapshot diff in one generation
+    * ([[IndexStore.sync]]): `upserts` = changed revisions ∪ added docs,
+    * `removed` = dead ids. This is what a corpus-sync job runs per
+    * snapshot — the reference is itself an incremental sync loop (its
+    * cursor sketch, core.clj:133-137). sync ≡ writeLshIndex over
+    * (standing ∖ removed ∖ changed) ∪ upserts is IndexUpdateSpec-pinned. */
+  def syncLshIndex(upserts0: DataFrame, removed: DataFrame, dir: String): Unit =
+    IndexStore.sync(Lsh, upserts0, removed, (), dir)
 
   /** Mask a tombstoned id set out of the three standing lanes so every
     * downstream answer equals a rebuild over the live docs: banded and
@@ -1308,63 +1210,12 @@ object Dedup {
     (liveBanded, counts.unionByName(deadCounts), liveSh)
   }
 
-  /** Compact a standing LSH index: fold each lane's accumulated small
-    * append files into few large ones, MERGE the counts lane's
-    * partial rows (one row per bucket — readers sum per key, so merged
-    * sums are semantics-identical), and FOLD TOMBSTONES IN: dead docs'
-    * rows are anti-joined out of the shingle/banded lanes, their band
-    * mass subtracted from the merged counts (all-dead buckets dropped,
-    * matching a rebuild's counts exactly), and the new generation
-    * carries no tombstone lane — deletion reclaim is the atomic
-    * generation flip. Probe answers are identical by construction:
-    * shingles/banded are row-preserving rewrites of the LIVE rows, and
-    * probes already masked tombstoned rows before the fold.
-    *
-    * Live-reader-safe via [[IndexStore]] generations: the folded lanes
-    * land as generation N+1 and `_current` flips atomically — a probe
-    * that already resolved gen N keeps every file it planned until two
-    * further generations publish (sweep grace), and a new probe sees
-    * exactly one side of the fold. Run every K appends (K ~ 10–50);
-    * single-maintainer like the appends themselves (the artifact's
-    * existing single-writer contract). Cost: one linear read+write of
-    * the index lanes — independent of corpus text, ~16 rows × 12 B +
-    * one shingle array per doc. */
-  def compactLshIndex(s: SparkSession, dir: String): Unit = {
-    IndexStore.adoptLegacy(dir) // flat pre-generation dirs migrate once
-    val src = IndexStore.currentPath(dir)
-    val g = IndexStore.nextGen(dir)
-    val dst = IndexStore.genPath(dir, g)
-    import s.implicits._
-    // zero-tombstone fast path (r17): a never-deleted index folds by a
-    // plain file-count coalesce — no anti-joins, no dead-mass pass
-    val hasTomb = IndexStore.hasTombstones(dir)
-    val tomb = IndexStore.readTombstones(s, dir, "doc_id")
-    def fold(lane: String): Unit = {
-      val in = s.read.parquet(s"$src/$lane")
-      (if (hasTomb) in.join(broadcast(tomb), Seq("doc_id"), "left_anti") else in)
-        .coalesce(math.max(1, in.inputFiles.length / 16))
-        .write.mode("overwrite").parquet(s"$dst/$lane")
-    }
-    fold("shingles")
-    fold("banded")
-    val counts = s.read.parquet(s"$src/bucket_counts")
-    // merged partials MINUS the dead docs' band mass ≡ counts over the
-    // live banded rows; a bucket whose docs are all dead sums to 0 and
-    // is dropped, matching what a rebuild-without-removed writes
-    val deadCounts =
-      if (!hasTomb) None
-      else Some(bandedOf_counts(s.read.parquet(s"$src/banded")
-          .join(broadcast(tomb), Seq("doc_id"), "left_semi"))
-        .select($"band_id", $"band_hash", (-$"n").as("n")))
-    deadCounts.map(counts.unionByName(_)).getOrElse(counts)
-      .groupBy($"band_id", $"band_hash")
-      .agg(org.apache.spark.sql.functions.sum($"n").as("n"))
-      .filter($"n" > 0)
-      .coalesce(math.max(1, counts.inputFiles.length / 16))
-      .write.mode("overwrite").parquet(s"$dst/bucket_counts")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-  }
+  /** Fold the lanes' append files, merge the count partials, and drop
+    * tombstoned docs ([[IndexStore.compact]]). Run every K appends
+    * (K ~ 10–50); the cost is one pass over the index lanes — about 16
+    * band rows and one shingle array per doc, independent of the text. */
+  def compactLshIndex(s: SparkSession, dir: String): Unit =
+    IndexStore.compact(Lsh, s, dir)
 
   /** Probe a delta batch against a persisted index: the J ≥ τ pairs
     * touching the delta (new–old and new–new), at delta signature

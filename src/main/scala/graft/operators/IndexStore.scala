@@ -3,7 +3,8 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Generation-based layout + live-reader-safe compaction plumbing for
@@ -38,6 +39,19 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * Legacy flat directories (no `_current`) read as themselves, so
   * externally-built index dirs stay valid.
+  *
+  * Lifecycle: every artifact family (LSH, BM25, payload bands, IVF,
+  * IVFADC, labeled IVF) runs the same verbs, implemented once at the
+  * end of this object and driven by one private [[Family]] value per
+  * family. [[write]] builds a generation; [[append]] adds files to the
+  * current one; [[delete]] tombstones ids; [[sync]] folds a whole diff
+  * into one new generation ([[update]] is a sync that removes nothing);
+  * [[compact]] is the fold with an empty diff. Every fold has one
+  * skeleton: one revision per id ([[latestRevision]]) minus removed ids
+  * → dead = tombstones ∪ removed ∪ upserts → standing lanes minus dead
+  * plus the lanes derived from the upserts → [[publish]] → [[sweep]] →
+  * release of the checkpointed scratch. The cluster map (connected
+  * components over pairs) keeps its own verbs in [[Dedup]].
   */
 object IndexStore {
 
@@ -312,5 +326,198 @@ object IndexStore {
         publish(dir, 0L)
       }
     }
+  }
+
+  // ---- the lifecycle verbs, once for every artifact family ----
+
+  /** How a lane's rows are laid out on disk. */
+  sealed trait Layout
+  /** Files as the rows arrive; a fold coalesces the standing side to a
+    * 16th of its input files before the fresh rows union in. */
+  case object Coalesced extends Layout
+  /** `repartition` + `sortWithinPartitions` + `partitionBy(by)`: each
+    * partition directory is written whole by one task, so a probe that
+    * prunes on `by` opens few files. */
+  final case class Clustered(by: Seq[String], sort: Seq[String]) extends Layout
+
+  /** A lane the verbs rewrite: `name` under the generation root, or the
+    * root itself when empty (the IVF lists). */
+  final case class Lane(name: String, layout: Layout)
+
+  /** A lane computed from the others rather than keyed by id, so a fold
+    * cannot anti-join it: LSH's bucket counts, BM25's stats partials.
+    * `partial(docs, fresh)` is what a write or append of `docs` adds;
+    * `fold(s, src, dst, dead, fresh)` is the next generation's lane (after
+    * the keyed lanes are written to `dst`; `dead` is None on a compaction
+    * with no tombstones, `fresh` empty on a compaction); `deleted(root,
+    * newlyDead)`, when set, is the correction a delete appends after its
+    * tombstones. */
+  final case class Derived(lane: String,
+      partial: (DataFrame, Seq[DataFrame]) => DataFrame,
+      fold: (SparkSession, String, String, Option[DataFrame], Seq[DataFrame]) => DataFrame,
+      deleted: Option[(String, DataFrame) => DataFrame] = None)
+
+  /** One persisted artifact family as data — all [[write]], [[append]],
+    * [[delete]], [[sync]], [[update]] and [[compact]] need to know.
+    * `derive(rows, model, root)` gives the fresh rows of each of `lanes`,
+    * in order, for rows keyed by `key`; `root` is the generation whose
+    * `carried` lanes (models written once and copied forward unchanged)
+    * it may read, and `model` is what the caller supplies per call (IVF
+    * centroids, the IVFADC subvector width). A sync folds one revision
+    * per key ([[latestRevision]]) unless `check` is set: then the
+    * checkpointed upserts are checked as they are instead. */
+  final case class Family[M](key: String, lanes: Seq[Lane],
+      derive: (DataFrame, M, String) => Seq[DataFrame],
+      carried: Seq[String] = Nil,
+      derived: Option[Derived] = None,
+      check: Option[DataFrame => Unit] = None)
+
+  /** A full build: generation N+1 holds the `carried` frames (one per
+    * [[Family.carried]] lane) and the lanes derived from `docs`. */
+  def write[M](f: Family[M], docs: DataFrame, model: M, dir: String,
+               carried: Seq[DataFrame] = Nil): Unit = {
+    val g = nextGen(dir)
+    val root = genPath(dir, g)
+    f.carried.zip(carried).foreach { case (l, df) =>
+      df.write.mode("overwrite").parquet(s"$root/$l") }
+    emit(f, docs, model, root, "overwrite")
+    publish(dir, g)
+    sweep(dir)
+  }
+
+  /** Admit a delta into the CURRENT generation: new files beside the
+    * standing ones, which stay byte-untouched, so the cost follows the
+    * delta. `compactEvery` > 0 compacts every that-many appends and
+    * deletes (the `_appends` counter); 0 leaves compaction manual. */
+  def append[M](f: Family[M], delta: DataFrame, model: M, dir: String,
+                compactEvery: Int): Unit = {
+    emit(f, delta, model, currentPath(dir), "append")
+    cadence(f, delta.sparkSession, dir, compactEvery)
+  }
+
+  /** Record deletions as tombstones under the current generation
+    * ([[appendTombstones]]): standing lanes byte-untouched, readers mask
+    * the ids, and the next fold drops them. A family whose derived lane
+    * takes a delete-time correction first drops ids already tombstoned,
+    * so a double delete never corrects twice. */
+  def delete(f: Family[_], removedIds: DataFrame, dir: String,
+             compactEvery: Int): Unit = {
+    val s = removedIds.sparkSession
+    f.derived.flatMap(d => d.deleted.map(d.lane -> _)) match {
+      case None => appendTombstones(removedIds, dir, f.key)
+      case Some((lane, correction)) =>
+        val newDead = checkpoint(removedIds.select(col(f.key)).distinct()
+          .join(broadcast(readTombstones(s, dir, f.key)), Seq(f.key), "left_anti"))
+        try {
+          appendTombstones(newDead, dir, f.key)
+          val root = currentPath(dir)
+          correction(root, newDead).write.mode("append").parquet(s"$root/$lane")
+        } finally graft.Scratch.releaseNow(newDead)
+    }
+    cadence(f, s, dir, compactEvery)
+  }
+
+  /** Apply a diff in ONE generation: gen N+1 = the standing lanes minus
+    * dead = tombstones ∪ removed ∪ upsert keys, plus the lanes derived
+    * from the upserts, published by one atomic `_current` flip — a
+    * reader sees the pre-diff or the post-diff artifact, never a mix.
+    * An absent key inserts; a tombstoned key revives; a key in both
+    * sets resolves delete-wins; same-key duplicate upserts fold one
+    * deterministic revision ([[latestRevision]]) unless the family
+    * checks them instead. The checkpointed scratch (upserts, dead, the
+    * fresh lanes) is released whether or not the fold completes. */
+  def sync[M](f: Family[M], upserts0: DataFrame, removed: DataFrame,
+              model: M, dir: String): Unit = {
+    val s = upserts0.sparkSession
+    adoptLegacy(dir)
+    val src = currentPath(dir)
+    val gone = removed.select(col(f.key))
+    val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def kept(df: DataFrame): DataFrame = { scratch += df; df }
+    try {
+      // diff-sized and read by the dead mask and the derivation: once
+      val upserts = kept(checkpoint(
+        (if (f.check.isEmpty) latestRevision(upserts0, f.key) else upserts0)
+          .join(broadcast(gone), Seq(f.key), "left_anti")))
+      f.check.foreach(_(upserts))
+      val dead = kept(checkpoint(readTombstones(s, dir, f.key)
+        .unionByName(gone).unionByName(upserts.select(col(f.key))).distinct()))
+      fold(f, s, dir, src, Some(dead), f.derive(upserts, model, src).map(kept))
+    } finally scratch.foreach(graft.Scratch.releaseNow)
+  }
+
+  /** [[sync]] with nothing removed. */
+  def update[M](f: Family[M], changed: DataFrame, model: M, dir: String): Unit =
+    sync(f, changed, changed.sparkSession.range(0).select(col("id").as(f.key)),
+      model, dir)
+
+  /** The fold with an empty diff: each lane's append files fold into
+    * few large ones, tombstoned rows drop out and the tombstone lane is
+    * reclaimed by the generation flip. With no tombstones the lanes are
+    * copied without an anti-join. Served answers do not change. */
+  def compact(f: Family[_], s: SparkSession, dir: String): Unit = {
+    adoptLegacy(dir)
+    val src = currentPath(dir)
+    fold(f, s, dir, src,
+      if (hasTombstonesAt(src)) Some(readTombstonesAt(s, src, f.key)) else None, Nil)
+  }
+
+  private def at(root: String, lane: Lane): String =
+    if (lane.name.isEmpty) root else s"$root/${lane.name}"
+
+  private def put(lane: Lane, rows: DataFrame, root: String, mode: String): Unit =
+    (lane.layout match {
+      case Coalesced => rows.write
+      case Clustered(by, sort) =>
+        rows.repartition(by.map(col): _*).sortWithinPartitions(sort.map(col): _*)
+          .write.partitionBy(by: _*)
+    }).mode(mode).parquet(at(root, lane))
+
+  private def emit[M](f: Family[M], docs: DataFrame, model: M, root: String,
+                      mode: String): Unit = {
+    val fresh = f.derive(docs, model, root)
+    try {
+      f.lanes.zip(fresh).foreach { case (l, rows) => put(l, rows, root, mode) }
+      f.derived.foreach(d =>
+        d.partial(docs, fresh).write.mode(mode).parquet(s"$root/${d.lane}"))
+    } finally fresh.foreach(graft.Scratch.releaseNow)
+  }
+
+  private def cadence(f: Family[_], s: SparkSession, dir: String,
+                      compactEvery: Int): Unit =
+    if (compactEvery > 0 && bumpAppends(dir) % compactEvery == 0) compact(f, s, dir)
+
+  /** Build generation N+1 from generation `src` minus `dead` plus
+    * `fresh`, then publish it and sweep. */
+  private def fold(f: Family[_], s: SparkSession, dir: String, src: String,
+                   dead: Option[DataFrame], fresh: Seq[DataFrame]): Unit = {
+    val g = nextGen(dir)
+    val dst = genPath(dir, g)
+    f.carried.foreach(l =>
+      s.read.parquet(s"$src/$l").write.mode("overwrite").parquet(s"$dst/$l"))
+    f.lanes.zipWithIndex.foreach { case (lane, i) =>
+      val in = s.read.parquet(at(src, lane))
+      val live = dead.fold(in)(d => in.join(broadcast(d), Seq(f.key), "left_anti"))
+      val kept = if (lane.layout == Coalesced)
+        live.coalesce(math.max(1, in.inputFiles.length / 16)) else live
+      put(lane, fresh.lift(i).fold(kept)(kept.unionByName(_)), dst, "overwrite")
+    }
+    f.derived.foreach(d =>
+      d.fold(s, src, dst, dead, fresh).write.mode("overwrite").parquet(s"$dst/${d.lane}"))
+    publish(dir, g)
+    sweep(dir)
+  }
+
+  /** `df.localCheckpoint()` that leaves no persisted RDD behind when its
+    * materializing job fails (the eager form registers the RDD first and
+    * drops the reference on the throw, pinning it until GC). The same
+    * one job: stages before the last run inside `localCheckpoint`, the
+    * last one in the `count`. */
+  private[graft] def checkpoint(df: DataFrame): DataFrame = {
+    val ck = df.localCheckpoint(eager = false)
+    try {
+      ck.queryExecution.logical match { case l: LogicalRDD => l.rdd.count() }
+      ck
+    } catch { case e: Throwable => graft.Scratch.releaseNow(ck); throw e }
   }
 }

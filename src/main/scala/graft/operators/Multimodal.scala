@@ -527,108 +527,38 @@ object Multimodal {
     * d21's < 1e-12 equivalence). Registered entry rebuilds the
     * standing frames in-plan (oracle self-containment, the d19/d21
     * discipline); the persisted round-trip is spec-pinned. */
-  def writePayloadIndex(payloads: DataFrame, dir: String): Unit = {
-    val g = IndexStore.nextGen(dir)
-    payloadBands(payloads).write.mode("overwrite")
-      .parquet(s"${IndexStore.genPath(dir, g)}/bands")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-  }
+  def writePayloadIndex(payloads: DataFrame, dir: String): Unit =
+    IndexStore.write(Payload, payloads, (), dir)
 
-  /** Admit a delta batch into a standing index: append-only — new
-    * files land beside the standing ones, which stay byte-untouched.
-    * `compactEvery` > 0 auto-folds every that-many appends (the
-    * appendToLshIndex knob; `_appends` counter, single-writer). */
+  /** The payload artifact for [[IndexStore]]'s lifecycle verbs: one
+    * band lane, (doc_id, fp, chunk_id, chunk_val). Payload bytes never
+    * shuffle on any verb — only the 8 band rows per doc move. */
+  private val Payload = IndexStore.Family[Unit]("doc_id",
+    Seq(IndexStore.Lane("bands", IndexStore.Coalesced)),
+    derive = (payloads, _, _) => Seq(payloadBands(payloads)))
+
   def appendToPayloadIndex(delta: DataFrame, dir: String,
-                           compactEvery: Int = 0): Unit = {
-    payloadBands(delta).write.mode("append")
-      .parquet(s"${IndexStore.currentPath(dir)}/bands")
-    if (compactEvery > 0 && IndexStore.bumpAppends(dir) % compactEvery == 0)
-      compactPayloadIndex(delta.sparkSession, dir)
-  }
+                           compactEvery: Int = 0): Unit =
+    IndexStore.append(Payload, delta, (), dir, compactEvery)
 
-  /** Compact a standing payload index: fold the band lane's append
-    * files into few large ones — a row-preserving rewrite, so probe
-    * answers are identical. Live-reader-safe via [[IndexStore]]
-    * generations (atomic flip, one-cycle sweep grace) — the d21/s17
-    * compaction contract on the payload modality. */
-  def compactPayloadIndex(s: SparkSession, dir: String): Unit = {
-    IndexStore.adoptLegacy(dir) // flat pre-generation dirs migrate once
-    val src = IndexStore.currentPath(dir)
-    val g = IndexStore.nextGen(dir)
-    val in = s.read.parquet(s"$src/bands")
-    // tombstones fold in: dead payloads' band rows anti-joined out and
-    // the new generation carries no tombstone lane — reclaim = the flip
-    // (identity when no deletion was ever recorded — the r17 fast path)
-    IndexStore.maskTombstonesAt(in, src, "doc_id")
-      .coalesce(math.max(1, in.inputFiles.length / 16))
-      .write.mode("overwrite").parquet(s"${IndexStore.genPath(dir, g)}/bands")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-  }
+  def compactPayloadIndex(s: SparkSession, dir: String): Unit =
+    IndexStore.compact(Payload, s, dir)
 
-  /** Record deletions against a standing payload index (takedowns are
-    * MOST common on the media tier): doc ids append as tombstones
-    * under the current generation; probes mask them with one broadcast
-    * anti-join (removals are delta-sized), so delete → probe ≡ probe
-    * of an index rebuilt without the removed payloads — hash-checked
-    * by the registered m18 entry and spec-pinned. Double-deletes and
-    * absent ids are no-ops; [[compactPayloadIndex]] physically drops
-    * dead band rows; `compactEvery` counts deletes toward the same
-    * auto-compaction cadence as appends. */
+  /** Tombstone payload doc ids (takedowns are MOST common on the media
+    * tier); delete → probe ≡ probe of an index rebuilt without them,
+    * hash-checked by the registered m18 entry. */
   def deleteFromPayloadIndex(removedIds: DataFrame, dir: String,
-                             compactEvery: Int = 0): Unit = {
-    IndexStore.appendTombstones(removedIds, dir, "doc_id")
-    if (compactEvery > 0 && IndexStore.bumpAppends(dir) % compactEvery == 0)
-      compactPayloadIndex(removedIds.sparkSession, dir)
-  }
+                             compactEvery: Int = 0): Unit =
+    IndexStore.delete(Payload, removedIds, dir, compactEvery)
 
-  /** UPDATE changed payloads in a standing index — the third lifecycle
-    * verb (r17), for c07's `changed` set on the media tier (a
-    * re-encoded image, a re-mastered audio file: same doc identity,
-    * new bytes, new fingerprint). One generation fold (the
-    * [[graft.operators.Dedup.updateInLshIndex]] discipline): gen N+1 =
-    * standing band rows minus (tombstoned ∪ changed) ids plus the
-    * revisions' freshly-derived bands, one atomic publish; probe ≡
-    * rebuild-with-new-revisions, IndexUpdateSpec-pinned. Payload
-    * bytes never shuffle — only the 8 band rows per doc move. */
+  /** A re-encoded image or re-mastered audio file keeps its doc id and
+    * gets a new fingerprint ([[IndexStore.update]]). */
   def updateInPayloadIndex(changed: DataFrame, dir: String): Unit =
-    syncPayloadIndex(changed, changed.sparkSession.range(0)
-      .select(org.apache.spark.sql.functions.col("id").as("doc_id")), dir)
+    IndexStore.update(Payload, changed, (), dir)
 
-  /** Apply a FULL c07 snapshot diff in ONE atomic generation — the
-    * composed lifecycle verb on the payload artifact
-    * ([[graft.operators.Dedup.syncLshIndex]]'s contract, incl. its r18
-    * malformed-batch resolution: delete-wins on an id in both sets,
-    * one deterministic revision per id via
-    * [[IndexStore.latestRevision]]). */
   def syncPayloadIndex(upserts0: DataFrame, removed: DataFrame,
-                       dir: String): Unit = {
-    val s = upserts0.sparkSession
-    import s.implicits._
-    IndexStore.adoptLegacy(dir)
-    val src = IndexStore.currentPath(dir)
-    val g = IndexStore.nextGen(dir)
-    val in = s.read.parquet(s"$src/bands")
-    // r19: resolved upserts materialized once (diff-sized) — referenced
-    // by the dead mask and the band derivation
-    val upserts = IndexStore.latestRevision(upserts0, "doc_id")
-      .join(org.apache.spark.sql.functions.broadcast(
-        removed.select($"doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val dead = IndexStore.readTombstones(s, dir, "doc_id")
-      .unionByName(removed.select($"doc_id"))
-      .unionByName(upserts.select($"doc_id")).distinct().localCheckpoint()
-    in.join(org.apache.spark.sql.functions.broadcast(dead),
-        Seq("doc_id"), "left_anti")
-      .coalesce(math.max(1, in.inputFiles.length / 16))
-      .unionByName(payloadBands(upserts))
-      .write.mode("overwrite").parquet(s"${IndexStore.genPath(dir, g)}/bands")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-    graft.Scratch.releaseNow(dead)
-    graft.Scratch.releaseNow(upserts)
-  }
+                       dir: String): Unit =
+    IndexStore.sync(Payload, upserts0, removed, (), dir)
 
   /** The banded-fingerprint frame of a (doc_id, payload) batch — the
     * index's row format and the probe's in-plan delta lane (the same

@@ -1185,7 +1185,7 @@ object Similarity {
 
   /** Assign + encode a full-vector (sub=0) frame against FROZEN
     * quantizers — the one body both the in-plan s13 entry and the
-    * persisted-index build/append run (the writeIvfLists discipline:
+    * persisted-index build/append run (the [[ivfAssigned]] discipline:
     * the append path can never silently diverge from the rebuild). */
   private def encodeIvfAdc(vq64: DataFrame, coarse: DataFrame,
                            books: DataFrame, dsub: Int): DataFrame = {
@@ -1252,100 +1252,60 @@ object Similarity {
     * list selection IS partition pruning — s17's layout carrying s13's
     * 32×-compressed codes instead of raw vectors. At 100 TB this is
     * ~3 TB of codes + two sub-MB models: the artifact a production ANN
-    * service actually loads. [[IndexStore]] generations like every
-    * index artifact (atomic flip, sweep grace, compactable). */
+    * service actually loads. */
   def writeIvfAdcIndex(vq64: DataFrame, coarse: DataFrame, books: DataFrame,
-                       dsub: Int, dir: String): Unit = {
-    import vq64.sparkSession.implicits._
-    val g = IndexStore.nextGen(dir)
-    val root = IndexStore.genPath(dir, g)
-    coarse.write.mode("overwrite").parquet(s"$root/coarse")
-    books.write.mode("overwrite").parquet(s"$root/books")
-    encodeIvfAdc(vq64, coarse, books, dsub)
-      .repartition($"cluster_id").sortWithinPartitions($"vec_id")
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(s"$root/codes")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-  }
+                       dsub: Int, dir: String): Unit =
+    IndexStore.write(IvfAdc, vq64, dsub, dir, Seq(coarse, books))
 
-  /** Admit a delta against a standing IVFADC artifact: encode it with
-    * the FROZEN quantizers read from the artifact's own model lanes
-    * and append new files into the matching list directories —
-    * standing files byte-untouched, cost ∝ |delta| (the s18 contract
-    * on the compressed layout). */
+  /** The IVFADC artifact for [[IndexStore]]'s lifecycle verbs: codes
+    * clustered by cluster_id, encoded (subvector width `dsub`) with the
+    * FROZEN quantizers read from the generation's own model lanes,
+    * which every fold carries forward unchanged — so append, update and
+    * sync ≡ a rebuild with the same quantizers. Upserts are checked,
+    * not deduplicated: in the subvector layout two revisions' rows for
+    * one (vec_id, sub) are indistinguishable, so any per-row pick could
+    * stitch a vector from MIXED revisions (a vector that never
+    * existed). Feeds carrying possible duplicates use the raw-vector
+    * sync overload, which resolves revisions before the split; the
+    * check is one diff-sized aggregate over the checkpointed upserts. */
+  private val IvfAdc = IndexStore.Family[Int]("vec_id",
+    Seq(IndexStore.Lane("codes",
+      IndexStore.Clustered(Seq("cluster_id"), Seq("vec_id")))),
+    derive = (vq64, dsub, root) => {
+      val s = vq64.sparkSession
+      Seq(encodeIvfAdc(vq64, s.read.parquet(s"$root/coarse"),
+        s.read.parquet(s"$root/books"), dsub))
+    },
+    carried = Seq("coarse", "books"),
+    check = Some(ups => require(ups.groupBy(col("vec_id"), col("sub")).count()
+        .filter(col("count") > 1).isEmpty,
+      "syncIvfAdcIndex: same-id duplicate upserts in one batch — the " +
+      "subvector layout cannot pick one revision consistently across " +
+      "subspaces; resolve revisions on the raw vectors (e.g. " +
+      "IndexStore.latestRevision) before pqSubvectors")))
+
   def appendToIvfAdcIndex(deltaVq64: DataFrame, dsub: Int, dir: String,
-                          compactEvery: Int = 0): Unit = {
-    val s = deltaVq64.sparkSession
-    import s.implicits._
-    val root = IndexStore.currentPath(dir)
-    encodeIvfAdc(deltaVq64,
-        s.read.parquet(s"$root/coarse"), s.read.parquet(s"$root/books"), dsub)
-      .repartition($"cluster_id").sortWithinPartitions($"vec_id")
-      .write.mode("append").partitionBy("cluster_id").parquet(s"$root/codes")
-    // every-K-appends auto-compaction (the appendToLshIndex knob)
-    if (compactEvery > 0 && IndexStore.bumpAppends(dir) % compactEvery == 0)
-      compactIvfAdcIndex(s, dir)
-  }
+                          compactEvery: Int = 0): Unit =
+    IndexStore.append(IvfAdc, deltaVq64, dsub, dir, compactEvery)
 
-  /** Compact a standing IVFADC artifact: fold each cluster's append
-    * files into one (repartition on cluster_id, build-path sort) and
-    * carry the model lanes forward into the new generation —
-    * row-preserving, served answers identical; live-reader-safe via
-    * [[IndexStore]] (the compactIvfIndex contract on the compressed
-    * layout). */
-  def compactIvfAdcIndex(s: SparkSession, dir: String): Unit = {
-    import s.implicits._
-    IndexStore.adoptLegacy(dir) // flat pre-generation dirs migrate once
-    val src = IndexStore.currentPath(dir)
-    val g = IndexStore.nextGen(dir)
-    val root = IndexStore.genPath(dir, g)
-    s.read.parquet(s"$src/coarse").write.mode("overwrite").parquet(s"$root/coarse")
-    s.read.parquet(s"$src/books").write.mode("overwrite").parquet(s"$root/books")
-    // tombstones fold in: dead codes anti-joined out, lane reclaimed
-    // (identity when no deletion was ever recorded — the r17 fast path)
-    IndexStore.maskTombstonesAt(s.read.parquet(s"$src/codes"), src, "vec_id")
-      .repartition($"cluster_id").sortWithinPartitions($"vec_id")
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(s"$root/codes")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-  }
+  def compactIvfAdcIndex(s: SparkSession, dir: String): Unit =
+    IndexStore.compact(IvfAdc, s, dir)
 
-  /** Record deletions against a standing IVFADC artifact — the
-    * [[deleteFromIvfIndex]] contract on the compressed layout:
-    * tombstones under the current generation, serve-time broadcast
-    * anti-join mask, physical reclaim at [[compactIvfAdcIndex]]. */
   def deleteFromIvfAdcIndex(removedIds: DataFrame, dir: String,
-                            compactEvery: Int = 0): Unit = {
-    IndexStore.appendTombstones(removedIds, dir, "vec_id")
-    if (compactEvery > 0 && IndexStore.bumpAppends(dir) % compactEvery == 0)
-      compactIvfAdcIndex(removedIds.sparkSession, dir)
-  }
+                            compactEvery: Int = 0): Unit =
+    IndexStore.delete(IvfAdc, removedIds, dir, compactEvery)
 
-  /** UPDATE changed vectors in a standing IVFADC artifact — the
-    * [[updateInIvfIndex]] contract on the compressed layout: gen N+1 =
-    * standing codes minus (tombstoned ∪ changed) ids plus the
-    * revisions ENCODED WITH THE FROZEN QUANTIZERS read from the
-    * artifact's own model lanes (carried forward unchanged), one
-    * atomic publish. Serve ≡ rebuild-with-new-revisions for the same
-    * quantizers; spec-pinned in IndexUpdateSpec. */
   def updateInIvfAdcIndex(changedVq64: DataFrame, dsub: Int,
                           dir: String): Unit =
-    syncIvfAdcIndex(changedVq64, changedVq64.sparkSession.range(0)
-      .select(org.apache.spark.sql.functions.col("id").as("vec_id")),
-      dsub, dir)
+    IndexStore.update(IvfAdc, changedVq64, dsub, dir)
 
-  /** RAW-VECTOR form of the composed IVFADC sync verb (r19) — the
-    * parity surface with the other six sync verbs: same-id duplicate
+  /** RAW-VECTOR form of the IVFADC sync verb (r19): same-id duplicate
     * upserts fold to ONE deterministic revision
     * ([[IndexStore.latestRevision]] on the raw (vec_id, v) rows)
     * BEFORE the subspace split, so the pick is consistent across
-    * subspaces BY CONSTRUCTION — then the diff applies through the
-    * subvector-layout fold below. A CDC feed with replayed or
-    * multi-update batches needs no pre-dedup step on this lane
-    * anymore (r18 verdict #6); callers who already split with
-    * [[pqSubvectors]] keep the 4-arg form, whose duplicate check
-    * stays a loud reject because two revisions' rows for one
-    * (vec_id, sub) are structurally indistinguishable post-split. */
+    * subspaces BY CONSTRUCTION. Callers who already split with
+    * [[pqSubvectors]] use the 4-arg form, whose duplicate check stays
+    * a loud reject ([[IvfAdc]]). */
   def syncIvfAdcIndex(upsertsRaw: DataFrame, removed: DataFrame,
                       dsub: Int, coarseWidth: Int, dir: String): Unit = {
     val s = upsertsRaw.sparkSession
@@ -1356,57 +1316,11 @@ object Similarity {
       removed, dsub, dir)
   }
 
-  /** Apply a FULL snapshot diff in ONE atomic generation on the
-    * compressed layout — the composed lifecycle verb
-    * ([[syncIvfIndex]]'s contract with the frozen PQ quantizers
-    * carried forward): `upsertsVq64` = changed/added vectors in the
-    * subvector layout ([[pqSubvectors]]), `removed` = dead ids. Shares
-    * the family's r18 malformed-batch resolution with one deliberate
-    * difference: delete-wins on an id in both sets, but same-id
-    * DUPLICATE upserts FAIL LOUDLY instead of deduping — in the
-    * subvector layout two revisions' rows for one (vec_id, sub) are
-    * indistinguishable, so any per-row pick could stitch a vector from
-    * MIXED revisions (a vector that never existed). Feeds carrying
-    * possible duplicates use the raw-vector overload above, which
-    * resolves revisions before the split; the check here is one
-    * diff-sized aggregate. */
+  /** Apply a diff in the subvector layout ([[pqSubvectors]]);
+    * duplicate upserts of one id fail loudly ([[IvfAdc]]). */
   def syncIvfAdcIndex(upsertsVq64: DataFrame, removed: DataFrame,
-                      dsub: Int, dir: String): Unit = {
-    val s = upsertsVq64.sparkSession
-    import s.implicits._
-    IndexStore.adoptLegacy(dir)
-    val src = IndexStore.currentPath(dir)
-    val g = IndexStore.nextGen(dir)
-    val root = IndexStore.genPath(dir, g)
-    // r19: the subvector batch materialized once (diff-sized) — the
-    // duplicate check, the dead mask and the encode each referenced it,
-    // re-running the caller's subvector explode (and, on the raw
-    // overload, the revision-resolution window) per consumer
-    val ups = upsertsVq64.localCheckpoint()
-    require(ups.groupBy($"vec_id", $"sub").count()
-        .filter($"count" > 1).isEmpty,
-      "syncIvfAdcIndex: same-id duplicate upserts in one batch — the " +
-      "subvector layout cannot pick one revision consistently across " +
-      "subspaces; resolve revisions on the raw vectors (e.g. " +
-      "IndexStore.latestRevision) before pqSubvectors")
-    s.read.parquet(s"$src/coarse").write.mode("overwrite").parquet(s"$root/coarse")
-    s.read.parquet(s"$src/books").write.mode("overwrite").parquet(s"$root/books")
-    val upserts = ups
-      .join(broadcast(removed.select($"vec_id")), Seq("vec_id"), "left_anti")
-    val dead = IndexStore.readTombstones(s, dir, "vec_id")
-      .unionByName(removed.select($"vec_id"))
-      .unionByName(upserts.select($"vec_id")).distinct().localCheckpoint()
-    s.read.parquet(s"$src/codes")
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-      .unionByName(encodeIvfAdc(upserts,
-        s.read.parquet(s"$root/coarse"), s.read.parquet(s"$root/books"), dsub))
-      .repartition($"cluster_id").sortWithinPartitions($"vec_id")
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(s"$root/codes")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-    graft.Scratch.releaseNow(dead)
-    graft.Scratch.releaseNow(ups)
-  }
+                      dsub: Int, dir: String): Unit =
+    IndexStore.sync(IvfAdc, upsertsVq64, removed, dsub, dir)
 
   /** Serve ADC top-k from a persisted [[writeIvfAdcIndex]] layout with
     * probe-time partition pruning (the s17 literal-isin discipline:
@@ -1887,116 +1801,39 @@ object Similarity {
     * lane) and every query run is metadata-pruned — completing the
     * train-once(:centroids)/index-once(:this)/serve-many seam the
     * `spark.graft.centroids.dir` store started. */
-  def writeIvfIndex(vecs: DataFrame, centroids: DataFrame, outDir: String): Unit = {
-    val g = IndexStore.nextGen(outDir)
-    writeIvfLists(vecs, centroids, IndexStore.genPath(outDir, g),
-      org.apache.spark.sql.SaveMode.Overwrite)
-    IndexStore.publish(outDir, g)
-    IndexStore.sweep(outDir)
-  }
+  def writeIvfIndex(vecs: DataFrame, centroids: DataFrame, outDir: String): Unit =
+    IndexStore.write(Ivf, vecs, centroids, outDir)
 
-  /** Compact a standing IVF index: fold each cluster list's
-    * accumulated append files into one file per list (repartition on
-    * cluster_id — each list lands whole in one task, sorted like the
-    * build path writes it). Row-preserving, so served answers are
-    * identical; live-reader-safe via [[IndexStore]] generations
-    * (atomic `_current` flip, one-cycle sweep grace). Run every K
-    * appends; cost is one linear read+write of the LISTS (ids +
-    * vectors), never the source corpus. */
-  def compactIvfIndex(s: SparkSession, indexDir: String): Unit = {
-    import s.implicits._
-    IndexStore.adoptLegacy(indexDir) // flat pre-generation dirs migrate once
-    val src = IndexStore.currentPath(indexDir)
-    val g = IndexStore.nextGen(indexDir)
-    // tombstones fold in here: dead vectors anti-joined out, and the
-    // new generation carries no tombstone lane — reclaim is the flip
-    // (identity when no deletion was ever recorded — the r17 fast path)
-    IndexStore.maskTombstonesAt(s.read.parquet(src), src, "vec_id")
-      .repartition($"cluster_id")
-      .sortWithinPartitions($"vec_id")
-      .write.mode("overwrite").partitionBy("cluster_id")
-      .parquet(IndexStore.genPath(indexDir, g))
-    IndexStore.publish(indexDir, g)
-    IndexStore.sweep(indexDir)
-  }
+  /** The IVF artifact for [[IndexStore]]'s lifecycle verbs: the lists
+    * ARE the generation root, clustered by cluster_id, and fresh rows
+    * are assigned to the caller's FROZEN centroids by the one shared
+    * pipeline ([[ivfAssigned]]) — the quantizer is an artifact, not
+    * re-trained per batch; re-training is a deliberate offline event
+    * that rebuilds. Cost of a fold: one pass over the LISTS (ids +
+    * vectors), never the source corpus, plus delta-sized assignment. */
+  private val Ivf = IndexStore.Family[DataFrame]("vec_id",
+    Seq(IndexStore.Lane("", IndexStore.Clustered(Seq("cluster_id"), Seq("vec_id")))),
+    derive = (vecs, centroids, _) => Seq(ivfAssigned(vecs, centroids)))
 
-  /** Record deletions against a standing IVF index (the takedown /
-    * re-crawl `removed` set c07's snapshot diff computes): vec ids
-    * append as TOMBSTONES under the current generation
-    * ([[IndexStore.appendTombstones]] — standing list files
-    * byte-untouched, cost ∝ |removals|). [[ivfTopKFromIndex]] masks
-    * tombstoned vectors with one broadcast anti-join (removals are
-    * delta-sized), so delete → serve ≡ serve of an index rebuilt
-    * without the removed vectors — hash-checked by the registered s31
-    * entry and spec-pinned; double-deletes and absent ids are no-ops.
-    * [[compactIvfIndex]] physically drops dead rows and reclaims the
-    * lane; `compactEvery` counts deletes toward the same
-    * auto-compaction cadence as appends. */
+  def compactIvfIndex(s: SparkSession, indexDir: String): Unit =
+    IndexStore.compact(Ivf, s, indexDir)
+
+  /** Tombstone vec ids; [[ivfTopKFromIndex]] masks them, so delete →
+    * serve ≡ serve of an index rebuilt without them — hash-checked by
+    * the registered s31 entry. */
   def deleteFromIvfIndex(removedIds: DataFrame, indexDir: String,
-                         compactEvery: Int = 0): Unit = {
-    IndexStore.appendTombstones(removedIds, indexDir, "vec_id")
-    if (compactEvery > 0 && IndexStore.bumpAppends(indexDir) % compactEvery == 0)
-      compactIvfIndex(removedIds.sparkSession, indexDir)
-  }
+                         compactEvery: Int = 0): Unit =
+    IndexStore.delete(Ivf, removedIds, indexDir, compactEvery)
 
-  /** UPDATE changed vectors in a standing IVF index — the third
-    * lifecycle verb (r17), for the `changed` set c07's snapshot diff
-    * computes (a re-crawled doc re-embeds; its old vector must stop
-    * serving the moment the new one starts). Append alone would serve
-    * both revisions and delete + append cannot run as two steps (the
-    * id-keyed tombstone would mask the re-added rows), so update FOLDS
-    * A GENERATION: gen N+1 = standing lists minus (tombstoned ∪
-    * changed) ids, plus the revisions assigned to the same FROZEN
-    * centroids by the one shared assignment pipeline — exactly what a
-    * rebuild over the revised corpus writes. One atomic `_current`
-    * flip: readers see pre- or post-update, never the torn middle;
-    * standing tombstones fold in (reclaim rides along). Cost: one
-    * linear read+write of the LISTS + delta-sized assignment — the
-    * standing mass is never re-assigned ([[updateInLshIndex]]'s
-    * economics on the vector modality). Edge semantics likewise: an
-    * absent id inserts, a tombstoned id revives, and serve ≡
-    * rebuild-with-new-revisions is IndexUpdateSpec-pinned. */
+  /** A re-crawled doc re-embeds: its old vector stops serving the
+    * moment the new one starts ([[IndexStore.update]]). */
   def updateInIvfIndex(changed: DataFrame, centroids: DataFrame,
                        indexDir: String): Unit =
-    syncIvfIndex(changed, changed.sparkSession.range(0)
-      .select(org.apache.spark.sql.functions.col("id").as("vec_id")),
-      centroids, indexDir)
+    IndexStore.update(Ivf, changed, centroids, indexDir)
 
-  /** Apply a FULL c07 snapshot diff in ONE atomic generation — the
-    * composed lifecycle verb on the vector artifact
-    * ([[graft.operators.Dedup.syncLshIndex]]'s contract): upserts
-    * assign against the frozen centroids, removed ids fold out.
-    * Malformed-batch resolution (r18, the shared sync contract): an id
-    * in BOTH sets resolves delete-wins; same-id duplicate upserts fold
-    * one deterministic revision ([[IndexStore.latestRevision]]). */
   def syncIvfIndex(upserts0: DataFrame, removed: DataFrame,
-                   centroids: DataFrame, indexDir: String): Unit = {
-    val s = upserts0.sparkSession
-    import s.implicits._
-    IndexStore.adoptLegacy(indexDir)
-    val src = IndexStore.currentPath(indexDir)
-    val g = IndexStore.nextGen(indexDir)
-    // r19: resolved upserts materialized once (diff-sized) — referenced
-    // by the dead mask and the assignment pipeline
-    val upserts = IndexStore.latestRevision(upserts0, "vec_id")
-      .join(broadcast(removed.select($"vec_id")), Seq("vec_id"), "left_anti")
-      .localCheckpoint()
-    val dead = IndexStore.readTombstones(s, indexDir, "vec_id")
-      .unionByName(removed.select($"vec_id"))
-      .unionByName(upserts.select($"vec_id")).distinct().localCheckpoint()
-    s.read.parquet(src)
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-      .unionByName(ivfAssigned(upserts, centroids))
-      .repartition($"cluster_id")
-      .sortWithinPartitions($"vec_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cluster_id")
-      .parquet(IndexStore.genPath(indexDir, g))
-    IndexStore.publish(indexDir, g)
-    IndexStore.sweep(indexDir)
-    graft.Scratch.releaseNow(dead)
-    graft.Scratch.releaseNow(upserts)
-  }
+                   centroids: DataFrame, indexDir: String): Unit =
+    IndexStore.sync(Ivf, upserts0, removed, centroids, indexDir)
 
   /** The one assignment pipeline every lifecycle verb runs — a single
     * body so no path can silently diverge from the rebuild path (their
@@ -2013,17 +1850,6 @@ object Similarity {
       .withColumn("rn", row_number().over(wc))
       .filter($"rn" === 1)
       .select($"vec_id", $"v", $"nrm", $"cluster_id")
-  }
-
-  private def writeIvfLists(vecs: DataFrame, centroids: DataFrame,
-                            outDir: String,
-                            mode: org.apache.spark.sql.SaveMode): Unit = {
-    val s = vecs.sparkSession
-    import s.implicits._
-    ivfAssigned(vecs, centroids)
-      .repartition($"cluster_id")
-      .sortWithinPartitions($"vec_id")
-      .write.mode(mode).partitionBy("cluster_id").parquet(outDir)
   }
 
   /** Serve top-k from a persisted [[writeIvfIndex]] layout. The probed
@@ -2168,13 +1994,8 @@ object Similarity {
     * and the registered entry hash-checks against s03's golden — the
     * third same-answer check on this path after rebuild ≡ in-plan). */
   def appendToIvfIndex(delta: DataFrame, centroids: DataFrame,
-                       indexDir: String, compactEvery: Int = 0): Unit = {
-    writeIvfLists(delta, centroids, IndexStore.currentPath(indexDir),
-      org.apache.spark.sql.SaveMode.Append)
-    // every-K-appends auto-compaction (the appendToLshIndex knob)
-    if (compactEvery > 0 && IndexStore.bumpAppends(indexDir) % compactEvery == 0)
-      compactIvfIndex(delta.sparkSession, indexDir)
-  }
+                       indexDir: String, compactEvery: Int = 0): Unit =
+    IndexStore.append(Ivf, delta, centroids, indexDir, compactEvery)
 
   /** Registered: standing index (first ~80% of the id range) + delta
     * append (last ~20%), then s03's exact query served through the
@@ -2679,13 +2500,6 @@ object Similarity {
 
   // ---- s29: filtered serving from a label-partitioned persisted index ----
 
-  /** Write the corpus as a (label, cluster_id)-partitioned exact-vector
-    * layout — the persisted form of s25's filtered search, closing the
-    * composition s25's scaladoc promises: the filter attribute becomes
-    * the OUTER partition key, so a filtered query prunes to its label's
-    * directory subtree at planning time, and within a label the s17
-    * probe machinery applies unchanged on the inner cluster_id key.
-    * [[IndexStore]] generations, the writeIvfIndex discipline. */
   /** The labeled layout's one assignment pipeline (the [[ivfAssigned]]
     * discipline on the two-level key). */
   private def labeledIvfAssigned(vecs: DataFrame,
@@ -2702,111 +2516,41 @@ object Similarity {
       .select($"vec_id", $"label", $"v", $"nrm", $"cluster_id")
   }
 
+  /** Write the corpus as a (label, cluster_id)-partitioned exact-vector
+    * layout — the persisted form of s25's filtered search, closing the
+    * composition s25's scaladoc promises: the filter attribute becomes
+    * the OUTER partition key, so a filtered query prunes to its label's
+    * directory subtree at planning time, and within a label the s17
+    * probe machinery applies unchanged on the inner cluster_id key.
+    * Lifecycle through [[IndexStore]]'s verbs ([[LabeledIvf]]). */
   def writeLabeledIvfIndex(vecs: DataFrame, centroids: DataFrame,
-                           dir: String): Unit = {
-    val s = vecs.sparkSession
-    import s.implicits._
-    val g = IndexStore.nextGen(dir)
-    labeledIvfAssigned(vecs, centroids)
-      .repartition($"label", $"cluster_id")
-      .sortWithinPartitions($"vec_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("label", "cluster_id")
-      .parquet(IndexStore.genPath(dir, g))
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-  }
+                           dir: String): Unit =
+    IndexStore.write(LabeledIvf, vecs, centroids, dir)
 
-  /** UPDATE changed vectors in the labeled layout — the
-    * [[updateInIvfIndex]] contract on the filtered modality (a
-    * re-crawled doc can change its LABEL as well as its vector; the
-    * fold replaces the whole row, so both move together atomically). */
+  /** The labeled layout for [[IndexStore]]'s lifecycle verbs: [[Ivf]]
+    * on the two-level (label, cluster_id) key. A re-crawled doc can
+    * change its LABEL as well as its vector; a fold replaces the whole
+    * row, so both move together atomically — and the revision pick
+    * ([[IndexStore.latestRevision]]) takes whole rows too. */
+  private val LabeledIvf = IndexStore.Family[DataFrame]("vec_id",
+    Seq(IndexStore.Lane("",
+      IndexStore.Clustered(Seq("label", "cluster_id"), Seq("vec_id")))),
+    derive = (vecs, centroids, _) => Seq(labeledIvfAssigned(vecs, centroids)))
+
   def updateInLabeledIvfIndex(changed0: DataFrame, centroids: DataFrame,
-                              dir: String): Unit = {
-    val s = changed0.sparkSession
-    import s.implicits._
-    IndexStore.adoptLegacy(dir)
-    val src = IndexStore.currentPath(dir)
-    val g = IndexStore.nextGen(dir)
-    // same-id duplicate revisions fold ONE deterministic winner —
-    // label and vector move together because the whole ROW wins (r18,
-    // the shared sync-verb contract)
-    val changed = IndexStore.latestRevision(changed0, "vec_id")
-    val dead = IndexStore.readTombstones(s, dir, "vec_id")
-      .unionByName(changed.select($"vec_id")).distinct().localCheckpoint()
-    foldLabeledGeneration(src, dir, g, changed, centroids, dead)
-  }
+                              dir: String): Unit =
+    IndexStore.update(LabeledIvf, changed0, centroids, dir)
 
-  /** Apply a FULL snapshot diff in ONE atomic generation on the
-    * labeled layout — [[syncIvfIndex]]'s contract with the two-level
-    * (label, cluster_id) key; shares the family's r18 malformed-batch
-    * resolution (delete-wins, deterministic same-id dedup). */
   def syncLabeledIvfIndex(upserts0: DataFrame, removed: DataFrame,
-                          centroids: DataFrame, dir: String): Unit = {
-    val s = upserts0.sparkSession
-    import s.implicits._
-    IndexStore.adoptLegacy(dir)
-    val src = IndexStore.currentPath(dir)
-    val g = IndexStore.nextGen(dir)
-    // r19: resolved upserts materialized once (diff-sized) — referenced
-    // by the dead mask and the labeled assignment
-    val upserts = IndexStore.latestRevision(upserts0, "vec_id")
-      .join(broadcast(removed.select($"vec_id")), Seq("vec_id"), "left_anti")
-      .localCheckpoint()
-    val dead = IndexStore.readTombstones(s, dir, "vec_id")
-      .unionByName(removed.select($"vec_id"))
-      .unionByName(upserts.select($"vec_id")).distinct().localCheckpoint()
-    foldLabeledGeneration(src, dir, g, upserts, centroids, dead)
-    graft.Scratch.releaseNow(upserts)
-  }
+                          centroids: DataFrame, dir: String): Unit =
+    IndexStore.sync(LabeledIvf, upserts0, removed, centroids, dir)
 
-  /** The one labeled-layout generation fold update and sync share:
-    * standing rows minus the dead ids plus the upserts' freshly
-    * assigned rows, atomic publish, tombstone lane reclaimed. */
-  private def foldLabeledGeneration(src: String, dir: String, g: Long,
-      upserts: DataFrame, centroids: DataFrame, dead: DataFrame): Unit = {
-    val s = upserts.sparkSession
-    import s.implicits._
-    s.read.parquet(src)
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-      .unionByName(labeledIvfAssigned(upserts, centroids))
-      .repartition($"label", $"cluster_id")
-      .sortWithinPartitions($"vec_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("label", "cluster_id")
-      .parquet(IndexStore.genPath(dir, g))
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-    graft.Scratch.releaseNow(dead)
-  }
-
-  /** Record deletions against a standing labeled index — the
-    * [[deleteFromIvfIndex]] contract on the filtered layout (tombstone
-    * lane, serve-time broadcast anti-join mask, physical reclaim at
-    * [[compactLabeledIvfIndex]]). */
   def deleteFromLabeledIvfIndex(removedIds: DataFrame, dir: String,
-                                compactEvery: Int = 0): Unit = {
-    IndexStore.appendTombstones(removedIds, dir, "vec_id")
-    if (compactEvery > 0 && IndexStore.bumpAppends(dir) % compactEvery == 0)
-      compactLabeledIvfIndex(removedIds.sparkSession, dir)
-  }
+                                compactEvery: Int = 0): Unit =
+    IndexStore.delete(LabeledIvf, removedIds, dir, compactEvery)
 
-  /** Compact the labeled layout: fold per-(label, cluster) files,
-    * tombstones folded in and reclaimed — [[compactIvfIndex]] on the
-    * two-level key. */
-  def compactLabeledIvfIndex(s: SparkSession, dir: String): Unit = {
-    import s.implicits._
-    IndexStore.adoptLegacy(dir)
-    val src = IndexStore.currentPath(dir)
-    val g = IndexStore.nextGen(dir)
-    IndexStore.maskTombstonesAt(s.read.parquet(src), src, "vec_id")
-      .repartition($"label", $"cluster_id")
-      .sortWithinPartitions($"vec_id")
-      .write.mode("overwrite").partitionBy("label", "cluster_id")
-      .parquet(IndexStore.genPath(dir, g))
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-  }
+  def compactLabeledIvfIndex(s: SparkSession, dir: String): Unit =
+    IndexStore.compact(LabeledIvf, s, dir)
 
   /** Exact filtered top-k served from the labeled layout: the query
     * set's labels collect to a literal `isin` partition filter (≤ the

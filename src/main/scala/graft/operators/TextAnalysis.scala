@@ -1237,160 +1237,70 @@ object TextAnalysis {
     * per (q_id, token) BEFORE self-match exclusion), so appends and
     * deletes need no df bookkeeping.
     *
-    * Full lifecycle, the artifact family's contract: [[appendToBm25Index]]
-    * admits a delta at delta cost (new files inside existing bucket
-    * dirs + one stats partial; standing files byte-untouched — serve ≡
-    * rebuild bit-identically because tf/dl are per-doc-independent and
-    * df/avgdl are derived from row/partial sums). [[deleteFromBm25Index]]
-    * tombstones doc ids (serve masks them with one broadcast anti-join;
-    * the stats lane takes a NEGATIVE partial for the newly-dead docs'
-    * length mass, derived from their own postings rows). [[compactBm25Index]]
-    * folds bucket files, drops dead rows, recomputes stats from the
-    * live postings (healing any crash-window stats drift) and reclaims
-    * the tombstone lane. Serve ≡ in-plan t25 bit-identically (same
-    * expressions, integer tf/dl round-tripping parquet exactly) — the
-    * registered entry hash-checks the whole persisted round-trip
-    * against t25's OWN golden (the s17≡s03 precedent); lifecycle
-    * equivalences are spec-pinned in Bm25IndexSpec. */
-  def writeBm25Index(docs: DataFrame, dir: String): Unit = {
-    val s = docs.sparkSession
+    * Lifecycle through [[IndexStore]]'s verbs (the [[Bm25]] descriptor):
+    * serve ≡ rebuild bit-identically after any of them, because tf/dl are
+    * per-doc-independent and df/avgdl are derived from row and partial
+    * sums. Serve ≡ in-plan t25 bit-identically (same expressions,
+    * integer tf/dl round-tripping parquet exactly) — the registered
+    * entry hash-checks the whole persisted round-trip against t25's OWN
+    * golden (the s17≡s03 precedent); lifecycle equivalences are
+    * spec-pinned in Bm25IndexSpec. */
+  def writeBm25Index(docs: DataFrame, dir: String): Unit =
+    IndexStore.write(Bm25, docs, (), dir)
+
+  /** Length mass of a doc set's postings rows as one (n_docs, sum_dl)
+    * row — the stats lane recomputed from postings. */
+  private def bm25StatsOf(postings: DataFrame): DataFrame = {
+    val s = postings.sparkSession
     import s.implicits._
-    val g = IndexStore.nextGen(dir)
-    val root = IndexStore.genPath(dir, g)
-    bm25Postings(docs)
-      .repartition($"bucket").sortWithinPartitions($"token", $"doc_id")
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$root/postings")
-    bm25StatsPartial(docs).write.mode("overwrite").parquet(s"$root/stats")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
+    postings.select($"doc_id", $"dl").distinct()
+      .agg(count(lit(1)).as("n_docs"),
+        coalesce(sum($"dl"), lit(0L)).cast("long").as("sum_dl"))
   }
 
-  /** Admit a delta of documents: postings append into the matching
-    * bucket directories (dynamic-partition append, standing files
-    * untouched), stats lane takes one more partial. Cost ∝ |delta|. */
-  def appendToBm25Index(delta: DataFrame, dir: String,
-                        compactEvery: Int = 0): Unit = {
-    val s = delta.sparkSession
-    import s.implicits._
-    val root = IndexStore.currentPath(dir)
-    bm25Postings(delta)
-      .repartition($"bucket").sortWithinPartitions($"token", $"doc_id")
-      .write.mode("append").partitionBy("bucket").parquet(s"$root/postings")
-    bm25StatsPartial(delta).write.mode("append").parquet(s"$root/stats")
-    if (compactEvery > 0 && IndexStore.bumpAppends(dir) % compactEvery == 0)
-      compactBm25Index(s, dir)
-  }
-
-  /** Record deletions: tombstone the doc ids and append one NEGATIVE
-    * stats partial for the newly-dead docs (their dl read from their
-    * own postings rows — one semi-scan, delta-sized output). Ids
-    * already tombstoned are excluded first, so double-deletes and
-    * absent ids are no-ops (no double-subtraction). Tombstones write
-    * BEFORE the stats correction: a crash between the two can only
-    * leave avgdl counting masked docs (a bounded, serve-safe drift
-    * that the next [[compactBm25Index]] recomputation heals), never
+  /** The BM25 artifact for [[IndexStore]]'s lifecycle verbs: postings
+    * clustered by term-hash bucket (the serve path prunes on it), plus
+    * the stats lane of summable (n_docs, sum_dl) partials. A write or
+    * append adds the docs' partial. A fold RECOMPUTES stats from the
+    * new postings — dl changes with a revision, and the recompute heals
+    * any crash-window partial drift. A delete appends one NEGATIVE
+    * partial for the newly-dead docs, read from their own postings rows
+    * (ids already tombstoned are excluded first, so a double delete
+    * never subtracts twice). Tombstones write BEFORE that correction:
+    * a crash between the two can only leave avgdl counting masked docs
+    * (a bounded, serve-safe drift the next fold heals), never
     * un-masked dead docs. */
+  private val Bm25 = IndexStore.Family[Unit]("doc_id",
+    Seq(IndexStore.Lane("postings",
+      IndexStore.Clustered(Seq("bucket"), Seq("token", "doc_id")))),
+    derive = (docs, _, _) => Seq(bm25Postings(docs)),
+    derived = Some(IndexStore.Derived("stats",
+      partial = (docs, _) => bm25StatsPartial(docs),
+      fold = (s, _, dst, _, _) => bm25StatsOf(s.read.parquet(s"$dst/postings")),
+      deleted = Some((root, newDead) =>
+        bm25StatsOf(newDead.sparkSession.read.parquet(s"$root/postings")
+            .join(broadcast(newDead), Seq("doc_id"), "left_semi"))
+          .select((-col("n_docs")).as("n_docs"), (-col("sum_dl")).as("sum_dl"))))))
+
+  def appendToBm25Index(delta: DataFrame, dir: String,
+                        compactEvery: Int = 0): Unit =
+    IndexStore.append(Bm25, delta, (), dir, compactEvery)
+
   def deleteFromBm25Index(removedIds: DataFrame, dir: String,
-                          compactEvery: Int = 0): Unit = {
-    val s = removedIds.sparkSession
-    import s.implicits._
-    val root = IndexStore.currentPath(dir)
-    val newDead = removedIds.select($"doc_id").distinct()
-      .join(broadcast(IndexStore.readTombstones(s, dir, "doc_id")),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint() // consumed by the tombstone write AND the scan
-    IndexStore.appendTombstones(newDead, dir, "doc_id")
-    s.read.parquet(s"$root/postings")
-      .join(broadcast(newDead), Seq("doc_id"), "left_semi")
-      .select($"doc_id", $"dl").distinct()
-      .agg((-count(lit(1))).cast("long").as("n_docs"),
-        coalesce(-sum($"dl"), lit(0L)).cast("long").as("sum_dl"))
-      .write.mode("append").parquet(s"$root/stats")
-    graft.Scratch.releaseNow(newDead) // both consumers above are done
-    if (compactEvery > 0 && IndexStore.bumpAppends(dir) % compactEvery == 0)
-      compactBm25Index(s, dir)
-  }
+                          compactEvery: Int = 0): Unit =
+    IndexStore.delete(Bm25, removedIds, dir, compactEvery)
 
-  /** UPDATE changed documents in a standing BM25 artifact — the third
-    * lifecycle verb (r17), for c07's `changed` set: a rewritten doc
-    * must score with its NEW term frequencies and length the moment it
-    * serves again. Append would double-post it and delete + append
-    * cannot run as two steps (the id-keyed tombstone would mask the
-    * re-added postings), so update FOLDS A GENERATION (the
-    * [[graft.operators.Dedup.updateInLshIndex]] discipline): gen N+1 =
-    * standing postings minus (tombstoned ∪ changed) ids plus the
-    * revisions' freshly-derived postings, stats RECOMPUTED from the
-    * live postings (what [[compactBm25Index]] does — dl changes with
-    * the revision, and the recompute heals any crash-window partial
-    * drift for free), one atomic publish. Serve ≡
-    * rebuild-with-new-revisions; IndexUpdateSpec pins it. */
+  /** A rewritten doc scores with its NEW term frequencies and length
+    * the moment it serves again ([[IndexStore.update]]). */
   def updateInBm25Index(changed: DataFrame, dir: String): Unit =
-    syncBm25Index(changed, changed.sparkSession.range(0)
-      .select(org.apache.spark.sql.functions.col("id").as("doc_id")), dir)
+    IndexStore.update(Bm25, changed, (), dir)
 
-  /** Apply a FULL c07 snapshot diff in ONE atomic generation — the
-    * composed lifecycle verb on the lexical artifact
-    * ([[graft.operators.Dedup.syncLshIndex]]'s contract): `upserts` =
-    * changed revisions ∪ added docs, `removed` = dead ids; sync ≡
-    * rebuild over (standing ∖ removed ∖ changed) ∪ upserts,
-    * IndexUpdateSpec-pinned. Malformed-batch resolution (r18): an id
-    * in BOTH sets resolves delete-wins, same-id duplicate upserts fold
-    * one deterministic revision ([[graft.operators.Dedup.syncLshIndex]]'s
-    * shared contract, via [[IndexStore.latestRevision]]). */
   def syncBm25Index(upserts0: DataFrame, removed: DataFrame,
-                    dir: String): Unit = {
-    val s = upserts0.sparkSession
-    import s.implicits._
-    IndexStore.adoptLegacy(dir)
-    val src = IndexStore.currentPath(dir)
-    val g = IndexStore.nextGen(dir)
-    val root = IndexStore.genPath(dir, g)
-    // r19: resolved upserts materialized once (diff-sized) — referenced
-    // by the dead mask and the postings derivation
-    val upserts = IndexStore.latestRevision(upserts0, "doc_id")
-      .join(broadcast(removed.select($"doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val dead = IndexStore.readTombstones(s, dir, "doc_id")
-      .unionByName(removed.select($"doc_id"))
-      .unionByName(upserts.select($"doc_id")).distinct().localCheckpoint()
-    s.read.parquet(s"$src/postings")
-      .join(broadcast(dead), Seq("doc_id"), "left_anti")
-      .unionByName(bm25Postings(upserts))
-      .repartition($"bucket").sortWithinPartitions($"token", $"doc_id")
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$root/postings")
-    s.read.parquet(s"$root/postings")
-      .select($"doc_id", $"dl").distinct()
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum($"dl"), lit(0L)).cast("long").as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$root/stats")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-    graft.Scratch.releaseNow(dead)
-    graft.Scratch.releaseNow(upserts)
-  }
+                    dir: String): Unit =
+    IndexStore.sync(Bm25, upserts0, removed, (), dir)
 
-  /** Fold bucket files, drop tombstoned rows, recompute the stats lane
-    * from the live postings (one (doc_id, dl) row per doc — exactly
-    * what a rebuild writes, healing any crash-window partial drift),
-    * and reclaim the tombstone lane — the artifact family's compaction
-    * contract on the lexical lane. */
-  def compactBm25Index(s: SparkSession, dir: String): Unit = {
-    import s.implicits._
-    IndexStore.adoptLegacy(dir)
-    val src = IndexStore.currentPath(dir)
-    val g = IndexStore.nextGen(dir)
-    val root = IndexStore.genPath(dir, g)
-    IndexStore.maskTombstonesAt(s.read.parquet(s"$src/postings"), src, "doc_id")
-      .repartition($"bucket").sortWithinPartitions($"token", $"doc_id")
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$root/postings")
-    s.read.parquet(s"$root/postings")
-      .select($"doc_id", $"dl").distinct()
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum($"dl"), lit(0L)).cast("long").as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$root/stats")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-  }
+  def compactBm25Index(s: SparkSession, dir: String): Unit =
+    IndexStore.compact(Bm25, s, dir)
 
   /** Serve BM25 top-k from a persisted [[writeBm25Index]] layout —
     * [[bm25TopK]]'s expressions verbatim over the pruned postings.

@@ -42,6 +42,21 @@ trait EsBulkClient extends Serializable {
   def bulkOutcome(actions: Seq[BulkAction]): BulkOutcome = { bulk(actions); BulkOutcome.Ok }
 }
 
+object EsBulkClient {
+  /** The `_bulk` ndjson body, both transports' wire format: per action an
+    * `{"index":{…}}` line, then the source line. Lines end in `\n`, which
+    * is why [[BulkBuffer.add]] rejects a source holding a raw `\n`. */
+  private[ingest] def body(actions: Seq[BulkAction]): String = {
+    val sb = new java.lang.StringBuilder(actions.size * 128)
+    actions.foreach { a =>
+      sb.append("""{"index":{"_index":""").append(JsonStr.quote(a.indexId))
+        .append(""","_id":""").append(JsonStr.quote(a.docId)).append("}}\n")
+      sb.append(a.source).append('\n')
+    }
+    sb.toString
+  }
+}
+
 /** Filesystem-simulated Elasticsearch bulk endpoint, wire-faithful to
   * the `_bulk` ndjson format: each action is an `{"index":{...}}`
   * metadata line followed by the source line. Files are named with a
@@ -95,12 +110,7 @@ final class FileEsBulkClient(dir: String, tsField: String = "ts",
 
   override def bulk(actions: Seq[BulkAction]): Unit = {
     if (actions.isEmpty) return
-    val sb = new java.lang.StringBuilder(actions.size * 128)
-    actions.foreach { a =>
-      sb.append("""{"index":{"_index":""").append(JsonStr.quote(a.indexId))
-        .append(""","_id":""").append(JsonStr.quote(a.docId)).append("}}\n")
-      sb.append(a.source).append('\n')
-    }
+    val bytes = EsBulkClient.body(actions).getBytes(UTF_8)
     val p = dirPath
     val name = f"bulk-${epochMicros()}%020d-$clientId-${counter.getAndIncrement()}%06d.ndjson"
     val bulkPath = p.resolve(name)
@@ -117,11 +127,11 @@ final class FileEsBulkClient(dir: String, tsField: String = "ts",
     // past rows that were never readable)
     if (atomicPublish) {
       val tmp = p.resolve(name + ".tmp")
-      Files.write(tmp, sb.toString.getBytes(UTF_8),
+      Files.write(tmp, bytes,
         StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
       Files.move(tmp, bulkPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } else {
-      Files.write(bulkPath, sb.toString.getBytes(UTF_8),
+      Files.write(bulkPath, bytes,
         StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
     }
     onPublish(name)
@@ -141,12 +151,7 @@ final class FlakyEsBulkClient(inner: EsBulkClient, failures: Int) extends EsBulk
   }
 }
 
-/** Public alias for cross-package use (sources.TsOffset json). */
-object JsonStrPublic {
-  def quote(s: String): String = JsonStr.quote(s)
-}
-
-private[ingest] object JsonStr {
+private[graft] object JsonStr {
   def quote(s: String): String = {
     val sb = new java.lang.StringBuilder("\"")
     s.foreach {

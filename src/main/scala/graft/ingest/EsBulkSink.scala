@@ -36,9 +36,24 @@ final class BulkBuffer(
     * with a nil body — we skip null/absent sources the same way). */
   def add(a: BulkAction): Unit = {
     if (a.source != null && a.docId != null) {
-      buf += a
-      if (buf.size >= maxActions || clock() - lastFlush >= flushIntervalMs) flush()
+      // `_bulk` is newline-delimited: a raw line break would split the
+      // source across lines and shift every later action of the request
+      if (a.source.indexOf('\n') >= 0)
+        reject(Seq(BulkItemFailure(a, 400, "source contains a raw line break; " +
+          "serialize the source on one line (escape newlines as \\n)")))
+      else {
+        buf += a
+        if (buf.size >= maxActions || clock() - lastFlush >= flushIntervalMs) flush()
+      }
     }
+  }
+
+  private def reject(rejected: Seq[BulkItemFailure]): Unit = {
+    BulkBuffer.rejectedTotal.addAndGet(rejected.size)
+    BulkBuffer.log.warning(
+      s"${rejected.size} bulk item(s) permanently rejected " +
+      s"(first: status ${rejected.head.status} ${rejected.head.reason.take(120)})")
+    rejected.foreach(deadLetter)
   }
 
   /** Per-item retry (reference BulkProcessor semantics, core.clj:74-78):
@@ -72,14 +87,7 @@ final class BulkBuffer(
           catch { case e: Exception => Left(e) }
         outcome match {
           case Right(o) =>
-            if (o.rejected.nonEmpty) {
-              BulkBuffer.rejectedTotal.addAndGet(o.rejected.size)
-              BulkBuffer.log.warning(
-                s"${o.rejected.size} bulk item(s) permanently rejected " +
-                s"(first: status ${o.rejected.head.status} " +
-                s"${o.rejected.head.reason.take(120)})")
-            }
-            o.rejected.foreach(deadLetter)
+            if (o.rejected.nonEmpty) reject(o.rejected)
             if (o.retryable.isEmpty) pending = Nil
             else {
               if (attempt >= maxRetries)
@@ -238,8 +246,7 @@ object EsSimCompact {
   def run(spark: SparkSession, srcDir: String, dstDir: String,
           maxActions: Int = 5000, tsField: String = "ts"): Unit = {
     import spark.implicits._
-    val current = EsSimStore.read(spark, srcDir)
-      .select($"indexId", $"docId", $"source").as[IngestRecord]
+    val current = EsSimStore.read(spark, srcDir).as[IngestRecord]
     EsBulkSink.write(current, dstDir, maxActions = maxActions, tsField = tsField)
   }
 
@@ -362,8 +369,7 @@ object EsSimCompact {
     val maxName = inputs.map(_.getFileName.toString).max
     // names are bulk-<micros %020d>-<client>-<counter>.ndjson
     val micros = maxName.stripPrefix("bulk-").take(20).toLong
-    val resolved = EsSimStore.readOf(spark, inputs.map(_.toString))
-      .select($"indexId", $"docId", $"source").as[IngestRecord]
+    val resolved = EsSimStore.readOf(spark, inputs.map(_.toString)).as[IngestRecord]
     // 3. publish compacted files pinned to the snapshot's replay slot.
     // The published names come back via an accumulator (only SUCCESSFUL
     // task attempts contribute — foreachPartition is an action, so a
@@ -426,52 +432,41 @@ object EsSimCompact {
   * document semantics, which is what makes re-running a copy idempotent
   * rather than duplicating, SURVEY B4).
   *
-  * Concurrency note: these BATCH reads glob the directory once and are
-  * not safe against an [[EsSimCompact.inPlace]] run racing them (the
-  * glob can resolve before the compacted file publishes and read after
-  * the inputs retire). The STREAMING source is the concurrent-read
-  * path — its per-file tombstone fallback and layout-independent
-  * cursor make it compaction-safe; batch readers should run when
-  * maintenance is quiesced (Main serializes the two inside
-  * foreachBatch). */
+  * Each bulk file is parsed once, on an executor, by the source's own
+  * parser ([[graft.sources.EsSimSource.parseBulkFile]]); the driver only
+  * lists the directory. Every executor must therefore see the store's
+  * directory, as the streaming source's readers already do.
+  *
+  * Concurrency note: a read lists the directory once, and a listed file
+  * that [[EsSimCompact.inPlace]] retires before a task opens it is read
+  * from its `.gone` tombstone. A read racing a compaction therefore
+  * sees each folded input either as itself or through its fold — the
+  * same resolved state — provided it finishes within the compactor's
+  * grace period; past it the tombstone is swept and the read fails. */
 object EsSimStore {
 
-  /** All actions, with their arrival sequence.
-    *
-    * Line numbers come from `wholetext` + posexplode — the ordinal
-    * position inside the file, which survives any input-split layout.
-    * (row_number over monotonically_increasing_id does NOT: a bulk file
-    * split across input partitions can interleave ids across splits and
-    * pair meta lines with the wrong source lines.) Bulk files are small
-    * by construction — the writer flushes every `maxActions` docs, a
-    * few hundred KB at the 1024 default — so a
-    * one-row-per-file read stays balanced; posexplode fans back out to
-    * one row per line before any heavy lifting. */
-  def actions(spark: SparkSession, dir: String): DataFrame =
-    actionsOf(spark, Seq(s"$dir/bulk-*.ndjson"))
+  /** All actions, with their arrival sequence: `file` is the bulk file's
+    * path and `slot` the action's ordinal inside it. A missing `dir`
+    * fails naming it; an existing empty one reads as zero rows. */
+  def actions(spark: SparkSession, dir: String): DataFrame = {
+    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)))
+      throw new java.io.FileNotFoundException(s"ES-sim store does not exist: $dir")
+    actionsOf(spark, graft.sources.EsSimStats.list(dir).map(_.toString))
+  }
 
   /** Same, over an explicit file list — in-place compaction must read
     * exactly the snapshot of files it will retire, not whatever the
-    * glob resolves to by the time the job runs (a live sink keeps
+    * directory holds by the time the job runs (a live sink keeps
     * appending new files, which must NOT be folded-then-retired by a
-    * compaction pass that started before they existed). */
+    * compaction pass that started before they existed). Files are
+    * split into at most 2 × core-count tasks, as the batch source does. */
   def actionsOf(spark: SparkSession, paths: Seq[String]): DataFrame = {
     import spark.implicits._
-    val files = spark.read.option("wholetext", "true").textFile(paths: _*)
-      .withColumn("file", input_file_name())
-    val lines = files
-      .select($"file", posexplode(split($"value", "\n")).as(Seq("pos", "value")))
-      .filter(length($"value") > 0) // drop the trailing-newline empty
-    // meta lines carry _index/_id at even positions; the source line
-    // follows at the next odd position — same slot = pos / 2
-    val metas = lines.filter($"pos" % 2 === 0)
-      .select($"file", ($"pos" / 2).cast("int").as("slot"),
-        get_json_object($"value", "$.index._index").as("indexId"),
-        get_json_object($"value", "$.index._id").as("docId"))
-    val sources = lines.filter($"pos" % 2 === 1)
-      .select($"file", ($"pos" / 2).cast("int").as("slot"), $"value".as("source"))
-    metas.join(sources, Seq("file", "slot"))
-      .select($"file", $"slot", $"indexId", $"docId", $"source")
+    val slices = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism * 2))
+    spark.sparkContext.parallelize(paths, slices).flatMap { f =>
+      graft.sources.EsSimSource.parseBulkFile(java.nio.file.Paths.get(f), "ts", parseBody = false)
+        .iterator.zipWithIndex.map { case (d, slot) => (f, slot, d.indexId, d.docId, d.source) }
+    }.toDF("file", "slot", "indexId", "docId", "source")
   }
 
   /** Current index contents after upsert-by-id replay. */

@@ -108,16 +108,10 @@ final class HttpEsBulkClient(
     * batch), throws on transport error or non-2xx. */
   private def send(actions: Seq[BulkAction]): String = {
     if (actions.isEmpty) return null
-    val sb = new java.lang.StringBuilder(actions.size * 128)
-    actions.foreach { a =>
-      sb.append("""{"index":{"_index":""").append(JsonStr.quote(a.indexId))
-        .append(""","_id":""").append(JsonStr.quote(a.docId)).append("}}\n")
-      sb.append(a.source).append('\n')
-    }
     val base = baseUrls(((next.getAndIncrement() % baseUrls.size) + baseUrls.size).toInt % baseUrls.size)
     val builder = HttpRequest.newBuilder(URI.create(s"$base/_bulk"))
       .timeout(Duration.ofMillis(requestTimeoutMs))
-      .POST(HttpRequest.BodyPublishers.ofString(sb.toString, UTF_8))
+      .POST(HttpRequest.BodyPublishers.ofString(EsBulkClient.body(actions), UTF_8))
     headers.foreach { case (k, v) => builder.header(k, v) }
     val resp = http.send(builder.build(), HttpResponse.BodyHandlers.ofString(UTF_8))
     val code = resp.statusCode()

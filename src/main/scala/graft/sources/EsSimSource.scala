@@ -86,20 +86,10 @@ object EsSimSource {
     StructField("source", StringType, nullable = false),
     StructField("ts", TimestampType, nullable = true)))
 
-  /** Cursor position used for docs with no parsable ts: they sort first. */
-  val NullTs: Long = graft.ingest.BulkStats.NullTs
-
   /** Test-visible count of bulk files actually opened by partition
     * readers (local mode shares the JVM) — lets specs assert that
     * file pruning really skipped non-matching files. */
   val filesOpened = new AtomicLong(0)
-
-  /** Parse the cursor field out of a JSON body: epoch-micros number or
-    * "yyyy-MM-dd HH:mm:ss[.ffffff]" string; null if absent/unparsable.
-    * (One definition, shared with the sink's sidecar writer, so the
-    * stats a sidecar records and the ts a reader emits always agree.) */
-  def parseTsMicros(node: com.fasterxml.jackson.databind.JsonNode): java.lang.Long =
-    graft.ingest.BulkStats.parseTsMicros(node)
 
   /** One indexed document action parsed from a bulk file. */
   final case class Doc(indexId: String, docId: String, source: String, tsMicros: java.lang.Long)
@@ -114,6 +104,12 @@ object EsSimSource {
     * the column-pruned fast path when neither `ts` nor a ts predicate
     * is in play.
     *
+    * Lines split on `\n` only, the `_bulk` delimiter: a raw `\r` is
+    * JSON whitespace and stays inside its source line. An action line
+    * that is not `{"index":{…}}`, or has no source line after it, means
+    * the pairing is broken (e.g. a source with a raw line break) — fail
+    * naming the file and line rather than emit shifted rows.
+    *
     * A file that vanished between planning and read was retired by
     * [[graft.ingest.EsSimCompact.inPlace]], which first moves it to
     * `<file>.gone` and only deletes the tombstone after a grace period
@@ -122,21 +118,32 @@ object EsSimSource {
     * (which must exceed the longest micro-batch) was violated: fail
     * loudly, never emit a silently-short batch. */
   def parseBulkFile(p: Path, tsField: String, parseBody: Boolean = true): Seq[Doc] = {
-    val lines =
-      try Files.readAllLines(p, UTF_8).asScala
+    val bytes =
+      try Files.readAllBytes(p)
       catch {
         case e: java.nio.file.NoSuchFileException =>
           val tomb = p.resolveSibling(p.getFileName.toString + ".gone")
-          try Files.readAllLines(tomb, UTF_8).asScala
+          try Files.readAllBytes(tomb)
           catch { case _: java.nio.file.NoSuchFileException => throw e }
       }
-    lines.grouped(2).flatMap {
-      case scala.collection.mutable.Buffer(meta, src) =>
-        val m = mapper.readTree(meta).path("index")
-        val ts = if (parseBody) parseTsMicros(mapper.readTree(src).get(tsField)) else null
-        Some(Doc(m.path("_index").asText(), m.path("_id").asText(), src, ts))
-      case _ => None
-    }.toSeq
+    val lines = if (bytes.isEmpty) Array.empty[String] else new String(bytes, UTF_8).split('\n')
+    def broken(at: Int, why: String, cause: Throwable = null) =
+      new java.io.IOException(s"$p:${at + 1}: $why: ${lines(at).take(120)}", cause)
+    def json(at: Int, why: String) =
+      try mapper.readTree(lines(at))
+      catch { case e: com.fasterxml.jackson.core.JacksonException => throw broken(at, why, e) }
+    Seq.tabulate((lines.length + 1) / 2) { k =>
+      val at = 2 * k
+      val m = json(at, "not a bulk index action").get("index")
+      if (m == null || !m.isObject) throw broken(at, "not a bulk index action")
+      if (at + 1 == lines.length) throw broken(at, "bulk action has no source line")
+      // the sink's sidecar writer parses ts with the same function, so
+      // the stats a sidecar records and the ts a reader emits agree
+      val ts =
+        if (!parseBody) null
+        else graft.ingest.BulkStats.parseTsMicros(json(at + 1, "source is not JSON").get(tsField))
+      Doc(m.path("_index").asText(), m.path("_id").asText(), lines(at + 1), ts)
+    }
   }
 }
 
@@ -286,7 +293,7 @@ object EsSimManifest {
 
 object EsSimStats {
   /** min/max are over the composite (tsMicros, docId) cursor ordering,
-    * with null ts mapped to [[EsSimSource.NullTs]]. */
+    * with null ts mapped to [[graft.ingest.BulkStats.NullTs]]. */
   final case class FileStat(file: String, minTs: Long, minId: String,
       maxTs: Long, maxId: String, count: Long, indexIds: Option[Set[String]])
 
@@ -315,21 +322,16 @@ object EsSimStats {
   /** [[list]] minus the names [[EsSimManifest]] hides — what PLANNERS
     * must read so an in-flight compaction's double coverage (published
     * outputs + not-yet-retired inputs) is never planned twice. */
-  def visibleList(path: String): Seq[Path] = {
-    val all = list(path)
-    val hidden = EsSimManifest.hiddenNames(path, all.map(_.getFileName.toString))
-    if (hidden.isEmpty) all
-    else all.filterNot(p => hidden.contains(p.getFileName.toString))
-  }
+  def visibleList(path: String): Seq[Path] = visible(path, list(path))(_.getFileName.toString)
 
   /** [[forPath]] restricted to the manifest-visible files (see
     * [[visibleList]]); same exactly-one-covering-file guarantee. */
-  def forVisible(path: String, tsField: String): Seq[FileStat] = {
-    val all = forPath(path, tsField)
-    val hidden = EsSimManifest.hiddenNames(path,
-      all.map(st => Paths.get(st.file).getFileName.toString))
-    if (hidden.isEmpty) all
-    else all.filterNot(st => hidden.contains(Paths.get(st.file).getFileName.toString))
+  def forVisible(path: String, tsField: String): Seq[FileStat] =
+    visible(path, forPath(path, tsField))(st => Paths.get(st.file).getFileName.toString)
+
+  private def visible[A](path: String, all: Seq[A])(name: A => String): Seq[A] = {
+    val hidden = EsSimManifest.hiddenNames(path, all.map(name))
+    if (hidden.isEmpty) all else all.filterNot(a => hidden.contains(name(a)))
   }
 
   def listCompactedAt(path: String, micros: Long): Seq[Path] =
@@ -382,7 +384,7 @@ object EsSimStats {
   * (ts, id) lexicographic; docs with null ts sort first (ts = NullTs). */
 final case class TsOffset(tsMicros: Long, docId: String) extends Offset {
   override def json(): String =
-    s"""{"tsMicros":$tsMicros,"docId":${graft.ingest.JsonStrPublic.quote(docId)}}"""
+    s"""{"tsMicros":$tsMicros,"docId":${graft.ingest.JsonStr.quote(docId)}}"""
   def lessThan(t: Long, id: String): Boolean =
     tsMicros < t || (tsMicros == t && docId < id)
 }
@@ -505,10 +507,6 @@ class EsSimBatch(path: String, tsField: String, columns: Seq[String],
     }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory = EsSimReaderFactory
-}
-
-object EsSimFiles {
-  def list(path: String): Seq[Path] = EsSimStats.list(path)
 }
 
 /** B2/B3 micro-batch stream over the per-file stats index.
@@ -663,7 +661,7 @@ object EsSimReaderFactory extends PartitionReaderFactory {
           case None => tsFiltered
           case Some((startTs, startId, endTs, endId)) =>
             tsFiltered.filter { d =>
-              val ts = if (d.tsMicros == null) EsSimSource.NullTs else d.tsMicros.longValue()
+              val ts = if (d.tsMicros == null) graft.ingest.BulkStats.NullTs else d.tsMicros.longValue()
               val afterStart = startTs < ts || (startTs == ts && startId < d.docId)
               val atOrBeforeEnd = ts < endTs || (ts == endTs && d.docId <= endId)
               afterStart && atOrBeforeEnd

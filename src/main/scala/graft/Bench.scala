@@ -46,8 +46,8 @@ object Bench {
     * separate the copy PATH from the suite/box CONTEXT): events ∪
     * lineitem → IngestRecord, cursor riding as a typed column,
     * store written cursor-clustered. */
-  private[graft] def copyRecords(spark: SparkSession, sfDir: String,
-      cpus: Int): org.apache.spark.sql.Dataset[ingest.IngestRecord] = {
+  private[graft] def copyRecords(spark: SparkSession,
+      sfDir: String): org.apache.spark.sql.Dataset[ingest.IngestRecord] = {
     import spark.implicits._
     // same emitted body as Emit.ing01EmitEvents / the r9 lineitem lane
     // (r19 batch 5: both sources fanned — the JSON serialization of
@@ -67,7 +67,7 @@ object Bench {
         $"l_shipdate".cast("string").as("ts"))).as("source"),
       $"l_shipdate".cast("string").as("sort_ts"))
     ev.unionByName(li)
-      .repartitionByRange(cpus, $"sort_ts")
+      .repartitionByRange(Engine.cpus, $"sort_ts")
       .sortWithinPartitions($"sort_ts")
       .select($"indexId", $"docId", $"source")
       .as[ingest.IngestRecord]
@@ -91,9 +91,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // the environment provides 32 executor threads (local[32]); honor an
-    // explicit override but never default below the machine's shape
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     // isolated fresh-JVM brackets FIRST, with nothing else running
     // (round-14: the in-suite copy number slid three rounds on an
@@ -119,10 +116,10 @@ object Bench {
       ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
       val cmd = Seq(jvm) ++ addOpens ++ Seq(
         s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
+        "-Dspark.ui.enabled=false",
         "-cp", sys.props("java.class.path"), mainClass)
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
       pb.redirectErrorStream(false)
       val proc = pb.start()
       // drain stderr (Spark logs) so the child never blocks on a full pipe
@@ -163,24 +160,7 @@ object Bench {
     val isolatedLine = forkIsolated("graft.CopyBench", "copy_isolated")
     val streamIsolatedLine = forkIsolated("graft.StreamBench", "stream_isolated")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r19 (VERDICT r18 #5 root cause): the suite's 223 plans generate
-      // ~3,600 distinct whole-stage-codegen units; the default 100-entry
-      // Janino class cache evicts constantly, so every re-execution
-      // re-generated + re-compiled its stages — JitProbe measured 5,932
-      // Janino compiles on a steady-state second pass at the default vs
-      // 170 at 4,000 entries, and −29% suite wall. Sized to plan count,
-      // not data scale (any long-lived multi-query session wants this);
-      // env-overridable like the other session knobs.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
 
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
     // names are interpolated into the JSON artifact lines unescaped —
@@ -227,7 +207,7 @@ object Bench {
     //    (events' ts, lineitem's l_shipdate) and is dropped at the sink
     //    boundary — not re-parsed per row out of the serialized body.
     import spark.implicits._
-    def mkCopyRecords() = copyRecords(spark, sfDir, cpus.toInt)
+    def mkCopyRecords() = copyRecords(spark, sfDir)
     // row count from metadata-only scans — does NOT warm the copy shuffle
     val nDocs = Tables.events(spark, sfDir).count() +
       Tables.lineitem(spark, sfDir).count()
@@ -831,10 +811,10 @@ object Bench {
     val signedDir = java.nio.file.Files.createTempDirectory("graft-bench-signed").toString
     val plainDir = java.nio.file.Files.createTempDirectory("graft-bench-plain").toString
     val signedWriteSec = probeSec {
-      operators.Similarity.writeSignedCorpus(embForWrite, signedDir, cpus.toInt)
+      operators.Similarity.writeSignedCorpus(embForWrite, signedDir, Engine.cpus)
     }
     val plainWriteSec = probeSec {
-      embForWrite.repartitionByRange(cpus.toInt, $"vec_id")
+      embForWrite.repartitionByRange(Engine.cpus, $"vec_id")
         .sortWithinPartitions($"vec_id")
         .write.mode("overwrite").parquet(plainDir)
     }

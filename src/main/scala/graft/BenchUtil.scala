@@ -1,7 +1,8 @@
 package graft
 
 /** Timing/cleanup helpers shared by the benchmark mains ([[Bench]],
-  * [[SinkBench]]) — one definition, so a behavior fix reaches both. */
+  * [[CopyBench]], [[StreamBench]]) — one definition, so a behavior fix
+  * reaches all three. */
 private[graft] object BenchUtil {
 
   def timeSec[T](f: => T): Double = {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Isolated copy-throughput measurement (round-14 VERDICT #2): the
   * exact copy workload [[Bench]] times in-suite, run in a FRESH JVM
   * with nothing else on the session — same store layout, same
@@ -26,19 +24,9 @@ object CopyBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
 
-    def records() = Bench.copyRecords(spark, sfDir, cpus.toInt)
+    def records() = Bench.copyRecords(spark, sfDir)
     val nDocs = Tables.events(spark, sfDir).count() +
       Tables.lineitem(spark, sfDir).count()
     // one unrecorded warmup write (codegen/JIT/footer cache), then the

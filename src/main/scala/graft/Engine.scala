@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** User-facing facade: one call registers the corpus tables as temp
@@ -15,22 +16,35 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
-  /** Opinionated local session defaults (AQE on, UTC, sane shuffle
-    * parallelism); on a cluster, spark-submit conf wins. */
-  def session(master: String = s"local[${Runtime.getRuntime.availableProcessors}]",
-              shufflePartitions: Int = 32): SparkSession = {
-    val s = SparkSession.builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    registerFunctions(s)
-    s
-  }
+  /** Local executor threads and shuffle partitions when spark-submit
+    * names no master: `SPARK_GRAFT_CPUS`, else the machine's cores. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session conf: every `spark.*` system property (what
+    * spark-submit `--conf` and `-Dspark.…` set) wins; each default below
+    * fills only a key left unset. The codegen cache is sized to the
+    * entry suite's ~3,600 whole-stage units (the default 100 evicted
+    * constantly; DRIFT.md, round 19). AQE is Spark 4's default. */
+  private[graft] def conf: SparkConf = new SparkConf()
+    .setIfMissing("spark.master", s"local[$cpus]")
+    .setIfMissing("spark.app.name", "graft")
+    .setIfMissing("spark.sql.shuffle.partitions", cpus.toString)
+    .setIfMissing("spark.sql.codegen.cache.maxEntries", "5000")
+    .setIfMissing("spark.sql.session.timeZone", "UTC")
+
+  /** The one session factory. A session already running in this JVM
+    * (the caller's, a test suite's, a bench harness's) is returned
+    * untouched: no conf rewritten, no functions registered onto it.
+    * Otherwise it builds one from [[conf]], sets the log level to WARN
+    * and registers the engine's functions. */
+  def session(): SparkSession =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).getOrElse {
+      val s = SparkSession.builder().config(conf).getOrCreate()
+      s.sparkContext.setLogLevel("WARN")
+      registerFunctions(s)
+      s
+    }
 
   /** Register the test-corpus parquet tables as temp views. */
   def attach(spark: SparkSession, dir: String): Unit = {

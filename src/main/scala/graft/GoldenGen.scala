@@ -158,13 +158,7 @@ object GoldenGen {
     // intentionally-changed snapshots instead of churning identical ones
     val only = args.drop(1).headOption.map(_.split(",").toSet)
     setSfTag(sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     Files.createDirectories(goldenDir)
     goldenQueries.filter(n => only.forall(_.contains(n))).foreach { name =>
       val tmp = Files.createTempDirectory(s"golden-$name").resolve("out")

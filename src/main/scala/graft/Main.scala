@@ -30,21 +30,8 @@ object Main {
     // stage 1: config — CLI args merged over defaults (A9 fixed, A10)
     val config = IngestionConfig.fromArgs(args.drop(3).filterNot(_ == "--once").toSeq)
 
-    // stage 2: session
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .appName("graft-ingest")
-      // spark-submit injects the real cluster master; default to local
-      // for direct JVM launches (tests, sbt runMain)
-      .master(sys.props.getOrElse("spark.master", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // stage 2: session — spark-submit conf wins; a running one is kept
+    val spark = Engine.session()
     // fork-free offset/commit log writes on file: checkpoints (other
     // schemes keep Spark's default); a manager the session names wins.
     // Unset again on exit, so a caller sharing the session keeps its own
@@ -83,7 +70,8 @@ object Main {
     // ES BulkProcessor wire policy (core.clj:72); the file transport
     // pays per-FILE publish costs (sidecar + atomic rename) and runs
     // 5× faster at its own default (sink.file.max-actions, 1024 —
-    // measured by graft.SinkBench)
+    // graft.SinkBench measured 104k → 549k docs/s; deleted after
+    // d56e47c, `git show d56e47c:src/main/scala/graft/SinkBench.scala`)
     val isHttp = sinkDir.startsWith("http://") || sinkDir.startsWith("https://")
     val maxActions = if (isHttp) config.bulkMaxActions else config.fileMaxActions
     val mkClient: () => EsBulkClient =

@@ -65,11 +65,6 @@ object EsBulkClient {
   * idempotent re-run behavior the reference gets from ES document ids
   * (core.clj:63). */
 final class FileEsBulkClient(dir: String, tsField: String = "ts",
-    // measurement-only knobs (graft.SinkBench): production always runs
-    // with sidecars + atomic publish — disabling either re-opens the
-    // cold-start O(corpus) driver parse / torn-read hazards
-    private[graft] val sidecars: Boolean = true,
-    private[graft] val atomicPublish: Boolean = true,
     // compaction-only (EsSimCompact.inPlace): pin every file name to
     // this micros instead of the wall clock, so compacted output sorts
     // AT the newest input it replaces in upsert-replay order — after
@@ -117,23 +112,16 @@ final class FileEsBulkClient(dir: String, tsField: String = "ts",
     // stats sidecar FIRST: any reader that can already list the bulk
     // file finds its stats present, so the source's planning index
     // never has to parse a body this client wrote
-    if (sidecars)
-      BulkStats.write(bulkPath, BulkStats.compute(tsField,
-        actions.iterator.map(a => (a.indexId, a.docId, BulkStats.tsOf(a.source, tsField)))))
+    BulkStats.write(bulkPath, BulkStats.compute(tsField,
+      actions.iterator.map(a => (a.indexId, a.docId, BulkStats.tsOf(a.source, tsField)))))
     // body published by atomic rename: a listable bulk file is always
     // complete and matches its sidecar — a reader that admits a file on
     // sidecar stats must never see a torn/partial body (a crash or
     // ENOSPC mid-write would otherwise advance the streaming cursor
     // past rows that were never readable)
-    if (atomicPublish) {
-      val tmp = p.resolve(name + ".tmp")
-      Files.write(tmp, bytes,
-        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-      Files.move(tmp, bulkPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } else {
-      Files.write(bulkPath, bytes,
-        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-    }
+    val tmp = p.resolve(name + ".tmp")
+    Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+    Files.move(tmp, bulkPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     onPublish(name)
   }
 }

@@ -197,7 +197,8 @@ object EsBulkSink {
     * an HTTP round trip, core.clj:72) while this transport pays its
     * costs per FILE — sidecar write + tmp write + atomic rename — and
     * graft.SinkBench measured 104k → 549k docs/s going 64 → 1024 with
-    * durability unchanged. The HTTP path (Main, BulkBuffer default)
+    * durability unchanged (the main was deleted after d56e47c; `git
+    * show d56e47c:src/main/scala/graft/SinkBench.scala`). The HTTP path (Main, BulkBuffer default)
     * keeps the reference's 64. */
   def write(records: Dataset[IngestRecord], dir: String,
             maxActions: Int = 1024, flushIntervalMs: Long = 5000,

@@ -59,7 +59,8 @@ object IngestionConfig {
     // knob; for the file-simulated index the per-file publish cost
     // (sidecar + tmp + rename) dominates at 64 docs/file, and
     // graft.SinkBench measured 104k → 549k docs/s going 64 → 1024
-    // with full durability retained
+    // with full durability retained (deleted after d56e47c; `git show
+    // d56e47c:src/main/scala/graft/SinkBench.scala`)
     "sink.file.max-actions" -> "1024",
     // in-place compaction cadence for the file sink dir (0 = off): a
     // long-running ingest otherwise accumulates one file per flush

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{StreamingCuration, StreamingHistory}
@@ -31,12 +30,7 @@ object AdmissionProbe {
     val nBatches = args.lift(0).map(_.toInt).getOrElse(120)
     val batchSize = args.lift(1).map(_.toInt).getOrElse(200)
     val compactEvery = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -4,6 +4,28 @@ package graft
   * from plain spark.sql. */
 class EngineSpec extends SparkSpec {
 
+  test("session factory: a spark.* system property wins over each default") {
+    val defaults = Seq(
+      "spark.master" -> s"local[${Engine.cpus}]",
+      "spark.app.name" -> "graft",
+      "spark.sql.shuffle.partitions" -> Engine.cpus.toString,
+      "spark.sql.codegen.cache.maxEntries" -> "5000",
+      "spark.sql.session.timeZone" -> "UTC")
+    val submitted = Seq("local[3]", "job", "7", "11", "Asia/Tokyo")
+    val saved = defaults.map { case (k, _) => k -> sys.props.get(k) }
+    try {
+      defaults.foreach { case (k, _) => sys.props -= k }
+      val unset = Engine.conf
+      defaults.foreach { case (k, v) => assert(unset.get(k) === v, k) }
+      defaults.zip(submitted).foreach { case ((k, _), v) => sys.props(k) = v }
+      val set = Engine.conf
+      defaults.zip(submitted).foreach { case ((k, _), v) => assert(set.get(k) === v, k) }
+    } finally saved.foreach {
+      case (k, Some(v)) => sys.props(k) = v
+      case (k, None) => sys.props -= k
+    }
+  }
+
   test("attach + sql: full relational surface through spark.sql") {
     Engine.attach(spark, sf0001)
     val n = spark.sql(

@@ -472,13 +472,22 @@ class EsSimSourceSpec extends SparkSpec {
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
     // Main installs its manager only when the session names none, and
-    // leaves the session's key as it found it
+    // leaves the session's key as it found it. It runs inside the
+    // caller's session, so a conf value the session holds (a shuffle
+    // width no default would pick) survives the run
+    val width = "spark.sql.shuffle.partitions"
     def run(manager: String, src: String, sink: String, ckpt: String): Unit = {
       val userSet = manager != local
       if (userSet) spark.conf.set(key, manager) else spark.conf.unset(key)
       val built = CountingFileContextManager.built.get
       named.clear()
-      graft.Main.main(Array(src, sink, ckpt, "--once", "source.batch-size=10"))
+      val widthBefore = spark.conf.get(width)
+      spark.conf.set(width, (Engine.cpus + 1).toString)
+      try {
+        graft.Main.main(Array(src, sink, ckpt, "--once", "source.batch-size=10"))
+        assert(spark.conf.get(width) === (Engine.cpus + 1).toString,
+          "Main rewrote the shared session's conf")
+      } finally spark.conf.set(width, widthBefore)
       assert(named.asScala.toSeq === Seq(Some(manager)), s"the run meant for $manager")
       assert(spark.conf.getOption(key) === (if (userSet) Some(manager) else None))
       assert((CountingFileContextManager.built.get > built) === userSet,

@@ -321,7 +321,7 @@ class IndexDeletionSpec extends SparkSpec {
       assert(tombScans(maskedServe) > 0,
         "post-delete IVF serve must read the lane")
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.unset("spark.sql.adaptive.enabled")
       graft.BenchUtil.rmTree(lsh); graft.BenchUtil.rmTree(ivf)
     }
   }

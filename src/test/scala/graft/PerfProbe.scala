@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Median-of-5 timing for individual SparkEntry queries — the local
   * attribution tool behind bench-tail fixes (single Bench timings carry
   * ±2× context noise from GC debt and JIT; medians in isolation are
@@ -13,15 +11,7 @@ import org.apache.spark.sql.SparkSession
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
 
     val names = args.headOption.map(_.split(",").toSeq).getOrElse(Seq(
       "c01_curation_pipeline", "c02_curation_funnel", "s07_knn_graph",

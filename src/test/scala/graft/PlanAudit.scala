@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Regenerates PLANS.md: formatted physical plans for the
   * scale-critical queries. Writes the file DIRECTLY (first line = the
   * first plan header) instead of relying on stdout capture — the
@@ -11,10 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
     val targets = args.headOption.map(_.split(",").toSet)

@@ -626,7 +626,7 @@ class PlanSpec extends SparkSpec {
         assert(offending.isEmpty,
           s"$q: payload bytes crossed an exchange: ${offending.map(_.child.output.mkString(","))}")
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 
   test("m15: byte profile is one codegen'd scan->project pass — no shuffle, no explode") {

@@ -5,10 +5,7 @@ import org.apache.spark.sql.functions._
 /** One-off diagnostic for pinning s12's spec floors across PQ configs. */
 object PqProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val d = "/root/testdata/sf0.01"

@@ -12,6 +12,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  // its own builder, not Engine.session: specs pin a 4-wide session on
+  // any box, and the mains they call (Main, Verify) then find it running
+  // and use it as is
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

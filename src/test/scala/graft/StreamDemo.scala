@@ -1,15 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 /** Sample-code driver through the public exports: seed an ES-sim index
   * from the events fixture, stream it through the DSv2 source, assemble
   * sessions with flatMapGroupsWithState, print the result. */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("demo-src").toString

@@ -4,15 +4,17 @@
 # row is the evidence bar, not one. Runs EsSimSourceSpec (which holds
 # the `Main --once` resume across checkpoint file managers) +
 # LocalCheckpointFileManagerSpec + CompactionPropertySpec +
-# EsSimStoreSpec (the store read-back against its former plan) N times
-# (default 20), one sbt session per run, and reports the pass count.
+# EsSimStoreSpec (the store read-back against its former plan) +
+# StreamingCorpusSyncSpec (the artifact lanes folded on concurrent
+# threads) N times (default 20), one sbt session per run, and reports
+# the pass count.
 #
 #   scripts/soak.sh [N]
 set -u
 N="${1:-20}"
 pass=0
 for i in $(seq 1 "$N"); do
-  if sbt -batch "testOnly graft.EsSimSourceSpec graft.LocalCheckpointFileManagerSpec graft.CompactionPropertySpec graft.EsSimStoreSpec" \
+  if sbt -batch "testOnly graft.EsSimSourceSpec graft.LocalCheckpointFileManagerSpec graft.CompactionPropertySpec graft.EsSimStoreSpec graft.StreamingCorpusSyncSpec" \
       > "/tmp/soak_$i.log" 2>&1; then
     pass=$((pass + 1))
     echo "soak run $i/$N: PASS"

@@ -43,9 +43,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * on the thread of the consumer that invoked it (Structured
   * Streaming runs each query's `foreachBatch` on that query's own
   * stable execution thread), so each consumer drains exactly what its
-  * own operator calls tracked. Frames tracked by a thread that never
-  * drains behave as before — held until JVM exit, which is what the
-  * leak already was.
+  * own operator calls tracked. A consumer that fans its operator
+  * calls out to threads of its own (`StreamingCorpusSync.syncBatch`
+  * runs one thread per artifact lane) has each of those threads
+  * drain its own scope before it ends. Frames tracked by a thread
+  * that never drains behave as before — held until JVM exit, which
+  * is what the leak already was.
   *
   * A function that fully consumes its own checkpoints before
   * returning (an index-maintenance verb that ends in a parquet write)

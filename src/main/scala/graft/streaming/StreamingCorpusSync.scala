@@ -1,5 +1,8 @@
 package graft.streaming
 
+import java.nio.file.Paths
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -29,12 +32,17 @@ import graft.operators.{Dedup, IndexStore, Multimodal, Similarity, TextAnalysis}
   * Per micro-batch each configured artifact folds exactly ONE
   * generation carrying the whole batch's diff — atomically published,
   * so a reader never sees a partially-applied batch on any single
-  * artifact. foreachBatch is sequential (single-maintainer contract
-  * holds); a REPLAYED batch re-applies the same diff onto a corpus
-  * that already reflects it, and the fold is answer-idempotent by
-  * construction (the same ids mask out, the same revisions land) —
-  * replay-safe with NO per-batch history of its own, the
-  * StreamingTakedown discipline.
+  * artifact. Each artifact has exactly one writer, its own lane, and
+  * no two lanes may name one directory. The artifacts share nothing,
+  * so their lanes fold concurrently, one thread each, and a batch
+  * publishes per artifact: a lane that fails leaves its `_current`
+  * where it was while others may already have flipped, and
+  * [[syncBatch]] returns or throws only once every lane has ended. A
+  * REPLAYED batch re-applies the same diff onto a corpus that already
+  * reflects it (wholly or on some lanes), and the fold is
+  * answer-idempotent by construction (the same ids mask out, the same
+  * revisions land) — replay-safe with NO per-batch history of its
+  * own, the StreamingTakedown discipline.
   *
   * Conflict resolution (r18, shared with the sync verbs themselves —
   * direct verb callers get the SAME semantics, closing the r17
@@ -94,18 +102,54 @@ object StreamingCorpusSync {
       }
       .start()
 
-  /** One sync step — exposed for bounded feeds and tests. */
-  def syncBatch(batch0: DataFrame, targets: SyncTargets): Unit = {
-    val spark = batch0.sparkSession
+  /** One artifact's fold: the directories it writes, the event
+    * columns it reads, and its sync verb over the resolved diff
+    * (upserts, removed ids). */
+  private final case class Lane(name: String, dirs: Seq[String], cols: Seq[String],
+                                fold: (DataFrame, DataFrame) => Unit)
+
+  private def samePath(a: String, b: String): Boolean =
+    Paths.get(a).toAbsolutePath.normalize == Paths.get(b).toAbsolutePath.normalize
+
+  private def lanesOf(t: SyncTargets): Seq[Lane] = {
+    def text(u: DataFrame) = u.select(col("doc_id"), col("text"))
+    // the vector lanes: doc identity rides as vec_id
+    def vec(u: DataFrame, cols: String*) =
+      u.select(col("doc_id").as("vec_id") +: cols.map(col): _*)
+    def vecGone(r: DataFrame) = r.select(col("doc_id").as("vec_id"))
+    // the cluster-map sync folds its own LSH index; skip the
+    // standalone fold when both point at the same artifact
+    val lshViaMap = t.clusterMap.exists(cm => t.lshDir.exists(samePath(_, cm.lshDir)))
+    t.lshDir.filterNot(_ => lshViaMap).map(d => Lane("LSH", Seq(d), Seq("text"),
+      (u, r) => Dedup.syncLshIndex(text(u), r, d))).toSeq ++
+    t.clusterMap.map(cm => Lane("cluster map", Seq(cm.cmapDir, cm.lshDir), Seq("text"),
+      (u, r) => Dedup.syncClusterMapViaLshIndex(text(u), r, cm.cmapDir, cm.lshDir,
+        cm.threshold))) ++
+    t.bm25Dir.map(d => Lane("BM25", Seq(d), Seq("text"),
+      (u, r) => TextAnalysis.syncBm25Index(text(u), r, d))) ++
+    t.ivf.map(i => Lane("IVF", Seq(i.dir), Seq("v"),
+      (u, r) => Similarity.syncIvfIndex(vec(u, "v"), vecGone(r), i.centroids, i.dir))) ++
+    t.ivfAdc.map(i => Lane("IVFADC", Seq(i.dir), Seq("v"),
+      (u, r) => Similarity.syncIvfAdcIndex(vec(u, "v"), vecGone(r), i.dsub,
+        i.coarseWidth, i.dir))) ++
+    t.labeledIvf.map(i => Lane("labeled IVF", Seq(i.dir), Seq("label", "v"),
+      (u, r) => Similarity.syncLabeledIvfIndex(vec(u, "label", "v"), vecGone(r),
+        i.centroids, i.dir))) ++
+    t.payloadDir.map(d => Lane("payload", Seq(d), Seq("payload"),
+      (u, r) => Multimodal.syncPayloadIndex(u.select(col("doc_id"), col("payload")), r, d)))
+  }
+
+  /** The batch's diff: (upserts, one winning event row per id; removed
+    * ids), after rejecting any row whose op is not upsert or delete. */
+  private def resolve(raw: DataFrame): (DataFrame, DataFrame) = {
+    val spark = raw.sparkSession
     import spark.implicits._
-    val hasSeq = batch0.columns.contains("seq")
-    val raw = batch0.localCheckpoint() // ≤ |batch|; 2 ops × N artifacts
+    val hasSeq = raw.columns.contains("seq")
     // validate BEFORE resolving: null/unknown ops reject the batch —
     // one diff-sized job, vs silently dropping rows from both sides
     val bad = raw.filter($"op".isNull || !$"op".isin("upsert", "delete"))
     if (!bad.isEmpty) {
       val sample = bad.select($"doc_id", $"op").take(3).mkString(", ")
-      graft.Scratch.releaseNow(raw)
       throw new IllegalArgumentException(
         s"StreamingCorpusSync: op must be 'upsert' or 'delete'; got $sample")
     }
@@ -147,49 +191,66 @@ object StreamingCorpusSync {
     // are identities on this pre-resolved diff.
     val ups =
       if (hasSeq) ups0 else IndexStore.latestRevision(ups0, "doc_id")
+    (ups, removed)
+  }
 
-    def needs(col: String, lane: String): Unit =
-      require(ups.columns.contains(col),
-        s"StreamingCorpusSync: the $lane lane needs an event column '$col'")
-
-    // the text lanes
-    val textUps = if (targets.lshDir.isDefined || targets.bm25Dir.isDefined ||
-        targets.clusterMap.isDefined) {
-      needs("text", "text")
-      ups.select($"doc_id", $"text")
-    } else null
-    // the cluster-map sync folds its own LSH index; skip the
-    // standalone fold when both point at the same artifact
-    val lshViaMap = targets.clusterMap.exists(cm => targets.lshDir.contains(cm.lshDir))
-    targets.lshDir.filterNot(_ => lshViaMap)
-      .foreach(Dedup.syncLshIndex(textUps, removed, _))
-    targets.clusterMap.foreach(cm => Dedup.syncClusterMapViaLshIndex(
-      textUps, removed, cm.cmapDir, cm.lshDir, cm.threshold))
-    targets.bm25Dir.foreach(TextAnalysis.syncBm25Index(textUps, removed, _))
-
-    // the vector lanes (doc identity rides as vec_id)
-    val removedVec = removed.select($"doc_id".as("vec_id"))
-    def vecUps: DataFrame = { needs("v", "vector"); ups }
-    targets.ivf.foreach(t => Similarity.syncIvfIndex(
-      vecUps.select($"doc_id".as("vec_id"), $"v"), removedVec,
-      t.centroids, t.dir))
-    targets.ivfAdc.foreach(t => Similarity.syncIvfAdcIndex(
-      vecUps.select($"doc_id".as("vec_id"), $"v"), removedVec,
-      t.dsub, t.coarseWidth, t.dir))
-    targets.labeledIvf.foreach { t =>
-      needs("label", "labeled IVF")
-      Similarity.syncLabeledIvfIndex(
-        vecUps.select($"doc_id".as("vec_id"), $"label", $"v"), removedVec,
-        t.centroids, t.dir)
+  /** One sync step — exposed for bounded feeds and tests. */
+  def syncBatch(batch0: DataFrame, targets: SyncTargets): Unit = {
+    val lanes = lanesOf(targets)
+    // every lane's preconditions hold BEFORE any lane folds: a batch
+    // that fails one must not publish on the others first
+    for (l <- lanes; c <- l.cols)
+      require(batch0.columns.contains(c),
+        s"StreamingCorpusSync: the ${l.name} lane needs an event column '$c'")
+    val owned = lanes.flatMap(l => l.dirs.distinct.map(l.name -> _))
+    for (((a, d), i) <- owned.zipWithIndex; (b, e) <- owned.drop(i + 1))
+      require(!samePath(d, e),
+        s"StreamingCorpusSync: the $a and $b lanes both write $d, and their " +
+        "concurrent folds would race; give each lane its own directory (a " +
+        "cluster map whose lshDir equals SyncTargets.lshDir folds that index once)")
+    val raw = batch0.localCheckpoint() // ≤ |batch|; 2 ops × N artifacts
+    try {
+      val (ups, removed) = resolve(raw)
+      foldAll(lanes.map(l => l.name -> (() => l.fold(ups, removed))))
+    } finally {
+      // the releases block, so an interrupt the folds' wait restored
+      // is held back until they are done
+      val interrupted = Thread.interrupted()
+      try {
+        graft.Scratch.releaseNow(raw)
+        graft.Scratch.drain()
+      } finally if (interrupted) Thread.currentThread().interrupt()
     }
+  }
 
-    // the payload lane
-    targets.payloadDir.foreach { d =>
-      needs("payload", "payload")
-      Multimodal.syncPayloadIndex(ups.select($"doc_id", $"payload"), removed, d)
+  /** Run each fold on a thread of its own and return only once every
+    * one has ended. A failed fold leaves the others running to their
+    * end; then the first failure is thrown, with the rest suppressed
+    * on it. An interrupt of the calling thread (a stopped query) does
+    * not cut the wait short: it is restored once the folds are over,
+    * so no fold is still writing when this returns. Fresh threads
+    * inherit the caller's active session and local properties (job
+    * group, SQL execution id); each drains its own scratch scope. */
+  private def foldAll(folds: Seq[(String, () => Unit)]): Unit = {
+    val failures = new ConcurrentLinkedQueue[Throwable]()
+    val threads = folds.map { case (name, fold) =>
+      new Thread(() =>
+        try fold()
+        catch { case e: Throwable => failures.add(e); () }
+        finally graft.Scratch.drain(),
+        s"corpus-sync-$name")
     }
-    graft.Scratch.releaseNow(raw)
-    graft.Scratch.drain() // the folds' tracked lane checkpoints are dead
+    threads.foreach(t => try t.start() catch { case e: Throwable => failures.add(e) })
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    Option(failures.poll()).foreach { first =>
+      failures.forEach(first.addSuppressed(_))
+      throw first
+    }
   }
 
   /** Back-compat text-only form (the r17 signature). */

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,7 +30,13 @@ import graft.streaming.StreamingCorpusSync._
   *  5. null/unknown op rejects the batch loudly;
   *  6. maintenance concurrency: a reader holding the pre-sync
   *     generation — and a sibling thread's tracked scratch — survives
-  *     a sync + drain + compaction cycle.
+  *     a sync + drain + compaction cycle;
+  *  7. the lanes fold concurrently, one thread each: a batch that some
+  *     lane cannot take, or two lanes on one directory, fail before
+  *     any lane folds; a failing lane leaves its artifact as it was
+  *     while the others publish, and `syncBatch` throws only once no
+  *     lane thread is alive; an interrupted caller still waits for
+  *     every lane and keeps its interrupt.
   */
 class StreamingCorpusSyncSpec extends SparkSpec {
   import spark.implicits._
@@ -362,6 +372,181 @@ class StreamingCorpusSyncSpec extends SparkSpec {
       assert(Scratch.liveCount >= 1, "the reader's frame must still be registered")
       Scratch.releaseNow(tracked) // test hygiene; registry entry is inert
     } finally BenchUtil.rmTree(dir)
+  }
+
+  // the four lanes cdc_sync_serve keeps current, over one fixture whose
+  // events carry text, v and payload (v from doc_id only, see vecOf)
+  private lazy val laneCorpus = docs.filter($"doc_id" <= 500)
+    .join(vecOf(docs.filter($"doc_id" <= 500)), Seq("doc_id"))
+    .withColumn("payload", encode($"text", "UTF-8"))
+    .localCheckpoint()
+  private def laneStanding = laneCorpus.filter($"doc_id" % 9 =!= 0)
+  private def laneUpserts = laneStanding.filter($"doc_id" % 11 === 0)
+    .select($"doc_id", concat($"text", lit(" updated revision edition")).as("text"),
+      transform($"v", (x, i) => when(i === 0, x + 0.3).otherwise(x)).as("v"),
+      encode(concat($"text", lit(" updated revision edition")), "UTF-8").as("payload"))
+    .unionByName(laneCorpus.filter($"doc_id" % 9 === 0))
+  private def laneRemoved = laneStanding
+    .filter($"doc_id" % 7 === 0 && $"doc_id" % 11 =!= 0).select($"doc_id")
+  private def laneNet = laneStanding
+    .join(laneRemoved, Seq("doc_id"), "left_anti")
+    .join(laneUpserts.select($"doc_id"), Seq("doc_id"), "left_anti")
+    .unionByName(laneUpserts)
+
+  /** One lane's artifact: how to write it from a corpus and serve it. */
+  private case class LaneArtifact(name: String, write: (DataFrame, String) => Unit,
+                                  serve: String => Set[String])
+
+  private def laneArtifacts(cents: DataFrame): Seq[LaneArtifact] = {
+    val probes = laneCorpus.filter($"doc_id" < 40)
+      .select(($"doc_id" + 1000000L).as("doc_id"), $"text", $"payload", $"v")
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSet
+    Seq(
+      LaneArtifact("LSH", (d, dir) => Dedup.writeLshIndex(d.select($"doc_id", $"text"), dir),
+        dir => rows(Dedup.probeLshIndex(spark, dir, probes.select($"doc_id", $"text"), 0.8))),
+      LaneArtifact("BM25", (d, dir) => TextAnalysis.writeBm25Index(d.select($"doc_id", $"text"), dir),
+        dir => rows(TextAnalysis.bm25TopKFromIndex(spark, dir,
+          probes.select($"doc_id", $"text"), 3))),
+      LaneArtifact("payload",
+        (d, dir) => Multimodal.writePayloadIndex(d.select($"doc_id", $"payload"), dir),
+        dir => rows(Multimodal.probePayloadIndex(spark, dir,
+          probes.select($"doc_id", $"payload"), 3))),
+      LaneArtifact("IVF",
+        (d, dir) => Similarity.writeIvfIndex(d.select($"doc_id".as("vec_id"), $"v"), cents, dir),
+        dir => rows(Similarity.ivfTopKFromIndex(spark, dir, cents,
+          probes.select($"doc_id".as("q_id"), $"v".as("qv"), Similarity.norm($"v").as("qn")),
+          nprobe = 2, k = 3))))
+  }
+
+  /** The live threads `syncBatch` folds its lanes on (named per lane). */
+  private def laneThreads: Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+    .filter(_.getName.startsWith("corpus-sync-")).toSet
+
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("wrapper: a batch missing a column some lane reads changes no lane") {
+    val lsh = tmp("cols-lsh"); val pay = tmp("cols-pay")
+    try {
+      Dedup.writeLshIndex(standing, lsh)
+      Multimodal.writePayloadIndex(
+        standing.select($"doc_id", encode($"text", "UTF-8").as("payload")), pay)
+      val gens = Seq(lsh, pay).map(IndexStore.currentGen)
+      val e = intercept[IllegalArgumentException] {
+        StreamingCorpusSync.syncBatch(eventsOf(upserts, removedIds),
+          SyncTargets(lshDir = Some(lsh), payloadDir = Some(pay)))
+      }
+      assert(e.getMessage.contains(
+        "StreamingCorpusSync: the payload lane needs an event column 'payload'"))
+      assert(Seq(lsh, pay).map(IndexStore.currentGen) === gens,
+        "a batch rejected for a missing column published on another lane first")
+    } finally Seq(lsh, pay).foreach(BenchUtil.rmTree)
+  }
+
+  test("wrapper: two lanes naming one directory are rejected before any fold") {
+    val dir = tmp("shared-dir"); val cmap = tmp("shared-cmap")
+    try {
+      Dedup.writeLshIndex(standing, dir)
+      val g = IndexStore.currentGen(dir)
+      val ev = eventsOf(upserts, removedIds)
+      val e = intercept[IllegalArgumentException] {
+        StreamingCorpusSync.syncBatch(ev,
+          SyncTargets(lshDir = Some(dir), bm25Dir = Some(s"$dir/")))
+      }
+      assert(e.getMessage.contains("the LSH and BM25 lanes both write") &&
+        e.getMessage.contains("own directory"), e.getMessage)
+      // a cluster map over a different index than lshDir writes that
+      // index too: sharing it with the BM25 lane is a race as well
+      val e2 = intercept[IllegalArgumentException] {
+        StreamingCorpusSync.syncBatch(ev, SyncTargets(bm25Dir = Some(dir),
+          clusterMap = Some(ClusterMapTarget(cmap, dir))))
+      }
+      assert(e2.getMessage.contains("the cluster map and BM25 lanes both write"),
+        e2.getMessage)
+      assert(IndexStore.currentGen(dir) === g, "a rejected batch moved _current")
+    } finally Seq(dir, cmap).foreach(BenchUtil.rmTree)
+  }
+
+  test("lane isolation: failing lanes change nothing, the others publish, no lane outlives the throw; replay ≡ rebuild") {
+    val cents = Similarity.kmeansCentroids(
+      laneStanding.select($"doc_id".as("vec_id"), $"v"), 4, 2).localCheckpoint()
+    val arts = laneArtifacts(cents)
+    val dirs = arts.map(a => a.name -> tmp(s"iso-${a.name}")).toMap
+    val rbs = arts.map(a => a.name -> tmp(s"iso-rb-${a.name}")).toMap
+    try {
+      arts.foreach(a => a.write(laneStanding, dirs(a.name)))
+      val want = arts.map(a => a.name -> a.serve(dirs(a.name))).toMap
+      val gens = dirs.map { case (n, d) => n -> IndexStore.currentGen(d) }
+      val targets = SyncTargets(lshDir = dirs.get("LSH"), bm25Dir = dirs.get("BM25"),
+        payloadDir = dirs.get("payload"), ivf = dirs.get("IVF").map(IvfTarget(_, cents)))
+      val ev = eventsOf(laneUpserts, laneRemoved).localCheckpoint()
+      // two lanes fail: an unreadable tombstone file in each, so their
+      // upserts checkpoint and then the dead mask fails to build
+      val failing = Seq("BM25", "IVF")
+      val corrupt = failing.map { n =>
+        val lane = Paths.get(IndexStore.tombstoneLane(IndexStore.currentPath(dirs(n))))
+        Files.createDirectories(lane)
+        Files.write(lane.resolve("part-00000-corrupt.parquet"), "not parquet".getBytes("UTF-8"))
+        lane
+      }
+      Scratch.drain()
+      val before = persisted
+      val e = intercept[Exception](StreamingCorpusSync.syncBatch(ev, targets))
+      assert(laneThreads.isEmpty, s"syncBatch threw while lanes still ran: $laneThreads")
+      // the first failure is thrown and the other rides on it
+      val thrown = e +: e.getSuppressed.toSeq
+      failing.foreach(n => assert(thrown.exists(_.getMessage.contains(dirs(n))),
+        s"the $n lane's failure is missing from $e and its suppressed ${e.getSuppressed.toSeq}"))
+      assert(persisted === before, "a failed batch left persisted RDDs behind")
+      arts.foreach { a =>
+        val g = IndexStore.currentGen(dirs(a.name))
+        if (failing.contains(a.name))
+          assert(g === gens(a.name), s"${a.name}: a failed lane moved _current")
+        else assert(g === gens(a.name).map(_ + 1),
+          s"${a.name}: a lane that did not fail must have published its generation")
+      }
+      corrupt.foreach(l => BenchUtil.rmTree(l.toString))
+      failing.foreach(n => assert(arts.find(_.name == n).get.serve(dirs(n)) === want(n),
+        s"$n: a failed lane changed its answers"))
+      StreamingCorpusSync.syncBatch(ev, targets)
+      arts.foreach { a =>
+        a.write(laneNet, rbs(a.name))
+        assert(a.serve(dirs(a.name)) === a.serve(rbs(a.name)),
+          s"${a.name}: the replayed batch diverged from a rebuild")
+      }
+    } finally (dirs.values ++ rbs.values).foreach(BenchUtil.rmTree)
+  }
+
+  test("an interrupted caller waits for every lane and keeps its interrupt") {
+    val lsh = tmp("intr-lsh"); val bm = tmp("intr-bm")
+    try {
+      Dedup.writeLshIndex(standing, lsh)
+      TextAnalysis.writeBm25Index(standing, bm)
+      val gens = Seq(lsh, bm).map(IndexStore.currentGen(_).get)
+      @volatile var failure: Option[Throwable] = Some(new IllegalStateException("never ran"))
+      @volatile var lanesAtReturn = Set.empty[Thread]
+      @volatile var keptInterrupt = false
+      val caller = new Thread(() => {
+        failure =
+          try {
+            StreamingCorpusSync.syncBatch(eventsOf(upserts, removedIds),
+              SyncTargets(lshDir = Some(lsh), bm25Dir = Some(bm)))
+            None
+          } catch { case e: Throwable => Some(e) }
+        lanesAtReturn = laneThreads
+        keptInterrupt = Thread.currentThread().isInterrupted
+      })
+      caller.start()
+      val deadline = System.nanoTime() + 120L * 1000000000L
+      while (laneThreads.isEmpty && caller.isAlive && System.nanoTime() < deadline)
+        Thread.sleep(1)
+      assert(laneThreads.nonEmpty, "no lane thread started")
+      caller.interrupt()
+      caller.join()
+      assert(failure.isEmpty, s"the interrupted batch failed: $failure")
+      assert(lanesAtReturn.isEmpty, s"syncBatch returned while lanes still ran: $lanesAtReturn")
+      assert(keptInterrupt, "syncBatch swallowed the caller's interrupt")
+      assert(Seq(lsh, bm).map(IndexStore.currentGen(_).get) === gens.map(_ + 1))
+    } finally Seq(lsh, bm).foreach(BenchUtil.rmTree)
   }
 
   test("IVFADC raw sync verb: duplicate upserts fold ONE revision, consistent across subspaces") {

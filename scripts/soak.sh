@@ -6,15 +6,17 @@
 # LocalCheckpointFileManagerSpec + CompactionPropertySpec +
 # EsSimStoreSpec (the store read-back against its former plan) +
 # StreamingCorpusSyncSpec (the artifact lanes folded on concurrent
-# threads) N times (default 20), one sbt session per run, and reports
-# the pass count.
+# threads) + StreamingHistorySpec (the admission-history lifecycle:
+# replay after a fold, fold debris, random slicings with folds and
+# replays, compactEvery through each leg's streaming query) N times
+# (default 20), one sbt session per run, and reports the pass count.
 #
 #   scripts/soak.sh [N]
 set -u
 N="${1:-20}"
 pass=0
 for i in $(seq 1 "$N"); do
-  if sbt -batch "testOnly graft.EsSimSourceSpec graft.LocalCheckpointFileManagerSpec graft.CompactionPropertySpec graft.EsSimStoreSpec graft.StreamingCorpusSyncSpec" \
+  if sbt -batch "testOnly graft.EsSimSourceSpec graft.LocalCheckpointFileManagerSpec graft.CompactionPropertySpec graft.EsSimStoreSpec graft.StreamingCorpusSyncSpec graft.StreamingHistorySpec" \
       > "/tmp/soak_$i.log" 2>&1; then
     pass=$((pass + 1))
     echo "soak run $i/$N: PASS"

@@ -53,9 +53,9 @@ object GraftExtensions {
         es => functions.BandKeys(es.head, 16)),
       fn("simhash64(text)", "64-bit SimHash fingerprint of tokenized text", 1)(
         es => functions.SimHash64(es.head)),
-      fn("dot_product(a, b)", "dot product of two double arrays", 2)(
+      fn("dot_product(a, b)", "dot product of two numeric arrays", 2)(
         es => functions.DotProduct(es(0), es(1))),
-      fn("l2_norm(a)", "L2 norm of a double array", 1)(
+      fn("l2_norm(a)", "L2 norm of a numeric array", 1)(
         es => functions.L2Norm(es.head)),
       fn("nfc_normalize(text)", "Unicode NFC canonical composition of a string", 1)(
         es => functions.NfcNormalize(es.head)),

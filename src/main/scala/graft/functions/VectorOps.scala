@@ -1,10 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, NumericType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native vector kernels for similarity search. Spark's higher-order
@@ -22,7 +24,26 @@ import org.apache.spark.unsafe.types.UTF8String
   * Generated and interpreted paths share the identical index-ordered
   * arithmetic (bit-identical results — the oracle gate and
   * PartitionInvarianceSpec check this). */
-/** Dot product of two equal-dimension double arrays.
+/** Input contract of the pair-join kernels, which read every element
+  * as an 8-byte double: a numeric array is implicitly cast to
+  * array<double> (array<double> itself gets no Cast node, so existing
+  * plans are unchanged), and any other type fails analysis naming it —
+  * reading an array<float> with `getDouble` yields garbage. */
+trait DoubleArrayInputs extends ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = children.map(_.dataType match {
+    case ArrayType(_: NumericType, _) => ArrayType(DoubleType)
+    case other => other // left as is for checkInputDataTypes to reject
+  })
+  override def checkInputDataTypes(): TypeCheckResult =
+    children.map(_.dataType).collectFirst {
+      case t if !t.isInstanceOf[ArrayType] ||
+        t.asInstanceOf[ArrayType].elementType != DoubleType => t
+    }.fold[TypeCheckResult](TypeCheckResult.TypeCheckSuccess)(t =>
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName needs numeric arrays, got ${t.catalogString}"))
+}
+
+/** Dot product of two equal-dimension numeric arrays (as doubles).
   *
   * Contract: the inputs MUST have the same dimension — both the
   * interpreted and generated paths throw `IllegalArgumentException` on
@@ -31,7 +52,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * plausible partial cosine; failing loudly is the only safe semantic
   * for a similarity kernel. */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with DoubleArrayInputs {
   override def dataType: DataType = DoubleType
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -68,8 +89,8 @@ case class DotProduct(left: Expression, right: Expression)
   override def prettyName: String = "dot_product"
 }
 
-/** L2 norm of a double array. */
-case class L2Norm(child: Expression) extends UnaryExpression {
+/** L2 norm of a numeric array (as doubles). */
+case class L2Norm(child: Expression) extends UnaryExpression with DoubleArrayInputs {
   override def dataType: DataType = DoubleType
   override def nullSafeEval(a: Any): Any = {
     val x = a.asInstanceOf[ArrayData]

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Paths
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -211,7 +212,8 @@ object StreamingCorpusSync {
     val raw = batch0.localCheckpoint() // ≤ |batch|; 2 ops × N artifacts
     try {
       val (ups, removed) = resolve(raw)
-      foldAll(lanes.map(l => l.name -> (() => l.fold(ups, removed))))
+      foldAll(batch0.sparkSession.sparkContext,
+        lanes.map(l => l.name -> (() => l.fold(ups, removed))))
     } finally {
       // the releases block, so an interrupt the folds' wait restored
       // is held back until they are done
@@ -229,14 +231,21 @@ object StreamingCorpusSync {
     * on it. An interrupt of the calling thread (a stopped query) does
     * not cut the wait short: it is restored once the folds are over,
     * so no fold is still writing when this returns. Fresh threads
-    * inherit the caller's active session and local properties (job
-    * group, SQL execution id); each drains its own scratch scope. */
-  private def foldAll(folds: Seq[(String, () => Unit)]): Unit = {
+    * inherit the caller's active session and a copy of its local
+    * properties (job group, SQL execution id); each appends
+    * ` · corpus-sync <lane>` to its job description, so the UI and any
+    * listener can tell the lanes' jobs apart, and drains its own
+    * scratch scope. */
+  private def foldAll(sc: SparkContext, folds: Seq[(String, () => Unit)]): Unit = {
     val failures = new ConcurrentLinkedQueue[Throwable]()
     val threads = folds.map { case (name, fold) =>
       new Thread(() =>
-        try fold()
-        catch { case e: Throwable => failures.add(e); () }
+        try {
+          val tag = s"corpus-sync $name"
+          sc.setJobDescription(Option(sc.getLocalProperty("spark.job.description"))
+            .fold(tag)(d => s"$d · $tag"))
+          fold()
+        } catch { case e: Throwable => failures.add(e); () }
         finally graft.Scratch.drain(),
         s"corpus-sync-$name")
     }

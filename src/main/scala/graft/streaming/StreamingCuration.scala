@@ -5,9 +5,11 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerType,
+  LongType, StringType, StructField, StructType}
 
-import graft.operators.Dedup
+import graft.operators.{Curation, Dedup}
+import graft.streaming.StreamingHistory.{Leg, SideLanes}
 
 /** Online near-dup curation: admit or reject each document of a stream
   * against everything that came before it.
@@ -62,6 +64,8 @@ object StreamingCuration {
     * the probe's bucket cap is disabled for admission (see contract). */
   private val NoBucketCap = Int.MaxValue
 
+  private val Sh = StructField("sh", ArrayType(LongType, containsNull = false))
+
   /** Start the admission query over a streaming (doc_id, text) frame.
     * History accumulates under `historyDir` (seed it with
     * [[seedHistory]]); admitted docs are the `admitted = true` rows
@@ -73,16 +77,8 @@ object StreamingCuration {
                        compactEvery: Int = 0,
                        clusterMapDir: Option[String] = None,
                        clusterMapCompactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(batch, historyDir, tau, batchId,
-          clusterMapDir, clusterMapCompactEvery)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactHistory(batch.sparkSession, historyDir, uptoExclusive = batchId)
-        ()
-      }
-      .start()
+    StreamingHistory.start(Text, docs, historyDir, checkpointDir, compactEvery)(
+      admitBatch(_, historyDir, tau, _, clusterMapDir, clusterMapCompactEvery))
 
   /** One admission step — exposed so batch pipelines can run the same
     * policy over a bounded delta, and for tests.
@@ -105,10 +101,7 @@ object StreamingCuration {
                  clusterMapDir: Option[String] = None,
                  clusterMapCompactEvery: Int = 0): Unit = {
     val spark = batch0.sparkSession
-    import spark.implicits._
-    val batch = batch0
-      .select($"doc_id", $"text", array_sort(Dedup.shingleHashes($"text")).as("sh"))
-      .persist()
+    val batch = withShingles(batch0).persist()
     try {
       // exclude batch=<batchId> itself everywhere: on a replay the final
       // overwrite of that subdir would otherwise race the lazy read of
@@ -116,41 +109,19 @@ object StreamingCuration {
       // original run saw. (If an eager external fold already captured
       // this batch id, the probe's own delta-id anti-join keeps the
       // folded copy from self-pairing.)
-      val dSh = batch.select($"doc_id", $"sh").filter(size($"sh") > 0)
-      val (sBanded, sCounts) = standingLshLanes(spark, historyDir,
-        excludeBatch = batchId)
-      val sSh = readHistory(spark, historyDir,
-          StructType(batch.schema.fields :+ StructField("admitted", BooleanType)),
-          excludeBatch = Some(batchId))
-        .select($"doc_id", $"sh").filter(size($"sh") > 0)
+      val (sBanded, sCounts) = standingLshLanes(spark, historyDir, batchId)
+      val sSh = shingled(StreamingHistory.readRows(spark, historyDir,
+        Text.schema, excludeBatch = Some(batchId)))
       // shingle-less docs can't pair (the probe drops them) — they admit
-      val pairs = Dedup.probeLshFromShingled(sBanded, sCounts, sSh, dSh,
-          tau, NoBucketCap)
+      val pairs = Dedup.probeLshFromShingled(sBanded, sCounts, sSh,
+          shingled(batch), tau, NoBucketCap)
         .persist() // two consumers below; the frame is threshold-small
-      // monotonic ids put every pair's d2 in the batch; the semi-join
-      // keeps the flag honest if a caller violates that, and the
-      // orphan count makes the violation VISIBLE — an out-of-order id
-      // stream silently loses batch-invariance otherwise
-      val rejected = pairs
-        .select($"d2".as("doc_id")).distinct()
-        .join(batch.select($"doc_id"), Seq("doc_id"), "left_semi")
-      val orphans = pairs
-        .join(batch.select($"doc_id".as("d2")), Seq("d2"), "left_anti").count()
-      if (orphans > 0)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"admitBatch(batch=$batchId): $orphans near-dup pair(s) point at " +
-          "an already-written history doc — doc_ids are not monotonic " +
-          "across batches, so the admitted set is batch-slicing-dependent")
       try {
-        batch
-          .join(rejected.withColumn("rej", lit(true)), Seq("doc_id"), "left_outer")
-          .select($"doc_id", $"text", $"sh", coalesce(!$"rej", lit(true)).as("admitted"))
-          .write.mode("overwrite").parquet(s"$historyDir/batch=$batchId")
-        writeLshLanes(dSh, historyDir, batchId)
+        StreamingHistory.verdict(Text, batch, pairs, "d2", historyDir, batchId)
         // the cluster-map fold consumes the SAME verified pair frame
         // the admission verdict used — no recompute, delta cost
-        clusterMapDir.foreach(d => graft.operators.Dedup.mergeIntoClusterMap(
-          pairs.select($"d1", $"d2"), d, clusterMapCompactEvery))
+        clusterMapDir.foreach(d => Dedup.mergeIntoClusterMap(
+          pairs.select(col("d1"), col("d2")), d, clusterMapCompactEvery))
       } finally { pairs.unpersist(); () }
     } finally {
       batch.unpersist()
@@ -170,8 +141,34 @@ object StreamingCuration {
     * construction; [[graft.StreamingCurationSpec]] pins it. */
   def compactHistory(spark: SparkSession, dir: String,
                      uptoExclusive: Long): Unit =
-    StreamingHistory.compact(spark, dir, uptoExclusive, lshLaneFold(spark, dir),
-      rowsSchema = Some(HistorySchema))
+    StreamingHistory.compact(Text, spark, dir, uptoExclusive)
+
+  /** Pre-load a standing corpus (all admitted) before streaming. */
+  def seedHistory(docs: DataFrame, historyDir: String): Unit =
+    StreamingHistory.seed(Text, withShingles(docs).withColumn("admitted", lit(true)),
+      historyDir)
+
+  /** The curated output: admitted documents across seed + stream.
+    * A fresh (or still-empty) history dir yields an empty frame. */
+  def admittedDocs(spark: SparkSession, historyDir: String): DataFrame =
+    StreamingHistory.admitted(Text, spark, historyDir)
+
+  /** Per-batch admission funnel — the streaming twin of c02's
+    * observability: docs seen / admitted / rejected per micro-batch
+    * (batch −1 = the seeded corpus, admitted by definition). A
+    * rejection-rate spike in this table is the first symptom of a dup
+    * storm or a mis-sliced upstream producer; see
+    * [[StreamingHistory.admissionStats]] for the tolerant read. */
+  def admissionStats(spark: SparkSession, historyDir: String): DataFrame =
+    StreamingHistory.admissionStats(Text, spark, historyDir)
+
+  private def withShingles(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("text"),
+      array_sort(Dedup.shingleHashes(col("text"))).as("sh"))
+
+  /** The (doc_id, sh) rows that can pair: shingle-less docs never do. */
+  private def shingled(rows: DataFrame): DataFrame =
+    rows.select(col("doc_id"), col("sh")).filter(size(col("sh")) > 0)
 
   // ---- the LSH lanes (shared by the near-dup and pipeline legs) ----
 
@@ -184,110 +181,71 @@ object StreamingCuration {
     StructField("band_hash", LongType),
     StructField("n", LongType)))
 
-  /** The two columns the legacy-batch fallbacks read — passed as an
-    * explicit (subset) schema so a laneless legacy batch dir with NO
-    * part files (an empty batch, or a crash between the rows and lane
-    * writes of one) reads as the correct empty frame instead of hitting
-    * schema inference's "Unable to infer schema" throw. A subset schema
-    * is valid for both the history and pipeline-state row shapes (both
-    * carry doc_id + sh). */
-  private val ShLegacySchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("sh", org.apache.spark.sql.types.ArrayType(
-      LongType, containsNull = false))))
+  /** The (doc_id, sh) subset of both legs' row shapes: what the
+    * laneless-batch fallback reads. */
+  private val ShSchema = StructType(Seq(StructField("doc_id", LongType), Sh))
 
-  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** The batch's own banded + counts lane dirs, from its rows as
+    * written (delta-sized; replay-overwritten together with the rows),
+    * and the generation fold of both lanes. */
+  private val LshLanes = SideLanes(
+    write = (rows, dir, batchId) => {
+      val banded = Dedup.bandedOf(shingled(rows)).persist()
+      try {
+        banded.write.mode("overwrite")
+          .parquet(StreamingHistory.lanePath(dir, "banded", batchId))
+        Dedup.bandedOf_counts(banded).write.mode("overwrite")
+          .parquet(StreamingHistory.lanePath(dir, "counts", batchId))
+      } finally { banded.unpersist(); () }
+    },
+    fold = (spark, dir, dst, foldIds) => {
+      val (bandedParts, countsParts) = lshLanes(spark, dir, foldIds)
+      val nFiles = math.max(1, bandedParts.map(_.inputFiles.length).sum / 16)
+      StreamingHistory.union(spark, BandedSchema, bandedParts)
+        .coalesce(nFiles).write.mode("overwrite").parquet(s"$dst/banded")
+      StreamingHistory.union(spark, CountsSchema, countsParts)
+        .groupBy(col("band_id"), col("band_hash")).agg(sum(col("n")).as("n"))
+        .coalesce(nFiles).write.mode("overwrite").parquet(s"$dst/counts")
+    })
 
-  /** Write the batch's own banded + counts lane dirs (delta-sized;
-    * replay-overwritten together with the rows). */
-  private def writeLshLanes(dSh: DataFrame, dir: String, batchId: Long): Unit = {
-    val banded = Dedup.bandedOf(dSh).persist()
-    try {
-      banded.write.mode("overwrite")
-        .parquet(StreamingHistory.lanePath(dir, "banded", batchId))
-      Dedup.bandedOf_counts(banded).write.mode("overwrite")
-        .parquet(StreamingHistory.lanePath(dir, "counts", batchId))
-    } finally { banded.unpersist(); () }
+  /** The banded and counts lane parts of the published generation and
+    * of batches `ids`. Batches written before the lanes existed
+    * (round-14 histories, or a crash between the rows and lane writes)
+    * are banded in-plan from THEIR rows only — cost proportional to the
+    * laneless batches, never the corpus. Reads are schema-explicit: an
+    * all-shingle-less (or empty) batch writes FILE-LESS lane dirs. */
+  private def lshLanes(spark: SparkSession, dir: String,
+                       ids: Seq[Long]): (Seq[DataFrame], Seq[DataFrame]) = {
+    val (laned, legacy) = ids.partition(id =>
+      Files.isDirectory(Paths.get(StreamingHistory.lanePath(dir, "banded", id))))
+    def lane(name: String, schema: StructType): Seq[DataFrame] =
+      StreamingHistory.foldedLane(spark, dir, name, schema).toSeq ++
+        StreamingHistory.readHotBatches(spark,
+          StreamingHistory.laneDir(dir, name), laned, schema)
+          .map(_.drop("batch"))
+    val legacyBanded = StreamingHistory.readHotBatches(spark, dir, legacy, ShSchema)
+      .map(rows => Dedup.bandedOf(shingled(rows))).toSeq
+    (lane("banded", BandedSchema) ++ legacyBanded,
+      lane("counts", CountsSchema) ++ legacyBanded.map(Dedup.bandedOf_counts))
   }
 
-  /** Assemble the standing banded + counts lanes over the folded
-    * generation plus every hot batch except `excludeBatch`. Hot
-    * batches written before the lanes existed (round-14 histories, or
-    * a crash between the rows write and the lane write) fall back to
-    * in-plan banding of THEIR rows only — cost proportional to the
-    * laneless batches, never the corpus. */
+  /** The standing banded + counts lanes: the folded generation plus
+    * every hot batch except `excludeBatch`. */
   private def standingLshLanes(spark: SparkSession, dir: String,
       excludeBatch: Long): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val hotIds = StreamingHistory.hotBatchIds(dir).filterNot(_ == excludeBatch)
-    val (laned, legacy) = hotIds.partition(id =>
-      Files.isDirectory(Paths.get(StreamingHistory.lanePath(dir, "banded", id))))
-    // schema-explicit reads everywhere: an all-shingle-less (or empty)
-    // batch writes FILE-LESS lane dirs, where schema inference throws
-    // and an explicit schema yields the correct empty frame
-    def readLane(lane: String, schema: StructType): Option[DataFrame] =
-      if (laned.isEmpty) None
-      else Some(spark.read
-        .schema(StructType(schema.fields :+ StructField("batch", LongType)))
-        .option("basePath", s"$dir/_lanes/$lane")
-        .parquet(laned.map(id => StreamingHistory.lanePath(dir, lane, id)): _*)
-        .drop("batch"))
-    val legacySh = StreamingHistory.readHotBatches(spark, dir, legacy,
-        schema = Some(ShLegacySchema))
-      .map(_.select($"doc_id", $"sh").filter(size($"sh") > 0))
-    val legacyBanded = legacySh.map(Dedup.bandedOf)
-    val banded = (StreamingHistory.foldedLane(spark, dir, "banded",
-          Some(BandedSchema)).toSeq ++
-        readLane("banded", BandedSchema).toSeq ++ legacyBanded.toSeq)
-      .reduceOption(_.unionByName(_))
-      .getOrElse(emptyFrame(spark, BandedSchema))
-    val counts = (StreamingHistory.foldedLane(spark, dir, "counts",
-          Some(CountsSchema)).toSeq ++
-        readLane("counts", CountsSchema).toSeq ++
-        legacyBanded.map(Dedup.bandedOf_counts).toSeq)
-      .reduceOption(_.unionByName(_))
-      .getOrElse(emptyFrame(spark, CountsSchema))
-    (banded, counts)
+    val (banded, counts) = lshLanes(spark, dir,
+      StreamingHistory.hotBatchIds(dir).filterNot(_ == excludeBatch))
+    (StreamingHistory.union(spark, BandedSchema, banded),
+      StreamingHistory.union(spark, CountsSchema, counts))
   }
 
-  /** The generation fold for the LSH lanes: previous generation ∪ the
-    * folded batches' lane dirs (laneless legacy batches banded in-plan
-    * from their rows), counts merged per bucket. */
-  private def lshLaneFold(spark: SparkSession, dir: String)
-      : (String, Seq[Long]) => Unit = { (dst, foldIds) =>
-    import spark.implicits._
-    val (laned, legacy) = foldIds.partition(id =>
-      Files.isDirectory(Paths.get(StreamingHistory.lanePath(dir, "banded", id))))
-    def readLane(lane: String, schema: StructType): Option[DataFrame] =
-      if (laned.isEmpty) None
-      else Some(spark.read
-        .schema(StructType(schema.fields :+ StructField("batch", LongType)))
-        .option("basePath", s"$dir/_lanes/$lane")
-        .parquet(laned.map(id => StreamingHistory.lanePath(dir, lane, id)): _*)
-        .drop("batch"))
-    val legacySh = StreamingHistory.readHotBatches(spark, dir, legacy,
-        schema = Some(ShLegacySchema))
-      .map(_.select($"doc_id", $"sh").filter(size($"sh") > 0))
-    val legacyBanded = legacySh.map(Dedup.bandedOf)
-    val bandedParts = StreamingHistory.foldedLane(spark, dir, "banded",
-        Some(BandedSchema)).toSeq ++
-      readLane("banded", BandedSchema).toSeq ++ legacyBanded.toSeq
-    val banded = bandedParts.reduceOption(_.unionByName(_))
-      .getOrElse(emptyFrame(spark, BandedSchema))
-    val nFiles = math.max(1,
-      bandedParts.map(p => scala.util.Try(p.inputFiles.length).getOrElse(1)).sum / 16)
-    banded.coalesce(nFiles).write.mode("overwrite").parquet(s"$dst/banded")
-    val counts = (StreamingHistory.foldedLane(spark, dir, "counts",
-        Some(CountsSchema)).toSeq ++
-        readLane("counts", CountsSchema).toSeq ++
-        legacyBanded.map(Dedup.bandedOf_counts).toSeq)
-      .reduceOption(_.unionByName(_))
-      .getOrElse(emptyFrame(spark, CountsSchema))
-    counts.groupBy($"band_id", $"band_hash").agg(sum($"n").as("n"))
-      .coalesce(nFiles).write.mode("overwrite").parquet(s"$dst/counts")
-  }
+  /** The text leg: every doc with its shingles and verdict. */
+  private val Text = Leg(StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("text", StringType),
+      Sh,
+      StructField("admitted", BooleanType))),
+    output = Seq("doc_id", "text"), countName = "n_docs", lanes = Some(LshLanes))
 
   // ---- full-pipeline streaming admission (the streaming twin of c12) ----
 
@@ -310,26 +268,17 @@ object StreamingCuration {
     * rows partitioned by batch id (~100 B per KEPT doc — rejected
     * non-f2 docs leave no state at all, unlike the near-dup-only
     * history which must retain every doc) plus the state rows' own
-    * LSH lanes; replays overwrite exactly their own `batch=<id>`
-    * dirs, same idempotence contract as [[nearDupAdmission]]; the
-    * standing exact-hash and shingle structures are never re-derived
-    * (hash membership is a broadcast-semi SCAN of the state's `th`
-    * column; near-dup candidates stream the standing banded lane past
-    * the broadcast batch). The benchmark frame is tiny by d07's
-    * premise and broadcast into each batch's decontamination. */
+    * LSH lanes, in the [[StreamingHistory]] layout; the standing
+    * exact-hash and shingle structures are never re-derived (hash
+    * membership is a broadcast-semi SCAN of the state's `th` column;
+    * near-dup candidates stream the standing banded lane past the
+    * broadcast batch). The benchmark frame is tiny by d07's premise and
+    * broadcast into each batch's decontamination. */
   def pipelineAdmission(docs: DataFrame, bench: DataFrame, stateDir: String,
                         checkpointDir: String,
                         compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitPipelineBatch(batch, bench, stateDir, batchId)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactPipelineState(batch.sparkSession, stateDir,
-            uptoExclusive = batchId)
-        ()
-      }
-      .start()
+    StreamingHistory.start(Pipeline, docs, stateDir, checkpointDir, compactEvery)(
+      admitPipelineBatch(_, bench, stateDir, _))
 
   /** One full-pipeline admission step — exposed for bounded deltas and
     * tests. Reads state excluding this batch id (replay safety), writes
@@ -337,20 +286,14 @@ object StreamingCuration {
   def admitPipelineBatch(batch0: DataFrame, bench: DataFrame, stateDir: String,
                          batchId: Long): Unit = {
     val spark = batch0.sparkSession
-    import spark.implicits._
-    val state = readHistory(spark, stateDir, StateSchema,
+    val state = StreamingHistory.readRows(spark, stateDir, Pipeline.schema,
       excludeBatch = Some(batchId))
-    val (sBanded, sCounts) = standingLshLanes(spark, stateDir,
-      excludeBatch = batchId)
-    graft.operators.Curation.admitDeltaStateWith(
-        state, batch0.select($"doc_id", $"text"), bench,
+    val (sBanded, sCounts) = standingLshLanes(spark, stateDir, batchId)
+    StreamingHistory.write(Pipeline, Curation.admitDeltaStateWith(
+        state, batch0.select(col("doc_id"), col("text")), bench,
         (stSh, dSh) => Dedup.probeLshFromShingled(
-          sBanded, sCounts, stSh, dSh, 0.8, NoBucketCap))
-      .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-    val outSh = spark.read.schema(StateSchema)
-      .parquet(s"$stateDir/batch=$batchId")
-      .select($"doc_id", $"sh").filter(size($"sh") > 0)
-    writeLshLanes(outSh, stateDir, batchId)
+          sBanded, sCounts, stSh, dSh, 0.8, NoBucketCap)),
+      stateDir, batchId)
     // this batch's writes consumed the probe's tracked checkpoints
     graft.Scratch.drain()
   }
@@ -359,104 +302,27 @@ object StreamingCuration {
     * the pipeline leg's [[compactHistory]]. */
   def compactPipelineState(spark: SparkSession, stateDir: String,
                            uptoExclusive: Long): Unit =
-    StreamingHistory.compact(spark, stateDir, uptoExclusive,
-      lshLaneFold(spark, stateDir), rowsSchema = Some(StateSchema))
+    StreamingHistory.compact(Pipeline, spark, stateDir, uptoExclusive)
 
   /** Seed the state with an already-curated standing corpus (the
     * previous batch run's [[graft.operators.Curation.curationState]]). */
   def seedPipelineState(standing: DataFrame, bench: DataFrame,
-                        stateDir: String): Unit = {
-    val spark = standing.sparkSession
-    import spark.implicits._
-    graft.operators.Curation.curationState(standing, bench)
-      .write.mode("overwrite").parquet(s"$stateDir/batch=-1")
-    val sh = spark.read.parquet(s"$stateDir/batch=-1")
-      .select($"doc_id", $"sh").filter(size($"sh") > 0)
-    writeLshLanes(sh, stateDir, -1L)
-  }
+                        stateDir: String): Unit =
+    StreamingHistory.seed(Pipeline, Curation.curationState(standing, bench), stateDir)
 
   /** The curated corpus as of now: (doc_id, quality) of survivors
     * across seed + stream — c01's output shape. */
-  def curatedDocs(spark: SparkSession, stateDir: String): DataFrame = {
-    import spark.implicits._
-    readHistory(spark, stateDir, StateSchema, excludeBatch = None)
-      .filter($"m_surv")
-      .select($"doc_id", $"quality")
-  }
+  def curatedDocs(spark: SparkSession, stateDir: String): DataFrame =
+    StreamingHistory.admitted(Pipeline, spark, stateDir)
 
-  /** [[graft.operators.Curation.curationState]]'s row shape. */
-  private val StateSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("quality", org.apache.spark.sql.types.DoubleType),
-    StructField("th", org.apache.spark.sql.types.StringType),
-    StructField("sh", org.apache.spark.sql.types.ArrayType(
-      LongType, containsNull = false)),
-    StructField("m_surv", BooleanType)))
-
-  /** Pre-load a standing corpus (all admitted) before streaming. */
-  def seedHistory(docs: DataFrame, historyDir: String): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select($"doc_id", $"text",
-        array_sort(Dedup.shingleHashes($"text")).as("sh"),
-        lit(true).as("admitted"))
-      .write.mode("overwrite").parquet(s"$historyDir/batch=-1")
-    val sh = spark.read.parquet(s"$historyDir/batch=-1")
-      .select($"doc_id", $"sh").filter(size($"sh") > 0)
-    writeLshLanes(sh, historyDir, -1L)
-  }
-
-  /** Canonical history row shape, used when an empty frame must be
-    * conjured before any batch has defined one. */
-  private val HistorySchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", org.apache.spark.sql.types.StringType),
-    StructField("sh", org.apache.spark.sql.types.ArrayType(
-      LongType, containsNull = false)),
-    StructField("admitted", BooleanType)))
-
-  /** The curated output: admitted documents across seed + stream.
-    * A fresh (or still-empty) history dir yields an empty frame. */
-  def admittedDocs(spark: SparkSession, historyDir: String): DataFrame = {
-    import spark.implicits._
-    readHistory(spark, historyDir, HistorySchema, excludeBatch = None)
-      .filter($"admitted")
-      .select($"doc_id", $"text")
-  }
-
-  /** Per-batch admission funnel — the streaming twin of c02's
-    * observability: docs seen / admitted / rejected per micro-batch
-    * (batch −1 = the seeded corpus, admitted by definition). A
-    * rejection-rate spike in this table is the first symptom of a dup
-    * storm or a mis-sliced upstream producer. One narrow aggregate
-    * over the partitioned history the admission loop already writes —
-    * no extra state, readable while the stream runs: the read
-    * tolerates files deleted mid-scan (a replayed batch's overwrite,
-    * or a concurrent [[compactHistory]] retiring hot dirs), so a
-    * concurrent maintainer yields a transiently partial count for THAT
-    * batch rather than a failed job; idempotent replay / the folded
-    * generation converges it on the next read. Batch ids survive
-    * folding — the folded rows carry `batch` as a data column. */
-  def admissionStats(spark: SparkSession, historyDir: String): DataFrame = {
-    import spark.implicits._
-    readHistory(spark, historyDir, HistorySchema, excludeBatch = None,
-        keepBatch = true, tolerant = true)
-      .groupBy($"batch".cast("long").as("batch"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum($"admitted".cast("long")).as("n_admitted"),
-        (count(lit(1)) - sum($"admitted".cast("long"))).as("n_rejected"))
-      .orderBy($"batch")
-  }
-
-  /** History as one frame; empty with the given (full, admitted-
-    * included) schema when nothing was written yet — same contract as
-    * FileDeadLetter.read: a fresh dir is not an error. Delegates to
-    * [[StreamingHistory]] (folded generation ∪ hot batch dirs). */
-  private[streaming] def readHistory(spark: SparkSession, dir: String,
-                          emptySchema: StructType,
-                          excludeBatch: Option[Long],
-                          keepBatch: Boolean = false,
-                          tolerant: Boolean = false): DataFrame =
-    StreamingHistory.readRows(spark, dir, emptySchema, excludeBatch,
-      keepBatch, tolerant)
+  /** The pipeline leg: [[graft.operators.Curation.curationState]]'s row
+    * shape, `m_surv` marking the survivors. */
+  private val Pipeline = Leg(StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("quality", DoubleType),
+      StructField("th", StringType),
+      Sh,
+      StructField("m_surv", BooleanType))),
+    output = Seq("doc_id", "quality"), countName = "n_docs", flag = "m_surv",
+    lanes = Some(LshLanes))
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 
+import graft.streaming.StreamingHistory.Leg
+
 /** Online byte-exact payload admission — the PAYLOAD leg of the
   * streaming curation family, completing the matrix: text near-dup
   * ([[StreamingCuration]]), vectors ([[StreamingVectorCuration]]),
@@ -13,7 +15,7 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructFiel
   * drops re-crawled bytes the moment they arrive, BEFORE any decode /
   * feature / perceptual stage spends compute on them.
   *
-  * Contract (the family's): a payload is REJECTED iff some payload
+  * Contract: a payload is REJECTED iff some payload
   * with a smaller doc_id — seed corpus or anywhere earlier in the
   * stream, including smaller ids of the same micro-batch and payloads
   * that were themselves rejected — has identical bytes (sha-256).
@@ -32,12 +34,8 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructFiel
   * broadcast batch hash set (left-semi) and only the HIT set —
   * ≤ |batch| hashes — broadcasts into the batch-side anti-join.
   * ~50 B/payload of standing state, payload BYTES never reread,
-  * nothing standing ever shuffled. The batch appends under
-  * `batch=<id>` (replay overwrites exactly that subdir; the history
-  * read excludes it, so a replay can never race its own overwrite —
-  * the family's idempotence design), and `compactEvery` folds retired
-  * batch dirs through [[StreamingHistory]] generations so file count
-  * stays bounded at production cadence. */
+  * nothing standing ever shuffled. The batch then lands through the
+  * [[StreamingHistory]] lifecycle. */
 object StreamingPayloadCuration {
 
   /** Start the admission query over a streaming (doc_id, payload)
@@ -46,36 +44,23 @@ object StreamingPayloadCuration {
   def exactDedupAdmission(payloads: DataFrame, historyDir: String,
                           checkpointDir: String,
                           compactEvery: Int = 0): StreamingQuery =
-    payloads.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(batch, historyDir, batchId)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactHistory(batch.sparkSession, historyDir, uptoExclusive = batchId)
-        ()
-      }
-      .start()
+    StreamingHistory.start(Payloads, payloads, historyDir, checkpointDir, compactEvery)(
+      admitBatch(_, historyDir, _))
 
   /** Fold retired `batch=` dirs into a generation (rows only — this
-    * leg has no side lanes); see [[StreamingHistory.compact]]. */
+    * leg has no side lanes). */
   def compactHistory(spark: SparkSession, dir: String,
                      uptoExclusive: Long): Unit =
-    // rowsSchema explicit: a fold whose every foldable batch dir is
-    // file-less (all-empty micro-batches) would otherwise hit schema
-    // inference and throw from inside the auto-compaction hook
-    StreamingHistory.compact(spark, dir, uptoExclusive,
-      rowsSchema = Some(HistorySchema))
+    StreamingHistory.compact(Payloads, spark, dir, uptoExclusive)
 
   /** One admission step — exposed for bounded deltas and tests. */
   def admitBatch(batch0: DataFrame, historyDir: String, batchId: Long): Unit = {
     val spark = batch0.sparkSession
     import spark.implicits._
-    val batch = batch0
-      .select($"doc_id", sha2($"payload", 256).as("payload_sha256"))
-      .persist()
+    val batch = hashed(batch0).persist()
     try {
-      val hist = StreamingCuration.readHistory(spark, historyDir,
-        HistorySchema, excludeBatch = Some(batchId))
+      val hist = StreamingHistory.readRows(spark, historyDir, Payloads.schema,
+        excludeBatch = Some(batchId))
       // standing membership as a scan (see object doc): semi-probe the
       // history lane with the broadcast batch set, anti-join the small
       // hit set back — never broadcast or shuffle the standing side
@@ -87,50 +72,33 @@ object StreamingPayloadCuration {
         .groupBy($"payload_sha256").agg(min($"doc_id").as("doc_id"))
         .join(broadcast(hitShas), Seq("payload_sha256"), "left_anti")
         .select($"doc_id")
-      batch
+      StreamingHistory.write(Payloads, batch
         .join(firstInBatch.withColumn("adm", lit(true)), Seq("doc_id"), "left_outer")
-        .select($"doc_id", $"payload_sha256",
-          coalesce($"adm", lit(false)).as("admitted"))
-        .write.mode("overwrite").parquet(s"$historyDir/batch=$batchId")
+        .withColumn("admitted", coalesce($"adm", lit(false))), historyDir, batchId)
     } finally { batch.unpersist(); () }
   }
 
   /** Pre-load a standing corpus (already deduped, all admitted). */
-  def seedHistory(payloads: DataFrame, historyDir: String): Unit = {
-    val spark = payloads.sparkSession
-    import spark.implicits._
-    payloads
-      .select($"doc_id", sha2($"payload", 256).as("payload_sha256"),
-        lit(true).as("admitted"))
-      .write.mode("overwrite").parquet(s"$historyDir/batch=-1")
-  }
-
-  private val HistorySchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("payload_sha256", StringType),
-    StructField("admitted", BooleanType)))
+  def seedHistory(payloads: DataFrame, historyDir: String): Unit =
+    StreamingHistory.seed(Payloads, hashed(payloads).withColumn("admitted", lit(true)),
+      historyDir)
 
   /** The curated output: admitted doc ids across seed + stream. */
-  def admittedDocs(spark: SparkSession, historyDir: String): DataFrame = {
-    import spark.implicits._
-    StreamingCuration.readHistory(spark, historyDir, HistorySchema,
-        excludeBatch = None)
-      .filter($"admitted")
-      .select($"doc_id", $"payload_sha256")
-  }
+  def admittedDocs(spark: SparkSession, historyDir: String): DataFrame =
+    StreamingHistory.admitted(Payloads, spark, historyDir)
 
-  /** Per-batch admission funnel — the text leg's admissionStats on the
-    * payload modality (a rejection-rate spike here is a re-crawl storm
-    * caught before any decode spends compute). Same tolerant-read
-    * contract as the other legs. */
-  def admissionStats(spark: SparkSession, historyDir: String): DataFrame = {
-    import spark.implicits._
-    StreamingCuration.readHistory(spark, historyDir, HistorySchema,
-        excludeBatch = None, keepBatch = true, tolerant = true)
-      .groupBy($"batch".cast("long").as("batch"))
-      .agg(count(lit(1)).as("n_payloads"),
-        sum($"admitted".cast("long")).as("n_admitted"),
-        (count(lit(1)) - sum($"admitted".cast("long"))).as("n_rejected"))
-      .orderBy($"batch")
-  }
+  /** Per-batch admission funnel on the payload modality (a
+    * rejection-rate spike here is a re-crawl storm caught before any
+    * decode spends compute). */
+  def admissionStats(spark: SparkSession, historyDir: String): DataFrame =
+    StreamingHistory.admissionStats(Payloads, spark, historyDir)
+
+  private def hashed(payloads: DataFrame): DataFrame =
+    payloads.select(col("doc_id"), sha2(col("payload"), 256).as("payload_sha256"))
+
+  private val Payloads = Leg(StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("payload_sha256", StringType),
+      StructField("admitted", BooleanType))),
+    output = Seq("doc_id", "payload_sha256"), countName = "n_payloads")
 }

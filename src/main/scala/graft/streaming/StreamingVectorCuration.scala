@@ -6,13 +6,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, LongType, StructField, StructType}
 
 import graft.operators.Similarity
+import graft.streaming.StreamingHistory.Leg
 
-/** Online embedding-space near-dup admission — the vector twin of
-  * [[StreamingCuration]]: admit or reject each vector of a stream
-  * against everything that came before it.
+/** Online embedding-space near-dup admission: admit or reject each
+  * vector of a stream against everything that came before it.
   *
-  * Same contract, same batching-invariance argument: a vector is
-  * REJECTED iff some vector with a smaller `vec_id` — seed corpus or
+  * Contract: a vector is REJECTED iff some vector with a smaller `vec_id` — seed corpus or
   * anywhere earlier in the stream, including rejected vectors and
   * smaller-id vectors of the same micro-batch — has cosine ≥ τ with
   * it. The predicate depends only on the global vector SET, so the
@@ -23,113 +22,64 @@ import graft.operators.Similarity
   *
   * Mechanics per micro-batch: one asymmetric blocked delta join of the
   * batch against the history — cost |batch| · |corpus| spread evenly
-  * over block tasks, never |corpus|² — then append the batch under
-  * `batch=<id>` (replay overwrites exactly that subdir; the history
-  * read excludes it, so a replay can never race its own overwrite).
-  * The exact-cosine contract makes the standing-side scan inherent
-  * (every standing vector must be dotted against the batch; an
-  * IVF-probed variant exists in batch form as s18 for callers that
-  * accept approximation), but the standing side only ever STREAMS —
-  * no shuffle, no window — and the history layout is the shared
-  * [[StreamingHistory]] one, so `compactEvery` bounds file count at
-  * production cadence the same way the text leg's does. */
+  * over block tasks, never |corpus|² — then the batch lands through
+  * the [[StreamingHistory]] lifecycle. The exact-cosine contract makes
+  * the standing-side scan inherent (every standing vector must be
+  * dotted against the batch; an IVF-probed variant exists in batch
+  * form as s18 for callers that accept approximation), but the
+  * standing side only ever STREAMS — no shuffle, no window. Any numeric
+  * array embedding is admitted; the history stores it as
+  * array<double>. */
 object StreamingVectorCuration {
 
   /** Start the admission query over a streaming (vec_id, v) frame —
-    * `v` an array<double> embedding. `compactEvery` > 0 folds the
+    * `v` a numeric-array embedding. `compactEvery` > 0 folds the
     * history every that-many batches ([[compactHistory]]). */
   def nearDupAdmission(vecs: DataFrame, historyDir: String, tau: Double,
                        checkpointDir: String,
                        compactEvery: Int = 0): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(batch, historyDir, tau, batchId)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactHistory(batch.sparkSession, historyDir, uptoExclusive = batchId)
-        ()
-      }
-      .start()
+    StreamingHistory.start(Vectors, vecs, historyDir, checkpointDir, compactEvery)(
+      admitBatch(_, historyDir, tau, _))
 
   /** Fold retired `batch=` dirs into a generation (rows only — this
-    * leg has no side lanes); see [[StreamingHistory.compact]]. */
+    * leg has no side lanes). */
   def compactHistory(spark: SparkSession, dir: String,
                      uptoExclusive: Long): Unit =
-    // rowsSchema explicit: a fold whose every foldable batch dir is
-    // file-less (all-empty micro-batches) would otherwise hit schema
-    // inference and throw from inside the auto-compaction hook
-    StreamingHistory.compact(spark, dir, uptoExclusive,
-      rowsSchema = Some(HistorySchema))
+    StreamingHistory.compact(Vectors, spark, dir, uptoExclusive)
 
-  /** One admission step — exposed for bounded deltas and tests. */
+  /** One admission step — exposed for bounded deltas and tests. Delta
+    * pairs are (a_id, b_id) with a_id < b_id, so `b_id` is the rejected
+    * end. */
   def admitBatch(batch0: DataFrame, historyDir: String, tau: Double,
                  batchId: Long): Unit = {
     val spark = batch0.sparkSession
-    import spark.implicits._
-    val batch = batch0.select($"vec_id", $"v").persist()
+    val batch = batch0.select(col("vec_id"), col("v")).persist()
     try {
-      val hist = StreamingCuration.readHistory(spark, historyDir,
-        StructType(batch.schema.fields :+ StructField("admitted", BooleanType)),
+      val hist = StreamingHistory.readRows(spark, historyDir, Vectors.schema,
         excludeBatch = Some(batchId))
-      // delta pairs are (a_id, b_id) with a_id < b_id: monotonic ids
-      // put every pair's larger end in the batch; the semi-join keeps
-      // the flag honest otherwise and the orphan count surfaces the
-      // contract violation (same policy as the text twin)
       val pairs = Similarity.deltaEmbeddingNearDup(
-          hist.select($"vec_id", $"v"), batch, tau)
+          hist.select(col("vec_id"), col("v")), batch, tau)
         .persist()
-      val rejected = pairs
-        .select($"b_id".as("vec_id")).distinct()
-        .join(batch.select($"vec_id"), Seq("vec_id"), "left_semi")
-      val orphans = pairs
-        .join(batch.select($"vec_id".as("b_id")), Seq("b_id"), "left_anti").count()
-      if (orphans > 0)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"admitBatch(batch=$batchId): $orphans near-dup pair(s) point at " +
-          "an already-written history vector — vec_ids are not monotonic " +
-          "across batches, so the admitted set is batch-slicing-dependent")
-      try batch
-        .join(rejected.withColumn("rej", lit(true)), Seq("vec_id"), "left_outer")
-        .select($"vec_id", $"v", coalesce(!$"rej", lit(true)).as("admitted"))
-        .write.mode("overwrite").parquet(s"$historyDir/batch=$batchId")
+      try StreamingHistory.verdict(Vectors, batch, pairs, "b_id", historyDir, batchId)
       finally { pairs.unpersist(); () }
     } finally { batch.unpersist(); () }
   }
 
   /** Pre-load a standing corpus (all admitted) before streaming. */
-  def seedHistory(vecs: DataFrame, historyDir: String): Unit = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    vecs.select($"vec_id", $"v", lit(true).as("admitted"))
-      .write.mode("overwrite").parquet(s"$historyDir/batch=-1")
-  }
-
-  private val HistorySchema = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("v", ArrayType(DoubleType)),
-    StructField("admitted", BooleanType)))
+  def seedHistory(vecs: DataFrame, historyDir: String): Unit =
+    StreamingHistory.seed(Vectors, vecs.withColumn("admitted", lit(true)), historyDir)
 
   /** The curated output: admitted vectors across seed + stream. */
-  def admittedVecs(spark: SparkSession, historyDir: String): DataFrame = {
-    import spark.implicits._
-    StreamingCuration.readHistory(spark, historyDir, HistorySchema,
-        excludeBatch = None)
-      .filter($"admitted")
-      .select($"vec_id", $"v")
-  }
+  def admittedVecs(spark: SparkSession, historyDir: String): DataFrame =
+    StreamingHistory.admitted(Vectors, spark, historyDir)
 
-  /** Per-batch admission funnel — the text leg's admissionStats on the
-    * vector modality (batch −1 = the seed; ids survive folding). Same
-    * tolerant-read contract: concurrent replays/compactions yield a
-    * transiently partial count, never a failed job. */
-  def admissionStats(spark: SparkSession, historyDir: String): DataFrame = {
-    import spark.implicits._
-    StreamingCuration.readHistory(spark, historyDir, HistorySchema,
-        excludeBatch = None, keepBatch = true, tolerant = true)
-      .groupBy($"batch".cast("long").as("batch"))
-      .agg(count(lit(1)).as("n_vecs"),
-        sum($"admitted".cast("long")).as("n_admitted"),
-        (count(lit(1)) - sum($"admitted".cast("long"))).as("n_rejected"))
-      .orderBy($"batch")
-  }
+  /** Per-batch admission funnel on the vector modality. */
+  def admissionStats(spark: SparkSession, historyDir: String): DataFrame =
+    StreamingHistory.admissionStats(Vectors, spark, historyDir)
+
+  private val Vectors = Leg(StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("v", ArrayType(DoubleType)),
+      StructField("admitted", BooleanType))),
+    output = Seq("vec_id", "v"), countName = "n_vecs")
 }

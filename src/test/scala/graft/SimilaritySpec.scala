@@ -463,6 +463,63 @@ class SimilaritySpec extends SparkSpec {
     assert(ok === 11.0)
   }
 
+  test("vector kernels read array<float> as its values: dot_product, l2_norm and admission ≡ array<double>") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import graft.functions.VectorOps.{dotProduct, l2Norm}
+    import graft.streaming.StreamingVectorCuration
+    // values exact in float, so float → double changes nothing
+    val fl = Seq((0L, Seq(1.5f, -2.0f, 0.25f, 3.0f), Seq(0.5f, 4.0f, -8.0f, 1.0f)),
+                 (1L, Seq(0.0f, 1.0f, 0.0f, 0.0f), Seq(2.0f, 2.0f, 2.0f, 2.0f)))
+    val db = fl.map { case (i, a, b) => (i, a.map(_.toDouble), b.map(_.toDouble)) }
+    def parquet(df: org.apache.spark.sql.DataFrame) = {
+      val p = java.nio.file.Files.createTempDirectory("vec-float").toString + "/t"
+      df.write.parquet(p)
+      spark.read.parquet(p)
+    }
+    val fDf = parquet(fl.toDF("id", "a", "b"))
+    val dDf = parquet(db.toDF("id", "a", "b"))
+    def answers(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), dotProduct(col("a"), col("b")), l2Norm(col("a")))
+        .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+    val want = Seq((0L, 0.75 - 8.0 - 2.0 + 3.0, math.sqrt(2.25 + 4.0 + 0.0625 + 9.0)),
+                   (1L, 2.0, 1.0))
+    assert(answers(dDf) === want)
+    assert(answers(fDf) === want, "array<float> must read as its values")
+    // the interpreted path (a local relation's projection folds at planning)
+    assert(answers(fl.toDF("id", "a", "b")) === want)
+    assert(answers(Seq((0L, Seq(3, 0), Seq(1, 2))).toDF("id", "a", "b")) ===
+      Seq((0L, 3.0, 3.0)), "any numeric array reads as doubles")
+    assert(answers(Seq((0L, Seq(BigDecimal(3), BigDecimal(0)), Seq(BigDecimal(1), BigDecimal(2))))
+      .toDF("id", "a", "b")) === Seq((0L, 3.0, 3.0)), "decimal arrays read as doubles")
+    // array<double> input gets no Cast node; array<float> gets one
+    def casts(df: org.apache.spark.sql.DataFrame) =
+      df.select(dotProduct(col("a"), col("b")), l2Norm(col("a"))).queryExecution
+        .executedPlan.collect { case n => n.expressions }.flatten
+        .flatMap(_.collect { case c: Cast => c })
+    assert(casts(dDf).isEmpty, s"array<double> input grew casts: ${casts(dDf)}")
+    assert(casts(fDf).nonEmpty)
+    // any other type fails at analysis, naming it
+    val bad = intercept[org.apache.spark.sql.AnalysisException](
+      Seq(Seq("x")).toDF("s").select(l2Norm(col("s"))))
+    assert(bad.getMessage.contains("array<string>"), bad.getMessage)
+    // one vector admission: float input admits what double input does
+    val vs = Seq((0L, Seq(1.0f, 0.0f, 0.0f)), (1L, Seq(0.0f, 1.0f, 0.0f)),
+                 (2L, Seq(1.0f, 0.001f, 0.0f)), (3L, Seq(0.0f, 0.0f, 2.0f)),
+                 (4L, Seq(0.0f, 0.0f, 4.0f)))
+    def admit(df: org.apache.spark.sql.DataFrame) = {
+      val h = java.nio.file.Files.createTempDirectory("vec-float-hist").toString
+      StreamingVectorCuration.admitBatch(df.filter($"vec_id" < 2), h, 0.99, 0L)
+      StreamingVectorCuration.admitBatch(df.filter($"vec_id" >= 2), h, 0.99, 1L)
+      StreamingVectorCuration.admittedVecs(spark, h).orderBy("vec_id")
+        .as[(Long, Seq[Double])].collect().toSeq
+    }
+    val fromDouble = admit(vs.map { case (i, v) => (i, v.map(_.toDouble)) }.toDF("vec_id", "v"))
+    assert(fromDouble.map(_._1) === Seq(0L, 1L, 3L))
+    assert(admit(vs.toDF("vec_id", "v")) === fromDouble)
+  }
+
   test("cosine is symmetric and self-similarity is 1") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

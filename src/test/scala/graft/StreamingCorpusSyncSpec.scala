@@ -507,7 +507,25 @@ class StreamingCorpusSyncSpec extends SparkSpec {
       corrupt.foreach(l => BenchUtil.rmTree(l.toString))
       failing.foreach(n => assert(arts.find(_.name == n).get.serve(dirs(n)) === want(n),
         s"$n: a failed lane changed its answers"))
-      StreamingCorpusSync.syncBatch(ev, targets)
+      // the replay's jobs carry their lane in the job description,
+      // appended to the caller's
+      val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .foreach(descs.add)
+      }
+      val sc = spark.sparkContext
+      sc.setJobDescription("lane isolation replay")
+      sc.addSparkListener(listener)
+      try StreamingCorpusSync.syncBatch(ev, targets)
+      finally {
+        org.apache.spark.GraftTestGlue.drainListeners(sc)
+        sc.removeSparkListener(listener)
+        sc.setJobDescription(null)
+      }
+      arts.foreach(a => assert(descs.contains(s"lane isolation replay · corpus-sync ${a.name}"),
+        s"no job tagged for the ${a.name} lane among ${descs.asScala.toSet}"))
       arts.foreach { a =>
         a.write(laneNet, rbs(a.name))
         assert(a.serve(dirs(a.name)) === a.serve(rbs(a.name)),

@@ -252,28 +252,71 @@ class StreamingHistorySpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val docs = corpus
-    val expected = keepFirst(docs, 0.8)
-    val histDir = tmp("auto-hist")
-    val ckpt = tmp("auto-ckpt")
-    val input = MemoryStream[(Long, String)]
-    val q = StreamingCuration.nearDupAdmission(
-      input.toDF().toDF("doc_id", "text"), histDir, 0.8, ckpt,
-      compactEvery = 2)
-    try {
-      docs.grouped(3).foreach { b =>
-        input.addData(b: _*)
-        q.processAllAvailable()
-      }
-      assert(StreamingCuration.admittedDocs(spark, histDir)
-        .select($"doc_id").as[Long].collect().toSet === expected)
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import graft.operators.Curation
+    /** Feed `batches` one micro-batch each through `q`, then stop it. */
+    def drive[T](input: MemoryStream[T], q: StreamingQuery, batches: Seq[Seq[T]]): Unit =
+      try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+    // one row per leg: (leg, run its starter at compactEvery = 2 over a
+    // MemoryStream into (history dir, checkpoint dir), the admitted ids
+    // of a history dir, the one-shot keep-first ids)
+    val docs = corpus.take(15)
+    val all = Tables.documents(spark, sf0001).select($"doc_id", $"text")
+      .as[(Long, String)].collect().sortBy(_._1).toSeq
+    val bench = all.filter(_._1 < 20).toDF("doc_id", "text")
+    val stream = all.filter(_._1 >= 20)
+    val rnd = new scala.util.Random(7)
+    val base = Seq.fill(8)(Seq.fill(8)(rnd.nextGaussian()))
+    val vecs = (base ++ base.take(4).map(v => v.updated(0, v.head + 0.01)))
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }
+    def cos(a: Seq[Double], b: Seq[Double]): Double =
+      a.zip(b).map { case (x, y) => x * y }.sum /
+        math.sqrt(a.map(x => x * x).sum * b.map(x => x * x).sum)
+    val payloads = (0L until 15L).map(i =>
+      (i, (if (i % 3 == 0) "same bytes" else s"payload $i").getBytes("UTF-8")))
+    val legs: Seq[(String, (String, String) => Unit, String => Set[Long], Set[Long])] = Seq(
+      ("text", { (h, c) =>
+        val in = MemoryStream[(Long, String)]
+        drive(in, StreamingCuration.nearDupAdmission(in.toDF().toDF("doc_id", "text"),
+          h, 0.8, c, compactEvery = 2), docs.grouped(3).toSeq)
+      }, h => StreamingCuration.admittedDocs(spark, h).select($"doc_id").as[Long]
+        .collect().toSet, keepFirst(docs, 0.8)),
+      ("pipeline", { (h, c) =>
+        val in = MemoryStream[(Long, String)]
+        drive(in, StreamingCuration.pipelineAdmission(in.toDF().toDF("doc_id", "text"),
+          bench, h, c, compactEvery = 2), stream.grouped((stream.size + 4) / 5).toSeq)
+      }, h => StreamingCuration.curatedDocs(spark, h).select($"doc_id").as[Long]
+        .collect().toSet,
+        Curation.c01CurationPipeline(spark, sf0001).select($"doc_id").as[Long]
+          .collect().toSet),
+      ("vector", { (h, c) =>
+        val in = MemoryStream[(Long, Seq[Double])]
+        drive(in, StreamingVectorCuration.nearDupAdmission(in.toDF().toDF("vec_id", "v"),
+          h, 0.99, c, compactEvery = 2), vecs.grouped(3).toSeq)
+      }, h => StreamingVectorCuration.admittedVecs(spark, h).select($"vec_id").as[Long]
+        .collect().toSet,
+        vecs.map(_._1).toSet -- (for { (i, u) <- vecs; (j, w) <- vecs
+          if i < j && cos(u, w) >= 0.99 } yield j)),
+      ("payload", { (h, c) =>
+        val in = MemoryStream[(Long, Array[Byte])]
+        drive(in, StreamingPayloadCuration.exactDedupAdmission(
+          in.toDF().toDF("doc_id", "payload"), h, c, compactEvery = 2),
+          payloads.grouped(3).toSeq)
+      }, h => StreamingPayloadCuration.admittedDocs(spark, h).select($"doc_id").as[Long]
+        .collect().toSet, payloads.map(_._1).filter(i => i % 3 != 0).toSet + 0L))
+    legs.foreach { case (leg, run, admitted, expected) =>
+      val histDir = tmp(s"auto-$leg")
+      run(histDir, tmp(s"auto-$leg-ckpt"))
+      assert(expected.nonEmpty, s"$leg: empty keep-first fixture")
+      assert(admitted(histDir) === expected, s"$leg: admitted set ≠ keep-first")
       // the stream itself compacted: a generation exists and only the
       // batches above the watermark are still hot
       assert(StreamingHistory.foldedThrough(histDir).exists(_ >= 0L),
-        "compactEvery must have folded at least one generation")
+        s"$leg: compactEvery must have folded at least one generation")
       assert(StreamingHistory.hotBatchIds(histDir).size <= 3,
-        s"hot dirs unbounded: ${StreamingHistory.hotBatchIds(histDir)}")
-    } finally q.stop()
+        s"$leg: hot dirs unbounded: ${StreamingHistory.hotBatchIds(histDir)}")
+    }
   }
 
   test("vector and payload admissionStats reconcile with their admitted outputs") {

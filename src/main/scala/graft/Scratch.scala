@@ -98,6 +98,26 @@ object Scratch {
     ()
   }
 
+  /** A FIFO of temp artifact dirs capped at `cap`, for the registered
+    * entries that build an artifact in a temp dir: [[DirFifo.admit]]
+    * queues a dir and hands the oldest past the cap to [[deferDelete]];
+    * the dirs still queued at JVM exit are deleted then. An entry admits
+    * a dir once its result no longer reads it (materialized first), or
+    * when a plan `cap` calls old is long consumed (c12). Bounds the dirs
+    * a long-lived session calling the entries keeps on disk. */
+  final class DirFifo(cap: Int) {
+    private val dirs = new ConcurrentLinkedQueue[String]()
+    private lazy val exitHook: Unit = {
+      sys.addShutdownHook(dirs.forEach(d => BenchUtil.rmTree(d)))
+      ()
+    }
+    def admit(dir: String): Unit = {
+      exitHook
+      dirs.add(dir)
+      while (dirs.size > cap) Option(dirs.poll()).foreach(deferDelete)
+    }
+  }
+
   private lazy val cleanupHook: Unit = {
     sys.addShutdownHook {
       var d = doomedDirs.poll()
@@ -118,8 +138,11 @@ object Scratch {
   }
 
   /** Release one checkpointed frame's storage immediately: blocking
-    * unpersist of localCheckpoint blocks, file deletion for reliable
-    * checkpoints. No-op (not an error) on a non-checkpointed plan. */
+    * removal of localCheckpoint blocks, file deletion for reliable
+    * checkpoints. No-op (not an error) on a non-checkpointed plan. The
+    * blocks go without `RDD.unpersist`'s WARN that a locally
+    * checkpointed RDD cannot be recomputed: a released frame is dead by
+    * its caller's contract, so the warning says nothing, once per frame. */
   def releaseNow(df: DataFrame): Unit = df.queryExecution.logical match {
     case l: LogicalRDD =>
       l.rdd.getCheckpointFile match {
@@ -127,7 +150,7 @@ object Scratch {
           val p = new org.apache.hadoop.fs.Path(f)
           p.getFileSystem(
             df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
-        case None => l.rdd.unpersist(blocking = true)
+        case None => org.apache.spark.sql.GraftGlue.dropBlocks(l.rdd)
       }
     case _ => ()
   }

@@ -2060,27 +2060,17 @@ object Curation {
     // state dump per invocation in /tmp (round-10 advice)
     val stateDir =
       java.nio.file.Files.createTempDirectory("graft-c12-state").toString
-    c12CleanupHook // ensure the hook exists before the dir is live
-    c12StateDirs.add(stateDir)
     // bound the in-flight set (round-11 advice): a long-lived session
     // calling c12 repeatedly otherwise accumulates one state dump per
     // invocation until JVM exit. FIFO-evict beyond a small window — an
     // evicted dir backs a plan returned 8 invocations ago, long since
     // consumed (each invocation here materializes its own state first)
-    while (c12StateDirs.size > 8)
-      Option(c12StateDirs.poll()).foreach(graft.Scratch.deferDelete)
+    c12StateDirs.admit(stateDir)
     curationState(standing, bench).write.mode("overwrite").parquet(stateDir)
     admitDelta(s.read.parquet(stateDir), delta, bench)
   }
 
-  private val c12StateDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private lazy val c12CleanupHook: Unit = {
-    sys.addShutdownHook {
-      c12StateDirs.forEach(d => graft.BenchUtil.rmTree(d))
-    }
-    ()
-  }
+  private val c12StateDirs = new graft.Scratch.DirFifo(8)
 
   /** The saved artifact a production run persists alongside its output:
     * ONE narrow frame over the standing f2 (exact-dedup survivor) set —

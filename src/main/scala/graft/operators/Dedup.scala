@@ -1413,17 +1413,7 @@ object Dedup {
 
   /** Temp index dirs from the registered u01 entry (the d27/s17 FIFO
     * discipline: the result is localCheckpointed before admission). */
-  private val u01Dirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private def u01Admit(dir: String): Unit = {
-    u01Dirs.add(dir)
-    while (u01Dirs.size > 4)
-      Option(u01Dirs.poll()).foreach(graft.Scratch.deferDelete)
-  }
-  private lazy val u01CleanupHook: Unit = {
-    sys.addShutdownHook { u01Dirs.forEach(d => graft.BenchUtil.rmTree(d)) }
-    ()
-  }
+  private val u01Dirs = new graft.Scratch.DirFifo(4)
 
   /** u01: d21's probe AFTER UPDATES — the highest-volume lifecycle
     * verb a re-crawled corpus feeds an index (c07's snapshot diff
@@ -1455,13 +1445,12 @@ object Dedup {
       .select($"doc_id", concat($"text", lit(U01RevisionSuffix)).as("text"))
     val dir =
       java.nio.file.Files.createTempDirectory("graft-u01-lsh").toString
-    u01CleanupHook
     writeLshIndex(standing, dir)
     updateInLshIndex(changed, dir)
     val out = graft.Scratch.track(
       probeLshIndex(s, dir, docs.filter($"doc_id" % 10 === 0), 0.8, 1000)
         .localCheckpoint())
-    u01Admit(dir)
+    u01Dirs.admit(dir)
     out
   }
 
@@ -1496,7 +1485,6 @@ object Dedup {
           lit("delete").as("op")))
     val dir =
       java.nio.file.Files.createTempDirectory("graft-u02-lsh").toString
-    u01CleanupHook
     writeLshIndex(standing, dir)
     // two micro-batches (even ids ⇒ %4 ∈ {0,2}): the slicing is
     // answer-free by the sync contract
@@ -1509,7 +1497,7 @@ object Dedup {
       .filter($"doc_id" % 2 === 0 && $"doc_id" % 10 === 0)
     val out = graft.Scratch.track(
       probeLshIndex(s, dir, delta, 0.8, 1000).localCheckpoint())
-    u01Admit(dir)
+    u01Dirs.admit(dir)
     out
   }
 
@@ -1564,7 +1552,6 @@ object Dedup {
       java.nio.file.Files.createTempDirectory("graft-u03-lsh").toString
     val cmapDir =
       java.nio.file.Files.createTempDirectory("graft-u03-cmap").toString
-    u01CleanupHook
     writeLshIndex(standing, lshDir)
     writeClusterMap(ngramJaccardPairs(standing, 0.8).select($"d1", $"d2"),
       cmapDir)
@@ -1572,7 +1559,7 @@ object Dedup {
       cmapDir, lshDir)
     val out = graft.Scratch.track(
       readClusterMap(s, cmapDir).localCheckpoint())
-    u01Admit(lshDir); u01Admit(cmapDir)
+    u01Dirs.admit(lshDir); u01Dirs.admit(cmapDir)
     out
   }
 
@@ -1612,9 +1599,9 @@ object Dedup {
     * cluster artifact (d08/d12/d17 and the m11/s11/s23 consumers) still
     * recomputed connected components over the FULL pair graph per run.
     * At 100 TB that recompute dominates the incremental path it feeds.
-    * This family persists the (doc_id, cluster_rep) map as an
-    * [[IndexStore]] artifact and merges each delta batch's verified
-    * pairs into it union-find-style:
+    * This family persists the (doc_id, cluster_rep) map as the seventh
+    * [[IndexStore]] family ([[ClusterMap]]) and merges each delta
+    * batch's verified pairs into it union-find-style:
     *
     *  - `members` lane: (doc_id, cluster_rep) — append-only; a doc's
     *    row is written once, with the rep current AT INSERTION.
@@ -1626,9 +1613,15 @@ object Dedup {
     *    premise as the probe's over-cap broadcast). new_rep < old_rep
     *    always (min-label), so chains are acyclic and strictly
     *    decreasing.
-    *  - [[compactClusterMap]] = path compression: members rewritten
-    *    with fully-resolved reps into the next generation, alias lane
-    *    dropped.
+    *  - every fold ([[compactClusterMap]], a delete, update or sync)
+    *    path-compresses: members rewritten with fully-resolved reps
+    *    into the next generation, alias lane dropped.
+    *
+    * The verbs are [[IndexStore]]'s shared ones. A delete, update or
+    * sync is one fold: it re-labels the clusters its dead ids touch
+    * and merges the surviving upserts' pairs into the same generation,
+    * published by one `_current` flip — a reader sees the map before or
+    * after the whole batch, never the batch's docs missing in between.
     *
     * Merge cost is delta-proportional end to end: the standing members
     * lane is SCANNED once (semi-join against the broadcast endpoint
@@ -1640,15 +1633,8 @@ object Dedup {
     * their clusters' minima (hash-checked by the registered entry
     * against d08's recursive-CTE oracle, boundary-swept in
     * ClusterMaintenanceSpec — the c12 ≡ c01 discipline). */
-  def writeClusterMap(pairs: DataFrame, dir: String): Unit = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    val g = IndexStore.nextGen(dir)
-    clusterPairs(pairs.select($"d1", $"d2"))
-      .write.mode("overwrite").parquet(s"${IndexStore.genPath(dir, g)}/members")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-  }
+  def writeClusterMap(pairs: DataFrame, dir: String): Unit =
+    IndexStore.write(ClusterMap, pairs, None, dir)
 
   /** Merge a delta batch's verified pairs (e.g. [[probeLshIndex]]'s
     * output — every pair touches the delta) into a standing cluster
@@ -1657,47 +1643,15 @@ object Dedup {
     * `compactEvery` > 0 runs [[compactClusterMap]] (path compression)
     * every that-many merges. */
   def mergeIntoClusterMap(deltaPairs: DataFrame, dir: String,
-                          compactEvery: Int = 0): Unit = {
-    val s = deltaPairs.sparkSession
-    // bootstrap: a first merge into a FRESH dir (the streaming
-    // admission loop's cold start) behaves as merge-into-empty —
-    // publish gen 0 so the lanes land inside a generation (the
-    // appendTombstones precedent)
-    IndexStore.adoptLegacy(dir)
-    if (IndexStore.currentGen(dir).isEmpty) IndexStore.publish(dir, 0L)
-    val root = IndexStore.currentPath(dir)
-    // materialize the delta pairs ONCE (r19): the merge consumes them
-    // twice (endpoint set + the CC edge cache), and callers routinely
-    // pass a LAZY probe plan (syncClusterMapViaLshIndex hands the LSH
-    // index probe straight in) — without this the probe's banding +
-    // verify joins executed once per consumer, which was the dominant
-    // term of the u03/d27 operating span (SyncProbe r19: merge 6.6 s
-    // of an 10.8 s verb at sf0.1, ~2× the probe's own cost)
-    val pairs = deltaPairs.localCheckpoint()
-    try {
-      // r19 batch 4: a batch that verified to ZERO pairs (common in
-      // steady-state admission loops) appends nothing and relabels
-      // nothing — appending two empty frames is read-identical, so
-      // skip the standing-members pass entirely
-      if (!pairs.isEmpty) {
-        val (newMembers, aliases) =
-          clusterMergeDelta(resolvedMembers(s, root), pairs)
-        newMembers.write.mode("append").parquet(s"$root/members")
-        aliases.write.mode("append").parquet(s"$root/aliases")
-      }
-    } finally graft.Scratch.releaseNow(pairs)
-    if (compactEvery > 0 && IndexStore.bumpAppends(dir) % compactEvery == 0)
-      compactClusterMap(s, dir)
-  }
+                          compactEvery: Int = 0): Unit =
+    IndexStore.append(ClusterMap, deltaPairs, None, dir, compactEvery)
 
   /** Remove documents from a standing cluster map — the deletion verb
     * on the CLUSTER artifact, and the one place deletion is more than
     * a mask: a removed doc may be the only BRIDGE of its component, so
     * its clusters must re-SPLIT, and the map stores labels, not edges.
-    * A tombstone lane cannot express a split (and a patch lane would
-    * have to sequence against the merge path's alias lane — MVCC
-    * complexity with real ordering hazards), so a delete FOLDS A
-    * GENERATION — the compaction publish discipline — with the
+    * A tombstone lane cannot express a split, so a delete FOLDS A
+    * GENERATION ([[IndexStore.sync]] with nothing upserted) with the
     * re-labeling COMPUTE kept delta-cost:
     *
     *  1. affected reps = reps of clusters containing a removed doc
@@ -1719,45 +1673,13 @@ object Dedup {
     *
     * Compute ∝ affected-cluster mass; IO = one linear pass-through
     * members write (~16 B per paired doc, shuffle-free for the
-    * unaffected mass). Removals arrive batched on the c07 snapshot
-    * cadence, so this is the compaction the artifact would run on
-    * that cadence anyway — and the fold path-compresses aliases as a
-    * side effect. delete → read ≡ full CC over the live corpus's
+    * unaffected mass). delete → read ≡ full CC over the live corpus's
     * pairs — registered d27 entry, oracled by d08's recursive CTE
     * over the live corpus; bridge-split / compose-with-merge /
     * random-graph cases spec-pinned in ClusterMaintenanceSpec. */
   def deleteFromClusterMap(removedIds: DataFrame, dir: String,
-      livePairsAmong: DataFrame => DataFrame): Unit = {
-    val s = removedIds.sparkSession
-    import s.implicits._
-    IndexStore.adoptLegacy(dir)
-    val standing = resolvedMembers(s, IndexStore.currentPath(dir))
-    val removed = removedIds.select($"doc_id").distinct().localCheckpoint()
-    val affReps = standing
-      .join(broadcast(removed), Seq("doc_id"), "left_semi")
-      .select($"cluster_rep").distinct().localCheckpoint()
-    val affLive = standing
-      .join(broadcast(affReps), Seq("cluster_rep"), "left_semi")
-      .join(broadcast(removed), Seq("doc_id"), "left_anti")
-      .select($"doc_id").localCheckpoint()
-    val relabeled = clusterPairs(livePairsAmong(affLive).select($"d1", $"d2"))
-      .toDF("doc_id", "cluster_rep")
-      // guard: the caller's pair source must not reach outside the
-      // affected live set (it would corrupt unaffected clusters)
-      .join(broadcast(affLive), Seq("doc_id"), "left_semi")
-    val g = IndexStore.nextGen(dir)
-    standing.join(broadcast(affReps), Seq("cluster_rep"), "left_anti")
-      .select($"doc_id", $"cluster_rep")
-      .unionByName(relabeled.select($"doc_id", $"cluster_rep"))
-      .write.mode("overwrite")
-      .parquet(s"${IndexStore.genPath(dir, g)}/members")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-    // the write above consumed every checkpoint this verb made —
-    // release the blocks now (maintenance loops run many deletes per
-    // session; waiting for a consumer drain would stack them)
-    Seq(removed, affReps, affLive).foreach(graft.Scratch.releaseNow)
-  }
+      livePairsAmong: DataFrame => DataFrame): Unit =
+    removeFromClusterMap(removedIds, dir, Some(PairSource(livePairsAmong)))
 
   /** The current clusters: (doc_id, cluster_rep) for every doc in any
     * pair, reps resolved through the alias closure — d08's contract,
@@ -1767,132 +1689,159 @@ object Dedup {
 
   /** Production wiring of [[deleteFromClusterMap]]: the affected live
     * pair subgraph comes from the PERSISTED d21 index instead of a
-    * corpus recompute — the shingle verify lane is pruned to the
-    * affected doc set (one broadcast semi-join; affected-cluster-
-    * sized) with the index's own tombstones masked, then the exact
-    * prefix join runs over only those rows. Standing text is never
-    * read; cost ∝ affected-cluster shingle mass. Run the index's own
+    * corpus recompute ([[viaLsh]]). Run the index's own
     * [[deleteFromLshIndex]] for the same removal set first or last —
-    * the pair derivation here masks removed docs either way (affLive
-    * excludes them by construction). Same-answer-as-recompute is
-    * spec-pinned in ClusterMaintenanceSpec. */
+    * the pair derivation masks removed docs either way (the affected
+    * live set excludes them by construction). Same-answer-as-recompute
+    * is spec-pinned in ClusterMaintenanceSpec. */
   def deleteFromClusterMapViaLshIndex(removedIds: DataFrame, cmapDir: String,
-      lshIndexDir: String, threshold: Double = 0.8): Unit = {
-    val s = removedIds.sparkSession
-    import s.implicits._
-    deleteFromClusterMap(removedIds, cmapDir, affLive => {
-      // generation resolved once; lanes + tombstones read through it
-      val root = IndexStore.currentPath(lshIndexDir)
-      val sh = IndexStore.maskTombstonesAt(
-          s.read.parquet(s"$root/shingles"), root, "doc_id")
-        .join(broadcast(affLive), Seq("doc_id"), "left_semi")
-        // the index lane is unsorted (its probe consumers are order-
-        // free); the prefix filter REQUIRES ascending arrays — sort
-        // the affected-sized subset only
-        .select($"doc_id", array_sort($"sh").as("sh"))
-      prefixJoinPairs(sh, threshold)
-    })
-  }
+      lshIndexDir: String, threshold: Double = 0.8): Unit =
+    removeFromClusterMap(removedIds, cmapDir, viaLsh(lshIndexDir, threshold))
 
   /** UPDATE changed documents through the cluster-map artifact — the
-    * composed production wiring of the third lifecycle verb (r17):
-    *
-    *  1. the d21 LSH index takes the revisions first
-    *     ([[updateInLshIndex]] — one generation fold, atomic);
-    *  2. the changed docs' OLD nodes leave the map
-    *     ([[deleteFromClusterMapViaLshIndex]] — affected clusters
-    *     re-split from the updated index's live pairs; the changed ids
-    *     are excluded from the re-label by construction, and unchanged
-    *     docs' shingle rows are untouched by the update fold);
-    *  3. the revisions' pairs merge back in ([[mergeIntoClusterMap]]
-    *     over [[probeLshIndex]]'s delta probe — the revisions are
-    *     already IN the updated index, and the probe's own delta-id
-    *     anti-join guard keeps them from self-pairing, so the probe
-    *     returns exactly the new–old and new–new pairs the merge
-    *     needs).
-    *
-    * Net: read ≡ a cluster map rebuilt over the REVISED corpus's pairs
-    * (ClusterMaintenanceSpec pins it). Steps 2 and 3 publish
-    * separately — the map passes through a revision-less middle state
-    * that is itself a CONSISTENT corpus (the changed docs simply
-    * absent), the same window a delete-then-append cadence always has;
-    * single-artifact readers never see a torn generation. */
-  def updateClusterMapViaLshIndex(changed0: DataFrame, cmapDir: String,
+    * composed production wiring of the third lifecycle verb (r17): the
+    * d21 LSH index takes the revisions first ([[updateInLshIndex]]),
+    * then the map folds them in one generation ([[IndexStore.update]]):
+    * the changed docs' old nodes leave their clusters, which re-split
+    * from the updated index's live pairs, and the revisions' probe pairs
+    * merge back in. Net: read ≡ a cluster map rebuilt over the REVISED
+    * corpus's pairs (ClusterMaintenanceSpec pins it). */
+  def updateClusterMapViaLshIndex(changed: DataFrame, cmapDir: String,
       lshIndexDir: String, threshold: Double = 0.8): Unit = {
-    val s = changed0.sparkSession
-    import s.implicits._
-    // same-id duplicate revisions resolve to ONE deterministic winner
-    // BEFORE any step: the index fold would pick one anyway
-    // (latestRevision inside syncLshIndex), but the step-3 probe runs
-    // over `changed` directly — an unresolved batch would probe with
-    // the losing revision's shingles too and merge phantom pairs
-    val changed = IndexStore.latestRevision(changed0, "doc_id")
-      .localCheckpoint() // 3 consumers below; diff-sized
     updateInLshIndex(changed, lshIndexDir)
-    deleteFromClusterMapViaLshIndex(changed.select($"doc_id"), cmapDir,
-      lshIndexDir, threshold)
-    mergeIntoClusterMap(
-      probeLshIndex(s, lshIndexDir, changed, threshold).select($"d1", $"d2"),
-      cmapDir)
-    graft.Scratch.releaseNow(changed) // all three steps have consumed it
+    IndexStore.update(ClusterMap, changed, viaLsh(lshIndexDir, threshold), cmapDir)
   }
 
-  /** Apply a FULL snapshot diff through the cluster-map artifact — the
-    * composed sync verb on the map ([[updateClusterMapViaLshIndex]]'s
-    * three-step discipline carrying removals along):
-    *
-    *  1. the d21 LSH index folds the whole diff in ONE generation
-    *     ([[syncLshIndex]] — its r18 malformed-batch resolution,
-    *     delete-wins + deterministic same-id dedup, applies here too);
-    *  2. (removed ∪ upserted) ids leave the map, affected clusters
-    *     re-split from the updated index's live pairs
-    *     ([[deleteFromClusterMapViaLshIndex]]);
-    *  3. the surviving upserts' probe pairs merge back in.
-    *
-    * Net: read ≡ a map rebuilt over the post-diff corpus's pairs
-    * (spec-pinned in StreamingCorpusSyncSpec). Like the update form,
-    * steps publish separately — every intermediate is itself a
-    * consistent corpus (the diffed docs simply absent). */
-  def syncClusterMapViaLshIndex(upserts0: DataFrame, removed: DataFrame,
+  /** Apply a FULL snapshot diff through the cluster-map artifact: the
+    * d21 LSH index folds the whole diff ([[syncLshIndex]]), then the map
+    * folds it in ONE generation ([[IndexStore.sync]] — the same
+    * delete-wins and one-revision-per-id resolution): (removed ∪
+    * upserted) ids leave the map, affected clusters re-split from the
+    * updated index's live pairs, and the surviving upserts' probe pairs
+    * merge in. Net: read ≡ a map rebuilt over the post-diff corpus's
+    * pairs (spec-pinned in StreamingCorpusSyncSpec). */
+  def syncClusterMapViaLshIndex(upserts: DataFrame, removed: DataFrame,
       cmapDir: String, lshIndexDir: String, threshold: Double = 0.8): Unit = {
-    val s = upserts0.sparkSession
-    import s.implicits._
-    // the map's own copy of the shared sync resolution: the index fold
-    // below re-derives it, but steps 2–3 consume `upserts` directly
-    val upserts = IndexStore.latestRevision(upserts0, "doc_id")
-      .join(broadcast(removed.select($"doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint() // 3 consumers below; diff-sized
     syncLshIndex(upserts, removed, lshIndexDir)
-    deleteFromClusterMapViaLshIndex(
-      removed.select($"doc_id").unionByName(upserts.select($"doc_id")),
-      cmapDir, lshIndexDir, threshold)
-    // r19 batch 4: a delete-only diff (takedown batches — the d27
-    // shape) has nothing to merge back; zero upserts probe to zero
-    // pairs, and merging zero pairs is read-identical to not merging —
-    // skip the probe machinery and the merge's members pass outright.
-    // isEmpty on the checkpointed diff-sized frame is a block scan.
-    if (!upserts.isEmpty)
-      mergeIntoClusterMap(
-        probeLshIndex(s, lshIndexDir, upserts, threshold).select($"d1", $"d2"),
-        cmapDir)
-    graft.Scratch.releaseNow(upserts)
+    IndexStore.sync(ClusterMap, upserts, removed, viaLsh(lshIndexDir, threshold),
+      cmapDir)
+  }
+
+  /** Path compression: fold the members lane with all rep chains
+    * resolved into the next generation and drop the alias lane.
+    * Read-equivalent by construction (resolution is what readers do
+    * anyway); live-reader-safe via [[IndexStore]] generations. */
+  def compactClusterMap(s: SparkSession, dir: String): Unit =
+    IndexStore.compact(ClusterMap, s, dir)
+
+  /** Where a cluster-map fold gets its pairs: `among(docs)` gives the
+    * live pairs among surviving docs of the clusters dead ids touch, and
+    * `touching`, on a sync, the pairs each upserted doc forms. A write
+    * or merge takes no source (`None`): its rows are the pairs. */
+  private final case class PairSource(among: DataFrame => DataFrame,
+      touching: Option[DataFrame => DataFrame] = None)
+
+  /** Both pair sources from the persisted d21 index, generation
+    * resolved once per read: the shingle verify lane pruned to the
+    * affected doc set (one broadcast semi-join; affected-cluster-sized)
+    * with the index's own tombstones masked, then the exact prefix join
+    * over only those rows — standing text is never read; and the index
+    * probe of the upserts, which by then are in the synced index (the
+    * probe's own delta-id guard keeps them from self-pairing). */
+  private def viaLsh(lshIndexDir: String, threshold: Double): Option[PairSource] =
+    Some(PairSource(
+      affLive => {
+        val s = affLive.sparkSession
+        val root = IndexStore.currentPath(lshIndexDir)
+        // checkpointed here so a failed read pins nothing (the prefix
+        // join would otherwise checkpoint it eagerly); the index lane is
+        // unsorted and the prefix filter REQUIRES ascending arrays
+        prefixJoinPairs(graft.Scratch.track(IndexStore.checkpoint(
+          IndexStore.maskTombstonesAt(s.read.parquet(s"$root/shingles"), root, "doc_id")
+            .join(broadcast(affLive), Seq("doc_id"), "left_semi")
+            .select(col("doc_id"), array_sort(col("sh")).as("sh")))), threshold)
+      },
+      Some(ups => probeLshIndex(ups.sparkSession, lshIndexDir, ups, threshold))))
+
+  /** A delete is a sync that upserts nothing. */
+  private def removeFromClusterMap(removedIds: DataFrame, dir: String,
+      pairs: Option[PairSource]): Unit =
+    IndexStore.sync(ClusterMap,
+      removedIds.sparkSession.range(0).select(col("id").as("doc_id")),
+      removedIds, pairs, dir)
+
+  /** The cluster map for [[IndexStore]]'s lifecycle verbs. A write (or
+    * a first merge into a map with no members yet) labels its pairs'
+    * components; a merge appends the member and alias rows
+    * [[clusterMergeDelta]] derives against the current generation, and
+    * nothing for a batch that verified to no pair (r19: the standing
+    * members pass is skipped). A fold reads the members resolved,
+    * re-labels the clusters holding a dead id ([[relabeled]]), merges
+    * the upserts' probe pairs into the result, and writes it as one
+    * resolved `members` lane. The merge's pairs are checkpointed once:
+    * the merge reads them twice, and callers pass lazy probe plans. */
+  private val ClusterMap = IndexStore.Family[Option[PairSource]]("doc_id",
+    Seq(IndexStore.Lane("members", IndexStore.Coalesced),
+      IndexStore.Lane("aliases", IndexStore.Coalesced)),
+    derive = (rows, source, root) => source.fold {
+      val pairs = rows.select(col("d1"), col("d2"))
+      if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$root/members")))
+        Seq(clusterPairs(pairs))
+      else {
+        val p = IndexStore.checkpoint(pairs)
+        try {
+          if (p.isEmpty) Nil
+          else {
+            val (newMembers, aliases) =
+              clusterMergeDelta(resolvedMembers(rows.sparkSession, root), p)
+            Seq(newMembers, aliases)
+          }
+        } finally graft.Scratch.releaseNow(p)
+      }
+    }(_ => Seq(rows)), // a sync's upserts: probed after the re-label
+    regroup = Some((s, src, dead, fresh, model, keep) => {
+      val source = model.flatten
+      val standing = resolvedMembers(s, src)
+      val relabel = dead.zip(source).fold(identity[DataFrame] _) {
+        case (d, p) => relabeled(standing, d, p.among, keep) }
+      val out = relabel(standing.coalesce(math.max(1, standing.inputFiles.length / 16)))
+      val pairs = fresh.headOption.filterNot(_.isEmpty).zip(source.flatMap(_.touching))
+        .map { case (ups, touching) =>
+          keep(IndexStore.checkpoint(touching(ups).select(col("d1"), col("d2")))) }
+        .filterNot(_.isEmpty)
+      Seq(pairs.fold(out) { p =>
+        val (newMembers, aliases) = clusterMergeDelta(relabel(standing), p)
+        // one merge forms no alias chain: a single remap resolves it
+        out.join(broadcast(aliases.toDF("cluster_rep", "new_rep")),
+            Seq("cluster_rep"), "left")
+          .select(col("doc_id"), coalesce(col("new_rep"), col("cluster_rep")).as("cluster_rep"))
+          .unionByName(newMembers)
+      })
+    }))
+
+  /** The re-label step of a fold, as a function of the standing
+    * members (the fold applies it to a coalesced copy for the write):
+    * the clusters holding a dead id leave, and their surviving members
+    * come back labeled by CC over `among(survivors)`, guarded so a pair
+    * source reaching outside the survivors cannot touch other clusters. */
+  private def relabeled(standing: DataFrame, dead: DataFrame,
+      among: DataFrame => DataFrame, keep: DataFrame => DataFrame): DataFrame => DataFrame = {
+    val affReps = keep(IndexStore.checkpoint(standing
+      .join(broadcast(dead), Seq("doc_id"), "left_semi")
+      .select(col("cluster_rep")).distinct()))
+    val affLive = keep(IndexStore.checkpoint(standing
+      .join(broadcast(affReps), Seq("cluster_rep"), "left_semi")
+      .join(broadcast(dead), Seq("doc_id"), "left_anti").select(col("doc_id"))))
+    val labels = clusterPairs(keep(IndexStore.checkpoint(
+        among(affLive).select(col("d1"), col("d2")))))
+      .join(broadcast(affLive), Seq("doc_id"), "left_semi")
+    st => st.join(broadcast(affReps), Seq("cluster_rep"), "left_anti")
+      .select(col("doc_id"), col("cluster_rep")).unionByName(labels)
   }
 
   /** Temp cluster-map dirs from the registered d27 entry — the s17
     * FIFO discipline (results localCheckpointed before admission). */
-  private val d27MapDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private def d27Admit(dir: String): Unit = {
-    d27MapDirs.add(dir)
-    while (d27MapDirs.size > 4)
-      Option(d27MapDirs.poll()).foreach(graft.Scratch.deferDelete)
-  }
-  private lazy val d27CleanupHook: Unit = {
-    sys.addShutdownHook {
-      d27MapDirs.forEach(d => graft.BenchUtil.rmTree(d))
-    }
-    ()
-  }
+  private val d27MapDirs = new graft.Scratch.DirFifo(4)
 
   /** Registered: build the cluster map over the FULL corpus's pairs,
     * delete doc_id ≡ 0 (mod 9) through [[deleteFromClusterMap]] (the
@@ -1907,14 +1856,13 @@ object Dedup {
     val docs = documents(s, d).select($"doc_id", $"text")
     val dir =
       java.nio.file.Files.createTempDirectory("graft-d27-cmap").toString
-    d27CleanupHook
     writeClusterMap(ngramJaccardPairs(docs, 0.8).select($"d1", $"d2"), dir)
     deleteFromClusterMap(
       docs.filter($"doc_id" % 9 === 0).select($"doc_id"), dir,
       affLive => ngramJaccardPairs(
         docs.join(affLive, Seq("doc_id"), "left_semi"), 0.8))
     val out = graft.Scratch.track(readClusterMap(s, dir).localCheckpoint())
-    d27Admit(dir)
+    d27MapDirs.admit(dir)
     out
   }
 
@@ -1923,22 +1871,6 @@ object Dedup {
     * would read it as null during object init. */
   lazy val d27Sql: String =
     d08Sql.replace("FROM documents", "FROM documents WHERE doc_id % 9 <> 0")
-
-  /** Path compression: fold the members lane with all rep chains
-    * resolved into the next generation and drop the alias lane.
-    * Read-equivalent by construction (resolution is what readers do
-    * anyway); live-reader-safe via [[IndexStore]] generations. */
-  def compactClusterMap(s: SparkSession, dir: String): Unit = {
-    IndexStore.adoptLegacy(dir)
-    val src = IndexStore.currentPath(dir)
-    val g = IndexStore.nextGen(dir)
-    val in = resolvedMembers(s, src)
-    in.coalesce(math.max(1,
-        s.read.parquet(s"$src/members").inputFiles.length / 16))
-      .write.mode("overwrite").parquet(s"${IndexStore.genPath(dir, g)}/members")
-    IndexStore.publish(dir, g)
-    IndexStore.sweep(dir)
-  }
 
   private val AliasSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("old_rep",

@@ -41,9 +41,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * externally-built index dirs stay valid.
   *
   * Lifecycle: every artifact family (LSH, BM25, payload bands, IVF,
-  * IVFADC, labeled IVF) runs the same verbs, implemented once at the
-  * end of this object and driven by one private [[Family]] value per
-  * family. [[write]] builds a generation; [[append]] adds files to the
+  * IVFADC, labeled IVF, cluster map) runs the same verbs, implemented
+  * once at the end of this object and driven by one private [[Family]]
+  * value per family. [[write]] builds a generation; [[append]] adds files to the
   * current one; [[delete]] tombstones ids; [[sync]] folds a whole diff
   * into one new generation ([[update]] is a sync that removes nothing);
   * [[compact]] is the fold with an empty diff. Every fold has one
@@ -51,7 +51,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * → dead = tombstones ∪ removed ∪ upserts → standing lanes minus dead
   * plus the lanes derived from the upserts → [[publish]] → [[sweep]] →
   * release of the checkpointed scratch. The cluster map (connected
-  * components over pairs) keeps its own verbs in [[Dedup]].
+  * components over pairs) is the seventh family: its fold re-labels the
+  * clusters dead ids touch instead of anti-joining them
+  * ([[Family.regroup]]), so its sync, too, publishes once.
   */
 object IndexStore {
 
@@ -357,20 +359,32 @@ object IndexStore {
       fold: (SparkSession, String, String, Option[DataFrame], Seq[DataFrame]) => DataFrame,
       deleted: Option[(String, DataFrame) => DataFrame] = None)
 
+  /** The fold of a family whose dead ids change rows keyed by other ids
+    * (the cluster map: removing a bridge doc splits its cluster).
+    * `regroup(s, src, dead, fresh, model, keep)` returns the next
+    * generation's rows of each lane, fresh rows included, in place of
+    * the per-lane anti-join and union. `model` is the sync's (None on a
+    * compaction); `keep` hands a checkpoint to the fold's release. A
+    * lane it returns no rows for is left out of the generation. */
+  type Regroup[M] = (SparkSession, String, Option[DataFrame], Seq[DataFrame],
+                     Option[M], DataFrame => DataFrame) => Seq[DataFrame]
+
   /** One persisted artifact family as data — all [[write]], [[append]],
     * [[delete]], [[sync]], [[update]] and [[compact]] need to know.
     * `derive(rows, model, root)` gives the fresh rows of each of `lanes`,
     * in order, for rows keyed by `key`; `root` is the generation whose
     * `carried` lanes (models written once and copied forward unchanged)
     * it may read, and `model` is what the caller supplies per call (IVF
-    * centroids, the IVFADC subvector width). A sync folds one revision
-    * per key ([[latestRevision]]) unless `check` is set: then the
-    * checkpointed upserts are checked as they are instead. */
+    * centroids, the IVFADC subvector width, the cluster map's pair
+    * source). A sync folds one revision per key ([[latestRevision]])
+    * unless `check` is set: then the checkpointed upserts are checked as
+    * they are instead. */
   final case class Family[M](key: String, lanes: Seq[Lane],
       derive: (DataFrame, M, String) => Seq[DataFrame],
       carried: Seq[String] = Nil,
       derived: Option[Derived] = None,
-      check: Option[DataFrame => Unit] = None)
+      check: Option[DataFrame => Unit] = None,
+      regroup: Option[Regroup[M]] = None)
 
   /** A full build: generation N+1 holds the `carried` frames (one per
     * [[Family.carried]] lane) and the lanes derived from `docs`. */
@@ -432,18 +446,16 @@ object IndexStore {
     adoptLegacy(dir)
     val src = currentPath(dir)
     val gone = removed.select(col(f.key))
-    val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def kept(df: DataFrame): DataFrame = { scratch += df; df }
-    try {
+    fold(f, s, dir, src, Some(model)) { keep =>
       // diff-sized and read by the dead mask and the derivation: once
-      val upserts = kept(checkpoint(
+      val upserts = keep(checkpoint(
         (if (f.check.isEmpty) latestRevision(upserts0, f.key) else upserts0)
           .join(broadcast(gone), Seq(f.key), "left_anti")))
       f.check.foreach(_(upserts))
-      val dead = kept(checkpoint(readTombstones(s, dir, f.key)
+      val dead = keep(checkpoint(readTombstones(s, dir, f.key)
         .unionByName(gone).unionByName(upserts.select(col(f.key))).distinct()))
-      fold(f, s, dir, src, Some(dead), f.derive(upserts, model, src).map(kept))
-    } finally scratch.foreach(graft.Scratch.releaseNow)
+      (Some(dead), f.derive(upserts, model, src).map(keep))
+    }
   }
 
   /** [[sync]] with nothing removed. */
@@ -455,11 +467,11 @@ object IndexStore {
     * few large ones, tombstoned rows drop out and the tombstone lane is
     * reclaimed by the generation flip. With no tombstones the lanes are
     * copied without an anti-join. Served answers do not change. */
-  def compact(f: Family[_], s: SparkSession, dir: String): Unit = {
+  def compact[M](f: Family[M], s: SparkSession, dir: String): Unit = {
     adoptLegacy(dir)
     val src = currentPath(dir)
-    fold(f, s, dir, src,
-      if (hasTombstonesAt(src)) Some(readTombstonesAt(s, src, f.key)) else None, Nil)
+    fold(f, s, dir, src, None)(_ =>
+      (if (hasTombstonesAt(src)) Some(readTombstonesAt(s, src, f.key)) else None, Nil))
   }
 
   private def at(root: String, lane: Lane): String =
@@ -487,25 +499,37 @@ object IndexStore {
                       compactEvery: Int): Unit =
     if (compactEvery > 0 && bumpAppends(dir) % compactEvery == 0) compact(f, s, dir)
 
-  /** Build generation N+1 from generation `src` minus `dead` plus
-    * `fresh`, then publish it and sweep. */
-  private def fold(f: Family[_], s: SparkSession, dir: String, src: String,
-                   dead: Option[DataFrame], fresh: Seq[DataFrame]): Unit = {
-    val g = nextGen(dir)
-    val dst = genPath(dir, g)
-    f.carried.foreach(l =>
-      s.read.parquet(s"$src/$l").write.mode("overwrite").parquet(s"$dst/$l"))
-    f.lanes.zipWithIndex.foreach { case (lane, i) =>
-      val in = s.read.parquet(at(src, lane))
-      val live = dead.fold(in)(d => in.join(broadcast(d), Seq(f.key), "left_anti"))
-      val kept = if (lane.layout == Coalesced)
-        live.coalesce(math.max(1, in.inputFiles.length / 16)) else live
-      put(lane, fresh.lift(i).fold(kept)(kept.unionByName(_)), dst, "overwrite")
-    }
-    f.derived.foreach(d =>
-      d.fold(s, src, dst, dead, fresh).write.mode("overwrite").parquet(s"$dst/${d.lane}"))
-    publish(dir, g)
-    sweep(dir)
+  /** Build generation N+1 from generation `src` minus the dead ids plus
+    * the fresh rows that `diff` gives, then publish it and sweep. Every
+    * checkpoint `diff` or the family's regroup hands to `keep` is
+    * released whether or not the fold completes. */
+  private def fold[M](f: Family[M], s: SparkSession, dir: String, src: String,
+      model: Option[M])(
+      diff: (DataFrame => DataFrame) => (Option[DataFrame], Seq[DataFrame])): Unit = {
+    val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def keep(df: DataFrame): DataFrame = { scratch += df; df }
+    try {
+      val (dead, fresh) = diff(keep)
+      val g = nextGen(dir)
+      val dst = genPath(dir, g)
+      f.carried.foreach(l =>
+        s.read.parquet(s"$src/$l").write.mode("overwrite").parquet(s"$dst/$l"))
+      val rows = f.regroup match {
+        case Some(regroup) => regroup(s, src, dead, fresh, model, keep)
+        case None => f.lanes.zipWithIndex.map { case (lane, i) =>
+          val in = s.read.parquet(at(src, lane))
+          val live = dead.fold(in)(d => in.join(broadcast(d), Seq(f.key), "left_anti"))
+          val kept = if (lane.layout == Coalesced)
+            live.coalesce(math.max(1, in.inputFiles.length / 16)) else live
+          fresh.lift(i).fold(kept)(kept.unionByName(_))
+        }
+      }
+      f.lanes.zip(rows).foreach { case (lane, r) => put(lane, r, dst, "overwrite") }
+      f.derived.foreach(d =>
+        d.fold(s, src, dst, dead, fresh).write.mode("overwrite").parquet(s"$dst/${d.lane}"))
+      publish(dir, g)
+      sweep(dir)
+    } finally scratch.foreach(graft.Scratch.releaseNow)
   }
 
   /** `df.localCheckpoint()` that leaves no persisted RDD behind when its

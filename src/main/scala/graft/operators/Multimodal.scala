@@ -1115,11 +1115,10 @@ object Multimodal {
   def u05PayloadSyncProbe(s: SparkSession, d: String): DataFrame = {
     val dir =
       java.nio.file.Files.createTempDirectory("graft-u05-pay").toString
-    u05CleanupHook
     u05BenchFixture(s, d, dir)
     val out = graft.Scratch.track(
       u05BenchSyncProbe(s, d, dir).localCheckpoint())
-    u05Admit(dir)
+    u05Dirs.admit(dir)
     out
   }
 
@@ -1159,19 +1158,9 @@ object Multimodal {
   }
 
   /** Temp index dirs from the registered u05 entry, FIFO-capped (the
-    * s17Admit discipline): results are localCheckpointed before
+    * s17 discipline): results are localCheckpointed before
     * admission, so eviction can never invalidate a returned plan. */
-  private val u05Dirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private def u05Admit(dir: String): Unit = {
-    u05Dirs.add(dir)
-    while (u05Dirs.size > 4)
-      Option(u05Dirs.poll()).foreach(graft.Scratch.deferDelete)
-  }
-  private lazy val u05CleanupHook: Unit = {
-    sys.addShutdownHook { u05Dirs.forEach(d => graft.BenchUtil.rmTree(d)) }
-    ()
-  }
+  private val u05Dirs = new graft.Scratch.DirFifo(4)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "u05_payload_sync_probe" -> (u05PayloadSyncProbe _),

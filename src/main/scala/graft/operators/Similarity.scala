@@ -1373,12 +1373,11 @@ object Similarity {
       }
       val dir =
         java.nio.file.Files.createTempDirectory("graft-s27-index").toString
-      s17CleanupHook
       writeIvfAdcIndex(vq64, coarse, books, dsub, dir)
       val served = graft.Scratch.track(ivfAdcTopKFromIndex(s, dir,
         vq64.filter($"vec_id" < 20), dsub, nprobe, k = 3)
         .localCheckpoint())
-      s17Admit(dir)
+      s17IndexDirs.admit(dir)
       served
     } finally { vq64.unpersist(); () }
   }
@@ -1906,14 +1905,13 @@ object Similarity {
     val centroids = trainedCentroids(s, d, k = 5, iters = 2)
     val indexDir =
       java.nio.file.Files.createTempDirectory("graft-s17-index").toString
-    s17CleanupHook
     writeIvfIndex(c.select($"vec_id", $"v"), centroids, indexDir)
     val q = c.filter($"vec_id" < 20)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"))
     val served = graft.Scratch.track(
       ivfTopKFromIndex(s, indexDir, centroids, q, nprobe = 2, k = 3)
         .localCheckpoint())
-    s17Admit(indexDir)
+    s17IndexDirs.admit(indexDir)
     served
   }
 
@@ -1925,22 +1923,7 @@ object Similarity {
     * the block manager. Production callers own their index dir via
     * `writeIvfIndex`/`ivfTopKFromIndex` directly and are not subject
     * to this queue. */
-  private val s17IndexDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  /** Admit a dir to the FIFO (call only after the result backed by it
-    * has been materialized) and evict past the cap. */
-  private def s17Admit(dir: String): Unit = {
-    s17IndexDirs.add(dir)
-    while (s17IndexDirs.size > 8)
-      Option(s17IndexDirs.poll()).foreach(graft.Scratch.deferDelete)
-  }
-  private lazy val s17CleanupHook: Unit = {
-    sys.addShutdownHook {
-      s17IndexDirs.forEach(d => graft.BenchUtil.rmTree(d))
-    }
-    ()
-  }
+  private val s17IndexDirs = new graft.Scratch.DirFifo(8)
 
   /** Registered: s17's persisted round-trip with the DELETION verb —
     * build the artifact, tombstone vec_id ≡ 0 (mod 7)
@@ -1960,7 +1943,6 @@ object Similarity {
     val centroids = trainedCentroids(s, d, k = 5, iters = 2)
     val indexDir =
       java.nio.file.Files.createTempDirectory("graft-s31-index").toString
-    s17CleanupHook
     writeIvfIndex(c.select($"vec_id", $"v"), centroids, indexDir)
     deleteFromIvfIndex(c.filter($"vec_id" % 7 === 0).select($"vec_id"), indexDir)
     val q = c.filter($"vec_id" < 20)
@@ -1968,7 +1950,7 @@ object Similarity {
     val served = graft.Scratch.track(
       ivfTopKFromIndex(s, indexDir, centroids, q, nprobe = 2, k = 3)
         .localCheckpoint())
-    s17Admit(indexDir)
+    s17IndexDirs.admit(indexDir)
     served
   }
 
@@ -2009,7 +1991,6 @@ object Similarity {
     val boundary = maxId - (maxId + 1) / 5
     val indexDir =
       java.nio.file.Files.createTempDirectory("graft-s18-index").toString
-    s17CleanupHook
     writeIvfIndex(c.filter($"vec_id" <= boundary).select($"vec_id", $"v"),
       centroids, indexDir)
     appendToIvfIndex(c.filter($"vec_id" > boundary).select($"vec_id", $"v"),
@@ -2019,7 +2000,7 @@ object Similarity {
         .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn")),
       nprobe = 2, k = 3)
       .localCheckpoint())
-    s17Admit(indexDir)
+    s17IndexDirs.admit(indexDir)
     served
   }
 
@@ -2593,13 +2574,12 @@ object Similarity {
     val centroids = trainedCentroids(s, d, k = 5, iters = 2)
     val indexDir =
       java.nio.file.Files.createTempDirectory("graft-s29-index").toString
-    s17CleanupHook
     writeLabeledIvfIndex(c.select($"vec_id", $"label", $"v"), centroids, indexDir)
     val q = c.filter($"vec_id" < 20)
       .select($"vec_id".as("q_id"), $"label", $"v".as("qv"), $"nrm".as("qn"))
     val served = graft.Scratch.track(
       filteredTopKFromIndex(s, indexDir, q, k = 3).localCheckpoint())
-    s17Admit(indexDir)
+    s17IndexDirs.admit(indexDir)
     served
   }
 
@@ -2852,12 +2832,11 @@ object Similarity {
   def u04IvfSyncServe(s: SparkSession, d: String): DataFrame = {
     val dir =
       java.nio.file.Files.createTempDirectory("graft-u04-ivf").toString
-    s17CleanupHook
     val cents = u04BenchFixture(s, d, dir)
     val served = graft.Scratch.track(
       u04BenchSyncServe(s, d, dir, cents).localCheckpoint())
     graft.Scratch.releaseNow(cents)
-    s17Admit(dir)
+    s17IndexDirs.admit(dir)
     served
   }
 
@@ -2970,11 +2949,10 @@ object Similarity {
   def u06IvfAdcSyncServe(s: SparkSession, d: String): DataFrame = {
     val dir =
       java.nio.file.Files.createTempDirectory("graft-u06-adc").toString
-    s17CleanupHook
     u06BenchFixture(s, d, dir)
     val served = graft.Scratch.track(
       u06BenchSyncServe(s, d, dir).localCheckpoint())
-    s17Admit(dir)
+    s17IndexDirs.admit(dir)
     served
   }
 
@@ -3069,12 +3047,11 @@ object Similarity {
   def u07LabeledSyncServe(s: SparkSession, d: String): DataFrame = {
     val dir =
       java.nio.file.Files.createTempDirectory("graft-u07-lab").toString
-    s17CleanupHook
     val cents = u07BenchFixture(s, d, dir)
     val served = graft.Scratch.track(
       u07BenchSyncServe(s, d, dir, cents).localCheckpoint())
     graft.Scratch.releaseNow(cents)
-    s17Admit(dir)
+    s17IndexDirs.admit(dir)
     served
   }
 

@@ -1353,19 +1353,7 @@ object TextAnalysis {
   /** Temp index dirs from the registered t41 entry — the s17 FIFO
     * discipline (results are localCheckpointed before admission, so an
     * eviction can never invalidate a returned plan). */
-  private val t41IndexDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private def t41Admit(dir: String): Unit = {
-    t41IndexDirs.add(dir)
-    while (t41IndexDirs.size > 4)
-      Option(t41IndexDirs.poll()).foreach(graft.Scratch.deferDelete)
-  }
-  private lazy val t41CleanupHook: Unit = {
-    sys.addShutdownHook {
-      t41IndexDirs.forEach(d => graft.BenchUtil.rmTree(d))
-    }
-    ()
-  }
+  private val t41IndexDirs = new graft.Scratch.DirFifo(4)
 
   /** Registered: build the artifact in a temp dir in-plan (oracle
     * self-containment, the s17/s27 discipline) and serve t25's exact
@@ -1376,12 +1364,11 @@ object TextAnalysis {
     val docs = documents(s, d).select($"doc_id", $"text")
     val dir =
       java.nio.file.Files.createTempDirectory("graft-t41-index").toString
-    t41CleanupHook
     writeBm25Index(docs, dir)
     val served = graft.Scratch.track(
       bm25TopKFromIndex(s, dir, docs.filter($"doc_id" < 20), 3)
         .localCheckpoint())
-    t41Admit(dir)
+    t41IndexDirs.admit(dir)
     served
   }
 

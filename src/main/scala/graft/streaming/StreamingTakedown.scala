@@ -26,10 +26,13 @@ import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
   * stream carries one (a takedown feed that maps docs to their
   * embedding rows upstream).
   *
-  * The cluster map is deliberately NOT in the fan-out: its deletion
-  * verb re-derives affected live pairs (a generation fold, c07
-  * snapshot cadence — see [[graft.operators.Dedup.deleteFromClusterMap]]),
-  * which is maintenance-window work, not per-micro-batch work. */
+  * The cluster map is deliberately NOT in the fan-out: it is the
+  * seventh IndexStore family, but its deletion verb is a generation
+  * fold that re-derives affected live pairs, not a tombstone append
+  * (c07 snapshot cadence — see
+  * [[graft.operators.Dedup.deleteFromClusterMap]]), which is
+  * maintenance-window work, not per-micro-batch work. Its CDC sync
+  * ([[StreamingCorpusSync]]) folds delete and merge in one publish. */
 object StreamingTakedown {
 
   /** Start the propagation query over a streaming removals frame.

@@ -2,13 +2,16 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, IndexStore, Multimodal, Similarity, TextAnalysis}
 
 /** A sync that fails part-way, for every artifact family that goes
-  * through `IndexStore`'s shared lifecycle verbs. The replay contract of
+  * through `IndexStore`'s shared lifecycle verbs, the cluster map
+  * included. The replay contract of
   * a `foreachBatch` sink (Structured Streaming re-runs a failed batch)
   * needs three things of a failed sync:
   *
@@ -22,7 +25,9 @@ import graft.operators.{Dedup, IndexStore, Multimodal, Similarity, TextAnalysis}
   * Two failures per family: one upsert row whose content columns
   * `raise_error` (the batch fails while its rows are first evaluated),
   * and an unreadable tombstone file (the upserts are checkpointed, then
-  * the dead mask fails to build).
+  * the dead mask fails to build). The cluster map's second failure is
+  * its pair source: the LSH index it re-labels from turns unreadable
+  * once that index has taken the batch.
   */
 class LifecycleFailureSpec extends SparkSpec {
   import spark.implicits._
@@ -81,12 +86,52 @@ class LifecycleFailureSpec extends SparkSpec {
     (c, Similarity.pqCodebooks(rsv, 16, 2).localCheckpoint())
   }
 
+  /** The second failure of a sync of removed ids `rem` into `dir`: set
+    * it up, and give the removed ids to sync with and the cleanup. */
+  private type Breaker = (String, DataFrame) => (DataFrame, () => Unit)
+
+  /** An unreadable tombstone: the upserts checkpoint, then the dead
+    * mask fails to build. */
+  private val unreadableTombstone: Breaker = (dir, rem) => {
+    val lane = Paths.get(IndexStore.tombstoneLane(IndexStore.currentPath(dir)))
+    Files.createDirectories(lane)
+    Files.write(lane.resolve("part-00000-corrupt.parquet"), "not parquet".getBytes("UTF-8"))
+    (rem, () => BenchUtil.rmTree(lane.toString))
+  }
+
+  /** The cluster map's LSH index (inside the map dir, where no lane
+    * listing sees it). */
+  private def lshOf(dir: String) = s"$dir/_lsh"
+
+  /** A failing pair source: the first read of `rem` after the map's
+    * LSH index has published the batch drops an unreadable file into
+    * that generation's shingle lane, which the map's re-label reads. */
+  private val unreadablePairSource: Breaker = (dir, rem) => {
+    val lsh = lshOf(dir)
+    val g0 = IndexStore.currentGen(lsh).get
+    val bad = "part-99999-tripwire.parquet"
+    val trip = udf { (_: Long) =>
+      IndexStore.currentGen(lsh).filter(_ > g0).foreach { g =>
+        val f = Paths.get(IndexStore.genPath(lsh, g), "shingles", bad)
+        if (!Files.exists(f)) Files.write(f, "not parquet".getBytes("UTF-8"))
+      }
+      true
+    }.asNondeterministic()
+    (rem.filter(trip($"doc_id")), () => {
+      val st = Files.walk(Paths.get(lsh))
+      try st.iterator().asScala.filter(_.getFileName.toString == bad).foreach(Files.delete)
+      finally st.close()
+    })
+  }
+
   /** One family: its key column, write and sync over corpus-shaped
-    * frames, and a serve round as a set of answer rows. */
+    * frames, a serve round as a set of answer rows, and its second
+    * failure. */
   private case class Family(name: String, key: String,
       write: (DataFrame, String) => Unit,
       sync: (DataFrame, DataFrame, String) => Unit,
-      serve: String => Set[String])
+      serve: String => Set[String],
+      break: Breaker = unreadableTombstone)
 
   private def rows(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
   private def text(d: DataFrame) = d.select($"doc_id", $"text")
@@ -125,7 +170,16 @@ class LifecycleFailureSpec extends SparkSpec {
         d.select($"doc_id".as("vec_id"), $"label", $"v"), centroids, dir),
       (u, r, dir) => Similarity.syncLabeledIvfIndex(
         u.select($"doc_id".as("vec_id"), $"label", $"v"), r, centroids, dir),
-      dir => rows(Similarity.filteredTopKFromIndex(spark, dir, vecQueries, k = 3))))
+      dir => rows(Similarity.filteredTopKFromIndex(spark, dir, vecQueries, k = 3))),
+    Family("cluster map", "doc_id",
+      (d, dir) => {
+        Dedup.writeLshIndex(text(d), lshOf(dir))
+        Dedup.writeClusterMap(Dedup.ngramJaccardPairs(text(d), 0.8)
+          .select($"d1", $"d2"), dir)
+      },
+      (u, r, dir) => Dedup.syncClusterMapViaLshIndex(text(u), r, dir, lshOf(dir)),
+      dir => rows(Dedup.readClusterMap(spark, dir)),
+      unreadablePairSource))
 
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
@@ -154,13 +208,9 @@ class LifecycleFailureSpec extends SparkSpec {
         failedSync(dir)(f.sync(poisoned(ups, badId), rem, dir))
         assert(f.serve(dir) === want, "a failed sync changed the served answers")
 
-        // an unreadable tombstone: the upserts checkpoint, then the
-        // dead mask fails to build
-        val lane = Paths.get(IndexStore.tombstoneLane(IndexStore.currentPath(dir)))
-        Files.createDirectories(lane)
-        Files.write(lane.resolve("part-00000-corrupt.parquet"), "not parquet".getBytes("UTF-8"))
-        try failedSync(dir)(f.sync(ups, rem, dir))
-        finally BenchUtil.rmTree(lane.toString)
+        val (broken, mend) = f.break(dir, rem)
+        try failedSync(dir)(f.sync(ups, broken, dir))
+        finally mend()
         assert(f.serve(dir) === want, "a failed sync changed the served answers")
         Scratch.drain()
 

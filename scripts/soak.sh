@@ -11,15 +11,17 @@
 # replays, compactEvery through each leg's streaming query) +
 # ClusterMaintenanceSpec (the cluster map's merge, delete and
 # compaction against one-shot CC) + LifecycleFailureSpec (a sync that
-# fails part-way, per artifact family) N times (default 20), one sbt
-# session per run, and reports the pass count.
+# fails part-way, per artifact family) + LaneReadSpec (lane reads from a
+# driver listing under declared schemas: schema drift, no read-planning
+# job, empty partitioned lanes, no tombstone WARN) N times (default 20),
+# one sbt session per run, and reports the pass count.
 #
 #   scripts/soak.sh [N]
 set -u
 N="${1:-20}"
 pass=0
 for i in $(seq 1 "$N"); do
-  if sbt -batch "testOnly graft.EsSimSourceSpec graft.LocalCheckpointFileManagerSpec graft.CompactionPropertySpec graft.EsSimStoreSpec graft.StreamingCorpusSyncSpec graft.StreamingHistorySpec graft.ClusterMaintenanceSpec graft.LifecycleFailureSpec" \
+  if sbt -batch "testOnly graft.EsSimSourceSpec graft.LocalCheckpointFileManagerSpec graft.CompactionPropertySpec graft.EsSimStoreSpec graft.StreamingCorpusSyncSpec graft.StreamingHistorySpec graft.ClusterMaintenanceSpec graft.LifecycleFailureSpec graft.LaneReadSpec" \
       > "/tmp/soak_$i.log" 2>&1; then
     pass=$((pass + 1))
     echo "soak run $i/$N: PASS"

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 import graft.Tables._
 
@@ -1118,6 +1119,13 @@ object Dedup {
     banded.groupBy($"band_id", $"band_hash").agg(count(lit(1)).as("n"))
   }
 
+  private val LshShingles = IndexStore.Lane("shingles", IndexStore.Coalesced,
+    IndexStore.columns("doc_id" -> LongType, "sh" -> ArrayType(LongType)))
+  private val LshBanded = IndexStore.Lane("banded", IndexStore.Coalesced,
+    IndexStore.columns("doc_id" -> LongType, "band_id" -> IntegerType, "band_hash" -> LongType))
+  private val LshCounts = IndexStore.Lane("bucket_counts", IndexStore.Coalesced,
+    IndexStore.columns("band_id" -> IntegerType, "band_hash" -> LongType, "n" -> LongType))
+
   /** The LSH artifact for [[IndexStore]]'s lifecycle verbs: the shingle
     * frame (verify lane) and its banding (candidate lane), plus the
     * bucket-count partials. The fresh shingles feed the banding and the
@@ -1128,20 +1136,19 @@ object Dedup {
     * dropped at n ≤ 0 — row for row what a rebuild writes. A delete
     * needs no correction: probes subtract the tombstoned docs' mass
     * themselves ([[maskLshLanes]]). */
-  private val Lsh = IndexStore.Family[Unit]("doc_id",
-    Seq(IndexStore.Lane("shingles", IndexStore.Coalesced),
-      IndexStore.Lane("banded", IndexStore.Coalesced)),
+  private[graft] val Lsh = IndexStore.Family[Unit]("doc_id",
+    Seq(LshShingles, LshBanded),
     derive = (docs, _, _) => {
       val sh = graft.Scratch.track(IndexStore.checkpoint(shingleFrame(docs)))
       Seq(sh, IndexStore.checkpoint(bandedOf(sh)))
     },
-    derived = Some(IndexStore.Derived("bucket_counts",
+    derived = Some(IndexStore.Derived(LshCounts,
       partial = (_, fresh) => bandedOf_counts(fresh(1)),
       fold = (s, src, _, dead, fresh) => {
         import s.implicits._
-        val counts = s.read.parquet(s"$src/bucket_counts")
+        val counts = IndexStore.read(s, src, LshCounts)
         val deadCounts = dead.map(d => bandedOf_counts(
-            s.read.parquet(s"$src/banded").join(broadcast(d), Seq("doc_id"), "left_semi"))
+            IndexStore.read(s, src, LshBanded).join(broadcast(d), Seq("doc_id"), "left_semi"))
           .select($"band_id", $"band_hash", (-$"n").as("n")))
         (counts +: (deadCounts.toSeq ++ fresh.lift(1).map(bandedOf_counts)))
           .reduce(_ unionByName _)
@@ -1243,15 +1250,12 @@ object Dedup {
     // was ever recorded — the zero-tombstone plan is IDENTICAL to the
     // pre-deletion probe (no `_tombstones` scan, no anti-join stages;
     // one filesystem stat decides, PlanSpec-pinned)
+    val (banded, counts, shingles) = (IndexStore.read(s, root, LshBanded),
+      IndexStore.read(s, root, LshCounts), IndexStore.read(s, root, LshShingles))
     val (b, c, sh) =
       if (IndexStore.hasTombstonesAt(root))
-        maskLshLanes(s.read.parquet(s"$root/banded"),
-          s.read.parquet(s"$root/bucket_counts"),
-          s.read.parquet(s"$root/shingles"),
-          IndexStore.readTombstonesAt(s, root, "doc_id"))
-      else (s.read.parquet(s"$root/banded"),
-        s.read.parquet(s"$root/bucket_counts"),
-        s.read.parquet(s"$root/shingles"))
+        maskLshLanes(banded, counts, shingles, IndexStore.readTombstonesAt(s, root, "doc_id"))
+      else (banded, counts, shingles)
     probeLshFrames(b, c, sh, delta, threshold, maxBucket)
   }
 
@@ -1738,7 +1742,7 @@ object Dedup {
     * live pairs among surviving docs of the clusters dead ids touch, and
     * `touching`, on a sync, the pairs each upserted doc forms. A write
     * or merge takes no source (`None`): its rows are the pairs. */
-  private final case class PairSource(among: DataFrame => DataFrame,
+  private[graft] final case class PairSource(among: DataFrame => DataFrame,
       touching: Option[DataFrame => DataFrame] = None)
 
   /** Both pair sources from the persisted d21 index, generation
@@ -1757,7 +1761,7 @@ object Dedup {
         // join would otherwise checkpoint it eagerly); the index lane is
         // unsorted and the prefix filter REQUIRES ascending arrays
         prefixJoinPairs(graft.Scratch.track(IndexStore.checkpoint(
-          IndexStore.maskTombstonesAt(s.read.parquet(s"$root/shingles"), root, "doc_id")
+          IndexStore.maskTombstonesAt(IndexStore.read(s, root, LshShingles), root, "doc_id")
             .join(broadcast(affLive), Seq("doc_id"), "left_semi")
             .select(col("doc_id"), array_sort(col("sh")).as("sh")))), threshold)
       },
@@ -1770,6 +1774,11 @@ object Dedup {
       removedIds.sparkSession.range(0).select(col("id").as("doc_id")),
       removedIds, pairs, dir)
 
+  private val Members = IndexStore.Lane("members", IndexStore.Coalesced,
+    IndexStore.columns("doc_id" -> LongType, "cluster_rep" -> LongType))
+  private val Aliases = IndexStore.Lane("aliases", IndexStore.Coalesced,
+    IndexStore.columns("old_rep" -> LongType, "new_rep" -> LongType))
+
   /** The cluster map for [[IndexStore]]'s lifecycle verbs. A write (or
     * a first merge into a map with no members yet) labels its pairs'
     * components; a merge appends the member and alias rows
@@ -1780,12 +1789,11 @@ object Dedup {
     * the upserts' probe pairs into the result, and writes it as one
     * resolved `members` lane. The merge's pairs are checkpointed once:
     * the merge reads them twice, and callers pass lazy probe plans. */
-  private val ClusterMap = IndexStore.Family[Option[PairSource]]("doc_id",
-    Seq(IndexStore.Lane("members", IndexStore.Coalesced),
-      IndexStore.Lane("aliases", IndexStore.Coalesced)),
+  private[graft] val ClusterMap = IndexStore.Family[Option[PairSource]]("doc_id",
+    Seq(Members, Aliases),
     derive = (rows, source, root) => source.fold {
       val pairs = rows.select(col("d1"), col("d2"))
-      if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$root/members")))
+      if (!IndexStore.exists(root, Members))
         Seq(clusterPairs(pairs))
       else {
         val p = IndexStore.checkpoint(pairs)
@@ -1872,12 +1880,6 @@ object Dedup {
   lazy val d27Sql: String =
     d08Sql.replace("FROM documents", "FROM documents WHERE doc_id % 9 <> 0")
 
-  private val AliasSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("old_rep",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("new_rep",
-      org.apache.spark.sql.types.LongType)))
-
   /** Members with reps resolved through the alias closure. The alias
     * lane collects to the driver (bounded by merge events between
     * compactions — see the family scaladoc) and applies as ONE
@@ -1888,19 +1890,12 @@ object Dedup {
     // schema-explicit empty on a lane that does not exist yet (a fresh
     // map being built by its first streamed merges)
     val members =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$root/members")))
-        s.read.parquet(s"$root/members")
+      if (IndexStore.exists(root, Members)) IndexStore.read(s, root, Members)
       else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("cluster_rep",
-            org.apache.spark.sql.types.LongType))))
-    val aliasDir = java.nio.file.Paths.get(s"$root/aliases")
+        Members.schema)
     val aliases =
-      if (java.nio.file.Files.isDirectory(aliasDir))
-        s.read.schema(AliasSchema).parquet(s"$root/aliases")
-          .as[(Long, Long)].collect().toSeq
+      if (IndexStore.exists(root, Aliases))
+        IndexStore.read(s, root, Aliases).as[(Long, Long)].collect().toSeq
       else Seq.empty[(Long, Long)]
     if (aliases.isEmpty) members
     else {

@@ -1,11 +1,15 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileVisitResult, Files, Path, Paths, SimpleFileVisitor, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.spark.sql.{DataFrame, GraftGlue, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Generation-based layout + live-reader-safe compaction plumbing for
   * the persisted index artifacts (d21's LSH lanes, m10's payload
@@ -54,6 +58,17 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * components over pairs) is the seventh family: its fold re-labels the
   * clusters dead ids touch instead of anti-joining them
   * ([[Family.regroup]]), so its sync, too, publishes once.
+  *
+  * Reads: every lane ([[Lane]]: keyed, derived, carried, tombstones)
+  * declares its schema, partition columns included, and every lane read
+  * goes through [[readLane]], which lists the lane directory on the
+  * driver (the same driver-visible directories `_current`, [[sweep]]
+  * and [[hasTombstonesAt]] assume) and plans the scan from that listing
+  * and the declared schema. A lane read therefore runs no Spark job:
+  * no footer job to infer a schema, no listing job for a lane of more
+  * than 32 partition directories, and an empty lane reads as empty.
+  * [[put]] checks each lane's rows against the declaration before it
+  * writes.
   */
 object IndexStore {
 
@@ -166,6 +181,10 @@ object IndexStore {
     * by its presence. */
   def tombstoneLane(root: String): String = s"$root/_tombstones"
 
+  /** The tombstone lane of a family keyed by `key`: the key, as longs. */
+  private[graft] def tombstones(key: String): Lane =
+    Lane("_tombstones", Coalesced, columns(key -> LongType))
+
   /** Record deletions: append the ids' single key column as tombstone
     * rows under the CURRENT generation's `_tombstones` lane. Living
     * INSIDE the generation gives deletes exactly the crash/reader
@@ -188,14 +207,14 @@ object IndexStore {
   def appendTombstones(ids: DataFrame, dir: String, idCol: String): Unit = {
     adoptLegacy(dir)
     if (currentGen(dir).isEmpty) publish(dir, 0L) // empty artifact: still record
-    ids.select(col(idCol).cast(LongType).as(idCol)).distinct()
-      .write.mode("append").parquet(tombstoneLane(currentPath(dir)))
+    put(tombstones(idCol), ids.select(col(idCol).cast(LongType).as(idCol)).distinct(),
+      currentPath(dir), "append")
   }
 
   /** The current generation's tombstoned ids, distinct, as a one-long-
     * column frame (empty when no deletion ever happened — a missing
-    * lane is not an error). Schema-explicit: an all-duplicate delete
-    * batch can leave a file-less lane dir where inference would throw.
+    * lane is not an error; a file-less lane dir, which an all-duplicate
+    * delete batch can leave, reads as empty through its declaration).
     * Removals are delta-sized by premise, so callers broadcast this
     * frame into anti-joins against standing lanes — the standing side
     * streams, preserving every probe's delta-cost contract. */
@@ -209,11 +228,9 @@ object IndexStore {
     * concurrent maintainer flip pairs gen G's lanes with gen G+1's
     * folded-away tombstone state, serving deleted rows unmasked). */
   def readTombstonesAt(s: SparkSession, root: String, idCol: String): DataFrame = {
-    val lane = tombstoneLane(root)
-    val schema = StructType(Seq(StructField(idCol, LongType)))
-    if (Files.isDirectory(Paths.get(lane)))
-      s.read.schema(schema).parquet(lane).distinct()
-    else s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+    val lane = tombstones(idCol)
+    if (hasTombstonesAt(root)) read(s, root, lane).distinct()
+    else s.createDataFrame(s.sparkContext.emptyRDD[Row], lane.schema)
   }
 
   /** Whether any deletion was ever recorded against the artifact — one
@@ -342,9 +359,15 @@ object IndexStore {
     * prunes on `by` opens few files. */
   final case class Clustered(by: Seq[String], sort: Seq[String]) extends Layout
 
-  /** A lane the verbs rewrite: `name` under the generation root, or the
-    * root itself when empty (the IVF lists). */
-  final case class Lane(name: String, layout: Layout)
+  /** A lane: `name` under the generation root, or the root itself when
+    * empty (the IVF lists). `schema` is its rows' columns as a read sees
+    * them: the files' columns in order, then the `Clustered` partition
+    * columns, nested fields nullable. */
+  final case class Lane(name: String, layout: Layout, schema: StructType)
+
+  /** A lane schema of nullable columns. */
+  def columns(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t) })
 
   /** A lane computed from the others rather than keyed by id, so a fold
     * cannot anti-join it: LSH's bucket counts, BM25's stats partials.
@@ -354,7 +377,7 @@ object IndexStore {
     * with no tombstones, `fresh` empty on a compaction); `deleted(root,
     * newlyDead)`, when set, is the correction a delete appends after its
     * tombstones. */
-  final case class Derived(lane: String,
+  final case class Derived(lane: Lane,
       partial: (DataFrame, Seq[DataFrame]) => DataFrame,
       fold: (SparkSession, String, String, Option[DataFrame], Seq[DataFrame]) => DataFrame,
       deleted: Option[(String, DataFrame) => DataFrame] = None)
@@ -381,7 +404,7 @@ object IndexStore {
     * they are instead. */
   final case class Family[M](key: String, lanes: Seq[Lane],
       derive: (DataFrame, M, String) => Seq[DataFrame],
-      carried: Seq[String] = Nil,
+      carried: Seq[Lane] = Nil,
       derived: Option[Derived] = None,
       check: Option[DataFrame => Unit] = None,
       regroup: Option[Regroup[M]] = None)
@@ -392,8 +415,7 @@ object IndexStore {
                carried: Seq[DataFrame] = Nil): Unit = {
     val g = nextGen(dir)
     val root = genPath(dir, g)
-    f.carried.zip(carried).foreach { case (l, df) =>
-      df.write.mode("overwrite").parquet(s"$root/$l") }
+    f.carried.zip(carried).foreach { case (l, df) => put(l, df, root, "overwrite") }
     emit(f, docs, model, root, "overwrite")
     publish(dir, g)
     sweep(dir)
@@ -425,7 +447,7 @@ object IndexStore {
         try {
           appendTombstones(newDead, dir, f.key)
           val root = currentPath(dir)
-          correction(root, newDead).write.mode("append").parquet(s"$root/$lane")
+          put(lane, correction(root, newDead), root, "append")
         } finally graft.Scratch.releaseNow(newDead)
     }
     cadence(f, s, dir, compactEvery)
@@ -474,24 +496,77 @@ object IndexStore {
       (if (hasTombstonesAt(src)) Some(readTombstonesAt(s, src, f.key)) else None, Nil))
   }
 
-  private def at(root: String, lane: Lane): String =
+  private[graft] def at(root: String, lane: Lane): String =
     if (lane.name.isEmpty) root else s"$root/${lane.name}"
 
-  private def put(lane: Lane, rows: DataFrame, root: String, mode: String): Unit =
+  /** Whether the generation root `root` holds `lane`: one stat. */
+  def exists(root: String, lane: Lane): Boolean = Files.isDirectory(Paths.get(at(root, lane)))
+
+  /** The lane `lane` of the generation root `root` ([[readLane]]). */
+  def read(s: SparkSession, root: String, lane: Lane): DataFrame =
+    readLane(s, at(root, lane), lane.schema)
+
+  /** A lane directory's rows under its declared `schema`, planned with
+    * no Spark job. The directory is listed here, on the driver, skipping
+    * what Spark's own listing skips (`_`- and `.`-prefixed names, so
+    * `_tombstones`, `_SUCCESS` and the `.crc` sidecars), and the scan is
+    * an [[InMemoryFileIndex]] over exactly that listing: partition
+    * values are parsed from the directory names, typed by `schema`, and
+    * nothing infers a schema from a footer. Each call lists afresh;
+    * nothing is cached across calls. */
+  def readLane(s: SparkSession, path: String, schema: StructType): DataFrame = {
+    val dir = Paths.get(path)
+    val root = FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
+      .makeQualified(new HPath(dir.toAbsolutePath.toString))
+    val files = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+    Files.walkFileTree(dir, new SimpleFileVisitor[Path] {
+      override def preVisitDirectory(d: Path, a: BasicFileAttributes): FileVisitResult =
+        if (d != dir && GraftGlue.hiddenName(d.getFileName.toString))
+          FileVisitResult.SKIP_SUBTREE
+        else FileVisitResult.CONTINUE
+      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
+        // block size: the local file system's default, as its own listing reports
+        if (a.isRegularFile && !GraftGlue.hiddenName(f.getFileName.toString))
+          files += new FileStatus(a.size, false, 1, 32L << 20, a.lastModifiedTime.toMillis,
+            new HPath(root, dir.relativize(f).toString))
+        FileVisitResult.CONTINUE
+      }
+    })
+    val listed = new FileStatusCache {
+      override def getLeafFiles(p: HPath): Option[Array[FileStatus]] =
+        Option.when(p == root)(files.toArray)
+      override def putLeafFiles(p: HPath, leaves: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(s, Seq(root), Map.empty, Some(schema), listed)
+    val parts = index.partitionSchema
+    s.baseRelationToDataFrame(HadoopFsRelation(index, parts,
+      StructType(schema.filterNot(f => parts.fieldNames.contains(f.name))),
+      None, new ParquetFileFormat, Map.empty)(s))
+  }
+
+  /** Write `rows` as `lane` of `root`, after checking them against the
+    * lane's declared columns (names and types, nullability aside), so a
+    * lane never holds files its reads would misread. */
+  private def put(lane: Lane, rows: DataFrame, root: String, mode: String): Unit = {
+    def cols(t: StructType) = t.fields.map(f => f.name -> f.dataType.catalogString).toSet
+    require(cols(rows.schema) == cols(lane.schema),
+      s"lane ${at(root, lane)}: rows ${rows.schema.catalogString} " +
+      s"do not match its declared ${lane.schema.catalogString}")
     (lane.layout match {
       case Coalesced => rows.write
       case Clustered(by, sort) =>
         rows.repartition(by.map(col): _*).sortWithinPartitions(sort.map(col): _*)
           .write.partitionBy(by: _*)
     }).mode(mode).parquet(at(root, lane))
+  }
 
   private def emit[M](f: Family[M], docs: DataFrame, model: M, root: String,
                       mode: String): Unit = {
     val fresh = f.derive(docs, model, root)
     try {
       f.lanes.zip(fresh).foreach { case (l, rows) => put(l, rows, root, mode) }
-      f.derived.foreach(d =>
-        d.partial(docs, fresh).write.mode(mode).parquet(s"$root/${d.lane}"))
+      f.derived.foreach(d => put(d.lane, d.partial(docs, fresh), root, mode))
     } finally fresh.foreach(graft.Scratch.releaseNow)
   }
 
@@ -512,12 +587,11 @@ object IndexStore {
       val (dead, fresh) = diff(keep)
       val g = nextGen(dir)
       val dst = genPath(dir, g)
-      f.carried.foreach(l =>
-        s.read.parquet(s"$src/$l").write.mode("overwrite").parquet(s"$dst/$l"))
+      f.carried.foreach(l => put(l, read(s, src, l), dst, "overwrite"))
       val rows = f.regroup match {
         case Some(regroup) => regroup(s, src, dead, fresh, model, keep)
         case None => f.lanes.zipWithIndex.map { case (lane, i) =>
-          val in = s.read.parquet(at(src, lane))
+          val in = read(s, src, lane)
           val live = dead.fold(in)(d => in.join(broadcast(d), Seq(f.key), "left_anti"))
           val kept = if (lane.layout == Coalesced)
             live.coalesce(math.max(1, in.inputFiles.length / 16)) else live
@@ -525,8 +599,7 @@ object IndexStore {
         }
       }
       f.lanes.zip(rows).foreach { case (lane, r) => put(lane, r, dst, "overwrite") }
-      f.derived.foreach(d =>
-        d.fold(s, src, dst, dead, fresh).write.mode("overwrite").parquet(s"$dst/${d.lane}"))
+      f.derived.foreach(d => put(d.lane, d.fold(s, src, dst, dead, fresh), dst, "overwrite"))
       publish(dir, g)
       sweep(dir)
     } finally scratch.foreach(graft.Scratch.releaseNow)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.Tables._
 
@@ -530,11 +531,14 @@ object Multimodal {
   def writePayloadIndex(payloads: DataFrame, dir: String): Unit =
     IndexStore.write(Payload, payloads, (), dir)
 
+  private val PayloadBands = IndexStore.Lane("bands", IndexStore.Coalesced,
+    IndexStore.columns("doc_id" -> LongType, "fp" -> LongType, "chunk_id" -> IntegerType,
+      "chunk_val" -> LongType))
+
   /** The payload artifact for [[IndexStore]]'s lifecycle verbs: one
     * band lane, (doc_id, fp, chunk_id, chunk_val). Payload bytes never
     * shuffle on any verb — only the 8 band rows per doc move. */
-  private val Payload = IndexStore.Family[Unit]("doc_id",
-    Seq(IndexStore.Lane("bands", IndexStore.Coalesced)),
+  private[graft] val Payload = IndexStore.Family[Unit]("doc_id", Seq(PayloadBands),
     derive = (payloads, _, _) => Seq(payloadBands(payloads)))
 
   def appendToPayloadIndex(delta: DataFrame, dir: String,
@@ -586,7 +590,7 @@ object Multimodal {
       // tombstone masking ([[deleteFromPayloadIndex]]) — plan-identical
       // to the pre-deletion probe on a never-deleted index
       IndexStore.maskTombstonesAt(
-        s.read.parquet(s"$root/bands"), root, "doc_id"),
+        IndexStore.read(s, root, PayloadBands), root, "doc_id"),
       delta, maxHamming)
   }
 

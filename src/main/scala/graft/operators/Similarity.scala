@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType}
 
 import graft.Tables._
 
@@ -1257,6 +1258,16 @@ object Similarity {
                        dsub: Int, dir: String): Unit =
     IndexStore.write(IvfAdc, vq64, dsub, dir, Seq(coarse, books))
 
+  /** The IVFADC model lanes: per subspace `sub`, centroid `cid` at `cv`. */
+  private def adcModel(name: String) = IndexStore.Lane(name, IndexStore.Coalesced,
+    IndexStore.columns("sub" -> IntegerType, "cid" -> IntegerType, "cv" -> ArrayType(DoubleType)))
+  private val AdcCoarse = adcModel("coarse")
+  private val AdcBooks = adcModel("books")
+  private val AdcCodes = IndexStore.Lane("codes",
+    IndexStore.Clustered(Seq("cluster_id"), Seq("vec_id")),
+    IndexStore.columns("vec_id" -> LongType, "codes" -> ArrayType(IntegerType),
+      "cluster_id" -> IntegerType))
+
   /** The IVFADC artifact for [[IndexStore]]'s lifecycle verbs: codes
     * clustered by cluster_id, encoded (subvector width `dsub`) with the
     * FROZEN quantizers read from the generation's own model lanes,
@@ -1268,15 +1279,14 @@ object Similarity {
     * existed). Feeds carrying possible duplicates use the raw-vector
     * sync overload, which resolves revisions before the split; the
     * check is one diff-sized aggregate over the checkpointed upserts. */
-  private val IvfAdc = IndexStore.Family[Int]("vec_id",
-    Seq(IndexStore.Lane("codes",
-      IndexStore.Clustered(Seq("cluster_id"), Seq("vec_id")))),
+  private[graft] val IvfAdc = IndexStore.Family[Int]("vec_id",
+    Seq(AdcCodes),
     derive = (vq64, dsub, root) => {
       val s = vq64.sparkSession
-      Seq(encodeIvfAdc(vq64, s.read.parquet(s"$root/coarse"),
-        s.read.parquet(s"$root/books"), dsub))
+      Seq(encodeIvfAdc(vq64, IndexStore.read(s, root, AdcCoarse),
+        IndexStore.read(s, root, AdcBooks), dsub))
     },
-    carried = Seq("coarse", "books"),
+    carried = Seq(AdcCoarse, AdcBooks),
     check = Some(ups => require(ups.groupBy(col("vec_id"), col("sub")).count()
         .filter(col("count") > 1).isEmpty,
       "syncIvfAdcIndex: same-id duplicate upserts in one batch — the " +
@@ -1332,8 +1342,8 @@ object Similarity {
                           dsub: Int, nprobe: Int, k: Int): DataFrame = {
     import s.implicits._
     val root = IndexStore.currentPath(dir)
-    val coarse = s.read.parquet(s"$root/coarse")
-    val books = s.read.parquet(s"$root/books")
+    val coarse = IndexStore.read(s, root, AdcCoarse)
+    val books = IndexStore.read(s, root, AdcBooks)
     val wp = Window.partitionBy($"q_id").orderBy($"d2".asc, $"cid".asc)
     val probedIds = qVq64
       .select($"vec_id".as("q_id"), $"sv".as("qsv"), $"sub")
@@ -1343,7 +1353,7 @@ object Similarity {
       .filter($"c_rank" <= nprobe)
       .select($"cid").distinct().as[Int].collect().sorted
     val codes = IndexStore.maskTombstonesAt(
-      s.read.parquet(s"$root/codes")
+      IndexStore.read(s, root, AdcCodes)
         .filter($"cluster_id".isin(probedIds.map(Int.box): _*)),
       root, "vec_id") // tombstone masking ([[deleteFromIvfAdcIndex]]); identity when none
     ivfAdcServe(codes, coarse, books, qVq64, dsub, nprobe, k)
@@ -1803,6 +1813,11 @@ object Similarity {
   def writeIvfIndex(vecs: DataFrame, centroids: DataFrame, outDir: String): Unit =
     IndexStore.write(Ivf, vecs, centroids, outDir)
 
+  private val IvfLists = IndexStore.Lane("",
+    IndexStore.Clustered(Seq("cluster_id"), Seq("vec_id")),
+    IndexStore.columns("vec_id" -> LongType, "v" -> ArrayType(DoubleType),
+      "nrm" -> DoubleType, "cluster_id" -> IntegerType))
+
   /** The IVF artifact for [[IndexStore]]'s lifecycle verbs: the lists
     * ARE the generation root, clustered by cluster_id, and fresh rows
     * are assigned to the caller's FROZEN centroids by the one shared
@@ -1810,8 +1825,7 @@ object Similarity {
     * re-trained per batch; re-training is a deliberate offline event
     * that rebuilds. Cost of a fold: one pass over the LISTS (ids +
     * vectors), never the source corpus, plus delta-sized assignment. */
-  private val Ivf = IndexStore.Family[DataFrame]("vec_id",
-    Seq(IndexStore.Lane("", IndexStore.Clustered(Seq("cluster_id"), Seq("vec_id")))),
+  private[graft] val Ivf = IndexStore.Family[DataFrame]("vec_id", Seq(IvfLists),
     derive = (vecs, centroids, _) => Seq(ivfAssigned(vecs, centroids)))
 
   def compactIvfIndex(s: SparkSession, indexDir: String): Unit =
@@ -1881,7 +1895,7 @@ object Similarity {
     val probedIds = probes.select($"probe_cluster").distinct()
       .as[Int].collect().sorted
     val index = IndexStore.maskTombstonesAt(
-      s.read.parquet(root)
+      IndexStore.read(s, root, IvfLists)
         .filter($"cluster_id".isin(probedIds.map(Int.box): _*)),
       root, "vec_id") // plan-identical to pre-deletion when no tombstones
     val w = Window.partitionBy($"q_id").orderBy($"cosine".desc, $"n_id".asc)
@@ -2508,14 +2522,17 @@ object Similarity {
                            dir: String): Unit =
     IndexStore.write(LabeledIvf, vecs, centroids, dir)
 
+  private val LabeledLists = IndexStore.Lane("",
+    IndexStore.Clustered(Seq("label", "cluster_id"), Seq("vec_id")),
+    IndexStore.columns("vec_id" -> LongType, "v" -> ArrayType(DoubleType),
+      "nrm" -> DoubleType, "label" -> IntegerType, "cluster_id" -> IntegerType))
+
   /** The labeled layout for [[IndexStore]]'s lifecycle verbs: [[Ivf]]
     * on the two-level (label, cluster_id) key. A re-crawled doc can
     * change its LABEL as well as its vector; a fold replaces the whole
     * row, so both move together atomically — and the revision pick
     * ([[IndexStore.latestRevision]]) takes whole rows too. */
-  private val LabeledIvf = IndexStore.Family[DataFrame]("vec_id",
-    Seq(IndexStore.Lane("",
-      IndexStore.Clustered(Seq("label", "cluster_id"), Seq("vec_id")))),
+  private[graft] val LabeledIvf = IndexStore.Family[DataFrame]("vec_id", Seq(LabeledLists),
     derive = (vecs, centroids, _) => Seq(labeledIvfAssigned(vecs, centroids)))
 
   def updateInLabeledIvfIndex(changed0: DataFrame, centroids: DataFrame,
@@ -2550,7 +2567,7 @@ object Similarity {
     // generation resolved ONCE; subtree + tombstones read through it
     val root = IndexStore.currentPath(dir)
     val index = IndexStore.maskTombstonesAt(
-      s.read.parquet(root)
+      IndexStore.read(s, root, LabeledLists)
         .filter($"label".isin(qLabels.map(Int.box): _*)),
       root, "vec_id") // tombstone masking ([[deleteFromLabeledIvfIndex]]); identity when none
     val w = Window.partitionBy($"q_id").orderBy($"cosine".desc, $"n_id".asc)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 import graft.Tables._
 import graft.Det._
@@ -1201,11 +1202,12 @@ object TextAnalysis {
         bm25Bucket($"token").as("bucket"))
   }
 
-  private val Bm25StatsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_docs",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("sum_dl",
-      org.apache.spark.sql.types.LongType)))
+  private val Bm25Postings = IndexStore.Lane("postings",
+    IndexStore.Clustered(Seq("bucket"), Seq("token", "doc_id")),
+    IndexStore.columns("token" -> StringType, "doc_id" -> LongType, "tf" -> LongType,
+      "dl" -> LongType, "bucket" -> IntegerType))
+  private val Bm25Stats = IndexStore.Lane("stats", IndexStore.Coalesced,
+    IndexStore.columns("n_docs" -> LongType, "sum_dl" -> LongType))
 
   /** One (n_docs, sum_dl) PARTIAL row for a doc frame — readers sum the
     * partials, so appends and deletes contribute rows instead of
@@ -1270,15 +1272,14 @@ object TextAnalysis {
     * a crash between the two can only leave avgdl counting masked docs
     * (a bounded, serve-safe drift the next fold heals), never
     * un-masked dead docs. */
-  private val Bm25 = IndexStore.Family[Unit]("doc_id",
-    Seq(IndexStore.Lane("postings",
-      IndexStore.Clustered(Seq("bucket"), Seq("token", "doc_id")))),
+  private[graft] val Bm25 = IndexStore.Family[Unit]("doc_id",
+    Seq(Bm25Postings),
     derive = (docs, _, _) => Seq(bm25Postings(docs)),
-    derived = Some(IndexStore.Derived("stats",
+    derived = Some(IndexStore.Derived(Bm25Stats,
       partial = (docs, _) => bm25StatsPartial(docs),
-      fold = (s, _, dst, _, _) => bm25StatsOf(s.read.parquet(s"$dst/postings")),
+      fold = (s, _, dst, _, _) => bm25StatsOf(IndexStore.read(s, dst, Bm25Postings)),
       deleted = Some((root, newDead) =>
-        bm25StatsOf(newDead.sparkSession.read.parquet(s"$root/postings")
+        bm25StatsOf(IndexStore.read(newDead.sparkSession, root, Bm25Postings)
             .join(broadcast(newDead), Seq("doc_id"), "left_semi"))
           .select((-col("n_docs")).as("n_docs"), (-col("sum_dl")).as("sum_dl"))))))
 
@@ -1325,12 +1326,13 @@ object TextAnalysis {
     val buckets = qt.select(bm25Bucket($"token").as("b")).distinct()
       .as[Int].collect().sorted
     val posts = IndexStore.maskTombstonesAt(
-      s.read.parquet(s"$root/postings")
+      IndexStore.read(s, root, Bm25Postings)
         .filter($"bucket".isin(buckets.map(Int.box): _*)),
       root, "doc_id") // identity when no deletion was ever recorded
-    val stats = s.read.schema(Bm25StatsSchema).parquet(s"$root/stats")
+    val stats = IndexStore.read(s, root, Bm25Stats)
       .agg(sum($"n_docs").as("n_docs"), sum($"sum_dl").as("sum_dl"))
-      .select($"n_docs", ($"sum_dl".cast("double") / $"n_docs").as("avgdl"))
+      // null over an empty index, as avg is: no posting scores then
+      .select($"n_docs", when($"n_docs" > 0, $"sum_dl".cast("double") / $"n_docs").as("avgdl"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"q_id").orderBy($"score".desc, $"doc_id".asc)
     val dfw = org.apache.spark.sql.expressions.Window
